@@ -1,13 +1,41 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every catalog query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Results are forced through the `noop` sink — a
   * bare count() would let Catalyst prune most of each plan and time
-  * nothing.
+  * nothing. A query that throws is reported as failed, never as a time:
+  * it is listed in the contract line, left out of the total, and the run
+  * exits non-zero.
   */
 object Bench {
+
+  /** One timed run of `fn` on `dir`: Some(seconds), or None when it threw. */
+  private[graft] def once(spark: SparkSession, name: String,
+      fn: (SparkSession, String) => DataFrame, dir: String): Option[Double] = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, dir).write.format("noop").mode("overwrite").save()
+      Some((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      None
+    } finally graft.ops.Caches.releaseAll()
+  }
+
+  /** One sweep's outcome: the timed queries in run order and the failed
+    * ones. The total covers timed queries only.
+    */
+  private[graft] final case class Sweep(times: Seq[(String, Double)], failed: Seq[String]) {
+    def total: Double = times.map(_._2).sum
+  }
+
+  private[graft] object Sweep {
+    def of(runs: Seq[(String, Option[Double])]): Sweep =
+      Sweep(runs.collect { case (n, Some(sec)) => n -> sec },
+        runs.collect { case (n, None) => n })
+  }
 
   /** Per-query times from a recorded bench_full.json. */
   private[graft] def parseTimes(raw: String): Map[String, Double] =
@@ -97,15 +125,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-             dir: String = sfDir): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, dir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      } finally graft.ops.Caches.releaseAll()
-      (System.nanoTime() - t0) / 1e9
-    }
     // Two passes per query, keep the second: the first run of the first
     // query otherwise absorbs all JVM/codegen/first-scan warm-up (round-1
     // artifact: q01 reported 23.4 s of which ~21 s was warm-up).
@@ -180,24 +199,13 @@ object Bench {
       // a ratio (a broken build would drag the median down and mask a
       // slow window) — failed canaries are dropped, and too few survivors
       // refuse the sweep outright
-      def timedOk(name: String,
-          fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          System.err.println(s"[preflight] $name FAILED (excluded): ${e.getMessage}")
-          None
-        } finally graft.ops.Caches.releaseAll()
-      }
       val gated = PreflightCanaries.filter(n =>
         SparkEntry.queries.contains(n) && series.get(n).exists(_.nonEmpty))
       val ratios = gated.flatMap { n =>
         val fn = SparkEntry.queries(n)
         for {
-          _ <- timedOk(n, fn) // warm-up, untimed
-          sec <- timedOk(n, fn)
+          _ <- once(spark, n, fn, sfDir) // warm-up, untimed
+          sec <- once(spark, n, fn, sfDir)
         } yield {
           val med = medianOf(series(n))
           System.err.println(f"[preflight] $n%-28s ${sec}%7.3f s vs " +
@@ -229,7 +237,7 @@ object Bench {
           f"$medRatio%.3f ≤ 1.2) — sweeping")
       }
     }
-    ordered.foreach { case (name, fn) => once(name, fn) }
+    ordered.foreach { case (name, fn) => once(spark, name, fn, sfDir) }
     // One short line per query AS IT COMPLETES, then a compact total with
     // no embedded map: a finite stdout tail capture keeps the final lines
     // intact (the old single giant JSON line was clipped mid-line two
@@ -238,14 +246,14 @@ object Bench {
     // Locale.ROOT: f"...%.3f" uses the JVM default locale, which renders a
     // comma decimal separator on e.g. de_DE — invalid JSON
     def s3(d: Double): String = String.format(java.util.Locale.ROOT, "%.3f", d)
-    def sweep(pass: Int): Seq[(String, Double)] = ordered.map { case (name, fn) =>
-      val sec = once(name, fn)
-      println(s"""{"q":"$name","sec":${s3(sec)},"sweep":$pass}""")
+    def sweep(pass: Int): Sweep = Sweep.of(ordered.map { case (name, fn) =>
+      val sec = once(spark, name, fn, sfDir)
+      println(sec.fold(s"""{"q":"$name","failed":true,"sweep":$pass}""")(
+        t => s"""{"q":"$name","sec":${s3(t)},"sweep":$pass}"""))
       name -> sec
-    }
+    })
     val loadStart = loadavg()
-    val firstResults = sweep(1)
-    val firstTotal = firstResults.map(_._2).sum
+    val first = sweep(1)
     // ── whole-sweep total adjudication: same-day same-HEAD totals swing
     // ±8% on this machine with no code change (r12: four sweeps 194.0 /
     // 219.2 / 195.7 / 206.8 s), and a recorded slow tail once cost a clean
@@ -255,16 +263,24 @@ object Bench {
     // the whole sweep once (warm, same process) and record the faster pair
     // member; BOTH totals are retained under "sweeps" so the noise stays
     // visible.
-    val (results, sweepTotals) =
-      if (totalDeviates(prevTimes, prevTotal, firstResults, only.isDefined)) {
+    val (chosen, sweepTotals) =
+      if (totalDeviates(prevTimes, prevTotal, first.times, only.isDefined)) {
         System.err.println(f"[bench] common-set total deviates >5%% from " +
           "the recorded baseline — rerunning the sweep once")
         val second = sweep(2)
-        val secondTotal = second.map(_._2).sum
-        val chosen = if (secondTotal < firstTotal) second else firstResults
-        (chosen, Seq(firstTotal, secondTotal))
-      } else (firstResults, Seq(firstTotal))
-    val total = results.map(_._2).sum
+        (if (second.total < first.total) second else first,
+          Seq(first.total, second.total))
+      } else (first, Seq(first.total))
+    val results = chosen.times
+    val total = chosen.total
+    // failures of the chosen sweep, plus any rerun or scale-canary run
+    // below that throws
+    val failed = scala.collection.mutable.LinkedHashSet(chosen.failed: _*)
+    def timed(n: String, dir: String): Option[Double] = {
+      val sec = once(spark, n, SparkEntry.queries(n), dir)
+      if (sec.isEmpty) failed += n
+      sec
+    }
     if (prevTimes.nonEmpty && prevTimes.size < results.size)
       System.err.println(s"[bench] spike baseline covers only " +
         s"${prevTimes.size}/${results.size} queries — new entries have no " +
@@ -301,9 +317,9 @@ object Bench {
       }
       if (spikes.isEmpty) ""
       else spikes.map { case (n, sec) =>
-        val again = once(n, SparkEntry.queries(n))
-        println(s"""{"q":"$n","spike_sec":${s3(sec)},"rerun_sec":${s3(again)},"prev_sec":${s3(prevTimes(n))}}""")
-        "\"" + n + s"""":{"sweep":${s3(sec)},"rerun":${s3(again)},"prev":${
+        val again = timed(n, sfDir).fold("null")(s3)
+        println(s"""{"q":"$n","spike_sec":${s3(sec)},"rerun_sec":$again,"prev_sec":${s3(prevTimes(n))}}""")
+        "\"" + n + s"""":{"sweep":${s3(sec)},"rerun":$again,"prev":${
           s3(prevTimes(n))}}"""
       }.mkString(""","rerun":{""", ",", "}")
     }
@@ -325,24 +341,24 @@ object Bench {
       if (only.isDefined || smallDir == sfDir ||
           !java.nio.file.Files.isDirectory(java.nio.file.Paths.get(smallDir))) ""
       else {
-        val spot = canaryQs.flatMap(n => SparkEntry.queries.get(n).map { fn =>
+        val spot = canaryQs.filter(SparkEntry.queries.contains).flatMap { n =>
           // untimed warm-up at the small SF first: the big side is already
           // warm from the sweep, and a cold 'small' denominator would
           // shrink the ratio — masking exactly what the canary looks for
-          once(n, fn, smallDir)
-          val a = once(n, fn, smallDir)
-          val b = once(n, fn, sfDir)
-          "\"" + n + s"""":{"small":${s3(a)},"big":${s3(b)},"ratio":${
-            s3(b / math.max(a, 1e-9))}}"""
-        })
+          timed(n, smallDir)
+          for (a <- timed(n, smallDir); b <- timed(n, sfDir)) yield
+            "\"" + n + s"""":{"small":${s3(a)},"big":${s3(b)},"ratio":${
+              s3(b / math.max(a, 1e-9))}}"""
+        }
         spot.mkString(s""","sf_spot_small":"$smallDir","sf_spot":{""", ",", "}")
       }
     // end-load sampled HERE — after the spike reruns and the sf_spot canary
     // battery have executed — so the recorded load window brackets every
     // measurement the artifact reports, not just the main sweeps
     val loadJson = s""","loadavg":{"start":$loadStart,"end":${loadavg()}}"""
+    val failedJson = failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
     val full =
-      s"""{"metric":"total","value":${s3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"$sweepsJson$loadJson$anchorJson$rerunJson$spotJson}"""
+      s"""{"metric":"total","value":${s3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"$failedJson$sweepsJson$loadJson$anchorJson$rerunJson$spotJson}"""
     // The machine-readable contract line — total + the complete per-query
     // map — printed FIRST, strictly one physical line. The driver's tail
     // capture is finite (~2,000 chars), so a second, bounded summary line
@@ -375,7 +391,7 @@ object Bench {
       val line = s"""{"head":"$head","ts_ms":${System.currentTimeMillis()},""" +
         s""""sf":"$sfDir","total":${s3(total)},""" +
         s""""sweeps":[${sweepTotals.map(s3).mkString(",")}]""" +
-        s"""$loadJson,"queries":$qs}""" + "\n"
+        s"""$loadJson$failedJson,"queries":$qs}""" + "\n"
       java.nio.file.Files.write(
         java.nio.file.Paths.get(repoRoot, "bench_history.jsonl"),
         line.getBytes("UTF-8"),
@@ -388,7 +404,11 @@ object Bench {
     // are in the contract line above and in bench_full.json): worst case
     // ~450 chars, so the whole line always survives a 2,000-char stdout
     // tail capture intact and parses as one JSON object.
-    println(s"""{"metric":"total","value":${s3(total)},"unit":"sec","n":${results.size},"sf":"$sfDir","detail":"$outName"$sweepsJson$loadJson$anchorJson}""")
+    println(s"""{"metric":"total","value":${s3(total)},"unit":"sec","n":${results.size},"n_failed":${failed.size},"sf":"$sfDir","detail":"$outName"$sweepsJson$loadJson$anchorJson}""")
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -2,7 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare
+  * (tools/check_oracle.py). Exits non-zero when any entry fails. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -22,11 +23,13 @@ object Verify {
     // targeted iteration — same knob as Bench
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     def selected(name: String) = SparkEntry.selected(only, name)
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = SparkEntry.queries.filter(kv => selected(kv._1)).toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       } finally graft.ops.Caches.releaseAll()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -45,5 +48,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -2,10 +2,11 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.io.Sources
-import graft.lake.LakeTable
+import graft.lake.{GraftSql, VersionedTable}
 import graft.model.Schemas
 import graft.quality.{Rule, Validator}
 
@@ -34,13 +35,18 @@ object Pipeline {
     * Returns (validated-and-deduplicated data, metrics) — the valid output
     * feeds child FK validation, exactly like the reference passes
     * `process_dataset`'s return as the parent key set (script.py:240,246,254-257).
+    * Both sinks are logged tables, so each write is one atomic commit. The
+    * rejected sink has no natural key: each rejected row gets a synthetic
+    * `_rid` (a per-call unique prefix + `monotonically_increasing_id`),
+    * computed over the persisted validated frame so every job the append
+    * runs sees the same ids, and rejects from repeated runs accumulate.
     */
   def processDataset(
       raw: DataFrame,
       rules: DataFrame => (DataFrame, Seq[Rule]),
       pk: Seq[String],
-      table: LakeTable,
-      rejectedTable: LakeTable,
+      table: VersionedTable,
+      rejectedTable: VersionedTable,
       name: String,
       frozenClock: Option[java.time.Instant] = None): (DataFrame, DatasetMetrics) = {
     val (marked, ruleSeq) = rules(raw)
@@ -57,7 +63,11 @@ object Pipeline {
       val total = m.getLong(0)
       val rejectedCount = m.getLong(1)
       val validCount = total - rejectedCount
-      if (rejectedCount > 0) rejectedTable.append(rejected)
+      if (rejectedCount > 0) {
+        val prefix = java.util.UUID.randomUUID().toString + "-"
+        rejectedTable.append(rejected.withColumn(RejectId,
+          concat(lit(prefix), monotonically_increasing_id().cast("string"))))
+      }
       // Reference dedups only the VALID side (script.py:177-196) with an
       // arbitrary survivor; arbitrary matches Delta-merge parity here.
       val deduped = Dedup.arbitrary(valid, pk)
@@ -65,6 +75,26 @@ object Pipeline {
       (table.read, DatasetMetrics(name, total, validCount, rejectedCount))
     } finally validated.unpersist()
   }
+
+  /** Synthetic primary key column [[processDataset]] gives rejected rows:
+    * a rejected sink is a table keyed on it.
+    */
+  val RejectId = "_rid"
+
+  /** One dataset's outputs in [[run]]'s lake layout: its silver table and
+    * its rejected sink (script.py:134-149,199).
+    */
+  private final case class Output(dataset: String, pk: Seq[String],
+                                  parts: Seq[String], rejectedParts: Seq[String]) {
+    def silver(spark: SparkSession, lakeDir: String): VersionedTable =
+      VersionedTable(spark, s"$lakeDir/silver_layer/$dataset", pk, parts)
+    def rejected(spark: SparkSession, lakeDir: String): VersionedTable =
+      VersionedTable(spark, s"$lakeDir/rejected/$dataset", Seq(RejectId), rejectedParts)
+  }
+
+  private val Products = Output("products", Seq("product_id"), Seq("department"), Nil)
+  private val Orders = Output("orders", Seq("order_id"), Seq("date"), Seq("date"))
+  private val OrderItems = Output("order_items", Seq("id"), Seq("date"), Seq("date"))
 
   /** Full three-dataset run from bronze CSVs into a lake directory. */
   def run(
@@ -74,38 +104,25 @@ object Pipeline {
       orderItemsCsv: String,
       lakeDir: String): Result = {
 
-    def lake(n: String, pk: Seq[String], parts: Seq[String]) =
-      LakeTable(spark, s"$lakeDir/silver_layer/$n", pk, parts)
-    def rej(n: String, parts: Seq[String]) =
-      LakeTable(spark, s"$lakeDir/rejected/$n", Nil, parts)
+    def process(out: Output, csv: String, schema: StructType,
+                rules: DataFrame => (DataFrame, Seq[Rule])) =
+      processDataset(Sources.csvWithSchema(spark, csv, schema), rules, out.pk,
+        out.silver(spark, lakeDir), out.rejected(spark, lakeDir), out.dataset)
 
-    // products: PK product_id, partitioned by department (script.py:143-149,199)
-    val (productsOut, pm) = processDataset(
-      Sources.csvWithSchema(spark, productsCsv, Schemas.products),
+    val (productsOut, pm) = process(Products, productsCsv, Schemas.products,
       df => (df, Seq(
         Rule.notNull("product_id", "Null product_id primary key"),
-        Rule.notNull("product_name", "Null product name"))),
-      Seq("product_id"),
-      lake("products", Seq("product_id"), Seq("department")),
-      rej("products", Nil),
-      "products")
+        Rule.notNull("product_name", "Null product name"))))
 
-    // orders: PK order_id, partitioned by date (script.py:134-141)
-    val (ordersOut, om) = processDataset(
-      Sources.csvWithSchema(spark, ordersCsv, Schemas.orders),
+    val (ordersOut, om) = process(Orders, ordersCsv, Schemas.orders,
       df => (df, Seq(
         Rule.notNull("order_id", "Null order_id primary key"),
         Rule.notNull("order_timestamp", "Invalid timestamp"),
-        Rule.positive("total_amount", "Non-positive total amount"))),
-      Seq("order_id"),
-      lake("orders", Seq("order_id"), Seq("date")),
-      rej("orders", Seq("date")),
-      "orders")
+        Rule.positive("total_amount", "Non-positive total amount"))))
 
-    // order_items: PK id, FKs against the two validated parents
-    // (script.py:102-132); rule order = reference's first-error-wins chain.
-    val (_, im) = processDataset(
-      Sources.csvWithSchema(spark, orderItemsCsv, Schemas.orderItems),
+    // order_items: FKs against the two validated parents (script.py:102-132);
+    // rule order = reference's first-error-wins chain.
+    val (_, im) = process(OrderItems, orderItemsCsv, Schemas.orderItems,
       df => {
         val (m1, fkOrders) = Validator.fkRule(
           df, "order_id", ordersOut, "order_id", "Invalid order_id reference")
@@ -118,11 +135,7 @@ object Pipeline {
           Rule.notNull("order_timestamp", "Invalid timestamp"),
           fkOrders,
           fkProducts))
-      },
-      Seq("id"),
-      lake("order_items", Seq("id"), Seq("date")),
-      rej("order_items", Seq("date")),
-      "order_items")
+      })
 
     Result(pm, om, im)
   }
@@ -185,41 +198,26 @@ object Pipeline {
     * StartCrawler step (/root/reference/code/step_function_code.json:27-63)
     * auto-registers every pipeline output in the Glue catalog so Athena's
     * validation queries can run as plain SQL. The engine-side equivalent:
-    * each output directory [[run]] produced is exposed through the SAME
-    * CREATE TABLE … USING parquet LOCATION path a user registers any
-    * directory with (SURVEY §2.1 S9), partitioned layouts recovered via
-    * MSCK REPAIR (the crawler's partition discovery). Outputs that do not
-    * exist — a dataset with zero rejects never creates its rejected dir —
-    * are skipped, exactly as a crawler only registers prefixes that exist.
-    * Returns the registered table names.
+    * each table [[run]] produced is registered through [[GraftSql.register]],
+    * so its name reads the table's CURRENT version (a plain parquet
+    * registration of the directory would also read superseded versions).
+    * Outputs that do not exist — a dataset with zero rejects never creates
+    * its rejected table — are skipped, exactly as a crawler only registers
+    * prefixes that exist. Returns the registered table names.
     */
   def registerOutputs(
       spark: SparkSession, lakeDir: String, prefix: String): Seq[String] = {
-    // the prefix is spliced into table identifiers and the lake path into
-    // a LOCATION string literal: refuse anything that would break out of
-    // (or inject into) the generated SQL
+    // the prefix is spliced into table identifiers: refuse anything that
+    // would break out of (or inject into) SQL that names them
     require(prefix.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"registerOutputs prefix must be a bare SQL identifier; got '$prefix'")
-    require(!lakeDir.contains("'"),
-      s"registerOutputs lakeDir must not contain single quotes; got '$lakeDir'")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val outs = Seq(
-      ("silver_layer/products", true), ("silver_layer/orders", true),
-      ("silver_layer/order_items", true), ("rejected/products", false),
-      ("rejected/orders", true), ("rejected/order_items", true))
-    outs.flatMap { case (rel, partitioned) =>
-      val path = s"$lakeDir/$rel"
-      val p = new org.apache.hadoop.fs.Path(path)
-      // per-path filesystem: the lake may live off the default scheme
-      if (!p.getFileSystem(conf).exists(p)) None
-      else {
-        val name = prefix + "_" + rel
-          .replace("silver_layer/", "silver_").replace("rejected/", "rejected_")
-        spark.sql(s"DROP TABLE IF EXISTS $name")
-        spark.sql(s"CREATE TABLE $name USING parquet LOCATION '$path'")
-        if (partitioned) spark.sql(s"MSCK REPAIR TABLE $name")
-        Some(name)
-      }
+    val outs = Seq(Products, Orders, OrderItems)
+    val named =
+      outs.map(o => s"${prefix}_silver_${o.dataset}" -> o.silver(spark, lakeDir)) ++
+        outs.map(o => s"${prefix}_rejected_${o.dataset}" -> o.rejected(spark, lakeDir))
+    named.collect { case (name, t) if t.exists =>
+      GraftSql.register(spark, name, t)
+      name
     }
   }
 }

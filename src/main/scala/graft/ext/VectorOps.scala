@@ -67,12 +67,6 @@ object VectorOps {
   private def qdotSql(a: String, b: String): String =
     s"CAST(list_sum(list_transform(range(1, len($a) + 1), i -> ${qintSql(s"$a[i]")} * ${qintSql(s"$b[i]")})) AS BIGINT)"
 
-  /** cos(a,b) on quantized ints — bit-identical across engines. Uses the
-    * codegen'd native QuantizedDot expression (graft.expr) rather than the
-    * boxed higher-order-function formulation; register per session first.
-    */
-  private def qd(a: Column, b: Column): Column =
-    call_function(graft.expr.GraftFunctions.QDotName, a, b)
   /** Fused single-pass quantized cosine (graft.expr.QuantizedCos) —
     * bit-identical to the former three-qdot composition, one array walk
     * instead of three per evaluated pair (the ANN crossJoin inner loop).
@@ -179,8 +173,6 @@ object VectorOps {
     */
   private[graft] def trainedCentroids(
       e: DataFrame, c: Int = IvfCentroids, rounds: Int = 3): DataFrame = {
-    val sp = e.sparkSession
-    import sp.implicits._
     def image(cs: Seq[(Long, Seq[Double])]): Map[Long, Seq[Long]] =
       cs.map { case (id, ce) =>
         id -> ce.map(v => math.floor(v * 1000.0 + 0.5).toLong) }.toMap
@@ -271,7 +263,7 @@ object VectorOps {
     * `cents`: emits asn_/qp_/ap_<tag>; ap_<tag> is (q_id, vec_id) of the
     * approximate top-5.
     */
-  private def ivfApSql(cents: String, tag: String, probes: Int = 2): String =
+  private def ivfApSql(cents: String, tag: String, probes: Int): String =
     s"""asn_$tag AS (SELECT vec_id, embedding, c_id AS cell FROM (
        |    SELECT e.vec_id, e.embedding, c.c_id,
        |      row_number() OVER (PARTITION BY e.vec_id
@@ -362,16 +354,12 @@ object VectorOps {
       .orderBy("q_id")
   }
 
-  /** The same per-subspace distance table over ALREADY-quantized integer
-    * arrays (residual vectors, q231) — no qint inside, plain integer L2.
-    */
-  private def iSq(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, v) => acc + v)
-  /** Fused sliced integer L2 (graft.expr.QuantizedSliceL2) — bit-identical
-    * to `iSq(slice(a, aStart, len), slice(b, bStart, len))` without the
-    * per-pair slice/zip allocations and boxed lambda dispatch. The PQ
-    * encode/ADC crossJoins evaluate this O(N·M·K) times.
+  /** Fused sliced integer L2 (graft.expr.QuantizedSliceL2) over
+    * ALREADY-quantized integer arrays (residual vectors, q231): Σ over
+    * 0 ≤ i < len of (a[aStart+i] − b[bStart+i])², 1-based starts, no qint
+    * inside — one native pass with no per-pair slice/zip allocations or
+    * boxed lambda dispatch. The PQ encode/ADC crossJoins evaluate this
+    * O(N·M·K) times.
     */
   private def iSqOff(a: Column, aStart: Column, b: Column, bStart: Column,
       len: Int): Column =

@@ -1981,7 +1981,7 @@ object GraftSql {
     */
   private def dispatchClauses(spark: SparkSession, t: VersionedTable,
                               m: MergeIntoTable, src: DataFrame,
-                              evolve: Boolean = false): Unit = {
+                              evolve: Boolean): Unit = {
     val tA = aliasOf(m.targetTable,
       m.targetTable.collectFirst {
         case r: UnresolvedRelation => r.multipartIdentifier.last

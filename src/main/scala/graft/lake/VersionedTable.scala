@@ -24,16 +24,13 @@ import org.apache.spark.sql.functions._
   * loses the race fails fast and deletes its staging (readers never see
   * it). Time travel = replaying adds/removes up to version v.
   *
-  * vs [[LakeTable]]: LakeTable is the swap-based latest-only variant
-  * (lower storage, no history); this trades storage for versioned reads +
-  * an auditable [[history]], with [[vacuum]] bounding the trade. PKs are
-  * partition-stable here (LakeTable's default contract; LakeTable's
-  * opt-in moved-row semi-join discovery would compose unchanged).
+  * Versioned reads and an auditable [[history]] cost storage, and
+  * [[vacuum]] bounds that cost.
   *
   * Scale posture: a merge stages ONLY the touched partitions (static
-  * partition predicates prune the current-version scan, as in LakeTable),
-  * the log holds directory names (bounded by commits × partitions, never
-  * rows), and version replay is driver-side string work.
+  * partition predicates prune the current-version scan), the log holds
+  * directory names (bounded by commits × partitions, never rows), and
+  * version replay is driver-side string work.
   */
 /** A write batch (or the existing table, at ADD CONSTRAINT time) broke a
   * CHECK constraint; the commit was refused and nothing changed.
@@ -1956,7 +1953,7 @@ final case class VersionedTable(
     * at v" (pre-tombstone, like every dir-granular view).
     */
   def partitionPathsAt(v: Int): Seq[String] = {
-    require(partitionCols.nonEmpty, "partitionPaths on an unpartitioned table")
+    require(partitionCols.nonEmpty, "partitionPathsAt on an unpartitioned table")
     liveDirs(v).map(partOf).distinct.sorted
   }
 
@@ -2570,7 +2567,7 @@ final case class VersionedTable(
       cluster: Boolean = true): (Path, Seq[String]) = {
     val rootName = s"${vname(next)}_${java.util.UUID.randomUUID().toString.take(8)}"
     val root = new Path(s"$dataDir/$rootName")
-    // optimized write (Delta's optimizeWrite, same as LakeTable.writeTo):
+    // optimized write (Delta's optimizeWrite):
     // hash-cluster on the partition key BEFORE partitionBy so each
     // partition value lands in ONE task and writes ONE file — a raw
     // partitionBy over N shuffle partitions otherwise fans every dir into
@@ -2825,8 +2822,9 @@ final case class VersionedTable(
       // silently per dir instead of failing the whole footer pass over to
       // the scan fallback — their lines are purely the collision-prune
       // optimization, never a coverage contract
-      val poisoned = scala.collection.mutable.HashSet.empty[String]
       val lines = rel.map { d =>
+        // per dir: a column skipped in one dir still gets stats in another
+        val poisoned = scala.collection.mutable.HashSet.empty[String]
         // partition columns: one value per leaf dir, straight from the path
         val segs = d.split("/").drop(1).flatMap(_.split("=", 2) match {
           case Array(k, v) => Some(k -> v)
@@ -3664,7 +3662,7 @@ final case class VersionedTable(
     fresh.length
   }
 
-  /** Upsert on PK equality (anti-join ∪ updates, LakeTable's algebra);
+  /** Upsert on PK equality (target anti-join updates, ∪ updates);
     * creates the table if absent. Only the partitions TOUCHED by the batch
     * are read (static partition predicates) and restaged; untouched dirs
     * stay live from their original version.
@@ -3705,7 +3703,7 @@ final case class VersionedTable(
         updates0raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else updates0raw
     try {
-    var next = currentVersion + 1
+    val next = currentVersion + 1
     val current = read
     // the touched-partition set drives both the restage and (when change
     // recording is on) the change-image join (identity columns cannot be
@@ -5207,9 +5205,8 @@ final case class VersionedTable(
       .map(r => new Path(s"$dataDir/$r"))
     val mixedLeaves = mixedRootLeaves.map(d => new Path(s"$dataDir/$d"))
     // orphan staging roots from writers that crashed between stage() and
-    // commit() appear in NO log entry — reclaim them too (like
-    // LakeTable.vacuum's crashed-merge cleanup, only run with no writer
-    // in flight)
+    // commit() appear in NO log entry — reclaim them too (only run with
+    // no writer in flight)
     val committedRoots = allAdds.map(_.split("/")(0)).toSet
     val dataRoot = new Path(dataDir)
     val orphanRoots =

@@ -1,14 +1,12 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.etl.{Pipeline, Scd2}
 import graft.io.Sources
-import graft.lake.{ConstraintViolationException, GraftSql, LakeTable, VersionedTable}
+import graft.lake.{ConstraintViolationException, GraftSql, VersionedTable}
 import graft.quality.{Rule, Validator}
 
 import Exprs._
@@ -262,17 +260,17 @@ object Coverage {
 
     // ── §3.1 end-to-end: bronze CSV → cast → validate → split → rejected
     //    sink → dedup → MERGE into a partitioned silver table → read back.
-    //    Exercises the LakeTable FILE path (S3-S6) + metrics (A3). ──
+    //    Exercises the logged table's commit path (S3-S6) + metrics (A3). ──
     Q("q28_pipeline_silver",
       (s, d) => {
         val work = writeDirtyCsv(s, d)
         val raw = Sources.csvWithSchema(s, s"$work/bronze", dirtySchema)
-        val (_, _) = Pipeline.processDataset(
+        val (silver, _) = Pipeline.processDataset(
           raw, df => (df, ordersRules), Seq("order_id"),
-          LakeTable(s, s"$work/silver/orders", Seq("order_id"), Seq("ym")),
-          LakeTable(s, s"$work/rejected/orders", Nil, Seq("ym")),
+          VersionedTable(s, s"$work/silver/orders", Seq("order_id"), Seq("ym")),
+          VersionedTable(s, s"$work/rejected/orders", Seq(Pipeline.RejectId), Seq("ym")),
           "orders")
-        s.read.parquet(s"$work/silver/orders")
+        silver
           .select("src_key", "order_id", "user_id", "total_amount", "date")
           .orderBy("src_key")
       },
@@ -553,19 +551,21 @@ object Coverage {
         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")),
 
     // ── §3.1 end-to-end, rejected side: audit columns + partitioned append
-    //    sink (P11, S4) through the file path ──
+    //    sink (P11, S4) through the logged table ──
     Q("q29_pipeline_rejected",
       (s, d) => {
         val work = writeDirtyCsv(s, d)
         val raw = Sources.csvWithSchema(s, s"$work/bronze", dirtySchema)
+        val rejected =
+          VersionedTable(s, s"$work/rejected/orders", Seq(Pipeline.RejectId), Seq("ym"))
         val (_, m) = Pipeline.processDataset(
           raw, df => (df, ordersRules), Seq("order_id"),
-          LakeTable(s, s"$work/silver/orders", Seq("order_id"), Seq("ym")),
-          LakeTable(s, s"$work/rejected/orders", Nil, Seq("ym")),
+          VersionedTable(s, s"$work/silver/orders", Seq("order_id"), Seq("ym")),
+          rejected,
           "orders",
           frozenClock = Some(java.time.Instant.parse("2026-01-01T00:00:00Z")))
         assert(m.total == m.valid + m.rejected) // A3 metric consistency
-        s.read.parquet(s"$work/rejected/orders")
+        rejected.read
           .select("src_key", "validation_errors", "rejection_time", "source")
           .orderBy("src_key")
       },

@@ -5,10 +5,9 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.io.Sources
-import graft.lake.LakeTable
 
 /** Structured-Streaming facade over the lake: watch a bronze directory,
-  * upsert every discovered file batch into a LakeTable.
+  * upsert every discovered file batch through a caller-supplied sink.
   *
   * This is the Spark-native re-expression of the reference's event-driven
   * ingestion — S3 ObjectCreated → Lambda → Step Function → Glue job
@@ -17,26 +16,17 @@ import graft.lake.LakeTable
   * replaces the Step Function's exactly-once bookkeeping.
   *
   * 100 TB posture: the file source scales by listing, each micro-batch
-  * merge rewrites only touched partitions (LakeTable), and checkpointed
-  * offsets make re-runs incremental — a crashed ingest resumes, never
-  * reprocesses.
+  * `VersionedTable.merge` restages only touched partitions as one atomic
+  * log commit, and checkpointed offsets make re-runs incremental — a
+  * crashed ingest resumes, never reprocesses.
   */
 object StreamIngest {
 
   /** CSVs land as all-string columns (reference parity: header, no
-    * inferSchema) and are cast-enforced per batch before the merge.
-    */
-  def ingestAvailable(
-      spark: SparkSession,
-      srcDir: String,
-      schema: StructType,
-      target: LakeTable,
-      checkpoint: String): Unit =
-    ingestAvailable(spark, srcDir, schema, target.merge(_), checkpoint)
-
-  /** Sink-agnostic variant: any upsert function — LakeTable.merge,
-    * VersionedTable.merge (each micro-batch becomes one atomic log
-    * commit → streaming CDC with time travel), or a custom writer.
+    * inferSchema) and are cast-enforced per batch before `mergeFn` — any
+    * upsert function: `VersionedTable.merge` (each micro-batch becomes one
+    * atomic log commit → streaming CDC with time travel), or a custom
+    * writer.
     */
   def ingestAvailable(
       spark: SparkSession,

@@ -1,12 +1,11 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import graft.lake.LakeTable
 import graft.ops.{Exprs, Q, WorkDirs}
 import Exprs._
 
@@ -69,14 +68,14 @@ object StreamOps {
       (s, d) => {
         val work = WorkDirs.workDir("graft_stream")
         val bronze = s"$work/bronze"
-        val table = LakeTable(s, s"$work/table", Seq("o_orderkey"))
+        val table = graft.lake.VersionedTable(s, s"$work/table", Seq("o_orderkey"))
 
         // drop 1: every 5th order at its base price
         t(s, d, "orders").filter(col("o_orderkey") % 5 === 0)
           .select(col("o_orderkey"), col("o_totalprice").as("price"))
           .coalesce(1).write.mode("overwrite").option("header", "true").csv(s"$work/f1")
         dropFile(s"$work/f1", bronze, "batch1.csv")
-        StreamIngest.ingestAvailable(s, bronze, schema, table, s"$work/ckpt")
+        StreamIngest.ingestAvailable(s, bronze, schema, table.merge(_), s"$work/ckpt")
 
         // drop 2: every 10th order re-priced (+1000) — must upsert, and the
         // checkpoint must keep batch 1 from being reprocessed
@@ -84,7 +83,7 @@ object StreamOps {
           .select(col("o_orderkey"), (col("o_totalprice") + lit(1000.0)).as("price"))
           .coalesce(1).write.mode("overwrite").option("header", "true").csv(s"$work/f2")
         dropFile(s"$work/f2", bronze, "batch2.csv")
-        StreamIngest.ingestAvailable(s, bronze, schema, table, s"$work/ckpt")
+        StreamIngest.ingestAvailable(s, bronze, schema, table.merge(_), s"$work/ckpt")
 
         table.read.orderBy("o_orderkey")
       },
@@ -376,10 +375,9 @@ object StreamOps {
           Seq("lang"), recordCdf = true)
         // lang rides the pk: it is partition-stable in this flow (a pure
         // attribute of the doc), and partition cols ⊆ pk skips the merge
-        // migration probe — the tools.PkProbe A/B (round 16) measured the
-        // composite key consistently FASTER once the merge source batch
-        // was persisted (min 10.3 vs 12.4 s at sf0.1), retiring round 15's
-        // unexplained +5 s composite-pk observation
+        // migration probe — an A/B of doc_id vs (doc_id, lang) as the
+        // curated pk measured the composite key consistently FASTER once
+        // the merge source batch was persisted (min 10.3 vs 12.4 s at sf0.1)
         val curated = graft.lake.VersionedTable(s, s"$work/curated",
           Seq("doc_id", "lang"), Seq("lang"))
         def applyBatch(batch: org.apache.spark.sql.DataFrame): Unit = {

@@ -1,8 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, lit, struct}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.functions.{col, struct}
 
 import graft.lake.{GraftSql, VersionedTable}
 

@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
   * no code change. Thresholds are lowered so the toy dataset triggers it.
   */
 class AqeSkewSpec extends SparkSpec {
-  import spark.implicits._
 
   test("adaptive execution splits a skewed sort-merge join partition") {
     val confs = Seq(

@@ -82,4 +82,19 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.totalDeviates(prev, None,
       Seq("q1" -> 99.0), narrowed = false))
   }
+
+  test("a query that throws is reported as failed and left out of the total") {
+    val spark = SparkSpec.spark
+    val ok: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
+      (s, _) => s.range(10).toDF()
+    val boom: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
+      (_, _) => throw new IllegalStateException("boom")
+    val runs = Seq("q_ok" -> ok, "q_boom" -> boom)
+      .map { case (n, fn) => n -> Bench.once(spark, n, fn, "unused") }
+    assert(runs.toMap.apply("q_boom").isEmpty, "a throwing query has no time")
+    val sweep = Bench.Sweep.of(runs)
+    assert(sweep.failed == Seq("q_boom"))
+    assert(sweep.times.map(_._1) == Seq("q_ok"))
+    assert(sweep.total == runs.toMap.apply("q_ok").get)
+  }
 }

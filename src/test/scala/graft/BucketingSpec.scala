@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Bucketing = the pre-shuffle: two tables bucketed on the join key join
   * with NO exchange — at 100 TB this turns every recurring fact⋈fact join
   * into a local merge per bucket. (Broadcast is disabled in the test so the

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.ext.TextOps
 
 /** Sliding-window token chunking: window boundaries, overlap sharing, and

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.ext.TextOps
 
 /** PII scrub: detection counts + redaction in one codegen'd projection.

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.etl.Pipeline
+import graft.lake.{GraftSql, VersionedTable}
 
 /** End-to-end flow parity with /root/reference/scripts/glue/script.py:235-261:
   * bronze CSVs → cast → validate → split → rejected sink → dedup → merged
@@ -17,6 +18,12 @@ class PipelineSpec extends SparkSpec {
     Files.write(p, (header +: rows).mkString("\n").getBytes)
     p.toString
   }
+
+  // handles on Pipeline.run's output tables (same layout as it writes)
+  private def silver(lake: String, ds: String, pk: String, part: String) =
+    VersionedTable(spark, s"$lake/silver_layer/$ds", Seq(pk), Seq(part))
+  private def rejected(lake: String, ds: String, parts: Seq[String]) =
+    VersionedTable(spark, s"$lake/rejected/$ds", Seq(Pipeline.RejectId), parts)
 
   test("full three-dataset run: metrics, silver contents, rejected audit") {
     val work = tmpDir("pipe")
@@ -47,14 +54,15 @@ class PipelineSpec extends SparkSpec {
     // validate against processed parents (script.py:240,246,254-257)
     assert(res.orderItems.total == 4 && res.orderItems.valid == 1 && res.orderItems.rejected == 3)
 
-    val silverOrders = spark.read.parquet(s"$lake/silver_layer/orders")
+    val ordersTable = silver(lake, "orders", "order_id", "date")
+    val silverOrders = ordersTable.read
     assert(silverOrders.count() == 2) // 100 and deduped 102
     assert(silverOrders.filter(col("order_id") === 102).count() == 1)
 
-    val silverItems = spark.read.parquet(s"$lake/silver_layer/order_items")
+    val silverItems = silver(lake, "order_items", "id", "date").read
     assert(silverItems.select("id").collect().map(_.getInt(0)).toSeq == Seq(1))
 
-    val rejectedItems = spark.read.parquet(s"$lake/rejected/order_items")
+    val rejectedItems = rejected(lake, "order_items", Seq("date")).read
     val errs = rejectedItems.select("id", "validation_errors")
       .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
     assert(errs == Map(
@@ -63,9 +71,8 @@ class PipelineSpec extends SparkSpec {
       4 -> "Invalid order_id reference"))
     assert(rejectedItems.columns.contains("rejection_time"))
 
-    // partition layout on disk: silver orders partitioned by date
-    assert(Files.exists(Paths.get(s"$lake/silver_layer/orders/date=2025-04-01")))
-    assert(Files.exists(Paths.get(s"$lake/silver_layer/orders/date=2025-04-02")))
+    // partition layout from the commit log: silver orders partitioned by date
+    assert(ordersTable.partitionPaths == Seq("date=2025-04-01", "date=2025-04-02"))
   }
 
   test("crawler-parity registration: every existing output becomes a " +
@@ -93,9 +100,9 @@ class PipelineSpec extends SparkSpec {
     assert(spark.sql("SELECT * FROM pipereg_silver_products LIMIT 10").count() == 1)
     assert(spark.sql("SELECT * FROM pipereg_silver_order_items LIMIT 10").count() == 1)
     assert(spark.sql("SELECT * FROM pipereg_rejected_products").count() == 1)
-    // partition columns survived registration (MSCK partition discovery)
+    // partition columns survived registration
     assert(spark.sql("SELECT date FROM pipereg_silver_orders").count() == 1)
-    names.foreach(n => spark.sql(s"DROP TABLE $n"))
+    names.foreach(n => GraftSql.unregister(spark, n))
   }
 
   test("bronze archive: post-success move to archive/YYYY/MM/DD with " +
@@ -129,7 +136,8 @@ class PipelineSpec extends SparkSpec {
   test("second run upserts instead of duplicating (MERGE parity)") {
     val work = tmpDir("pipe")
     val products = writeCsv(work, "products.csv",
-      "product_id,department_id,department,product_name", Seq("1,10,Books,BookA"))
+      "product_id,department_id,department,product_name",
+      Seq("1,10,Books,BookA", ",30,Home,NoPk")) // one reject per run
     val orders = writeCsv(work, "orders.csv",
       "order_num,order_id,user_id,order_timestamp,total_amount,date",
       Seq("1,100,7,2025-04-01 10:00:00,50.0,2025-04-01"))
@@ -139,8 +147,14 @@ class PipelineSpec extends SparkSpec {
     val lake = s"$work/lake"
     Pipeline.run(spark, products, orders, items, lake)
     Pipeline.run(spark, products, orders, items, lake)
-    assert(spark.read.parquet(s"$lake/silver_layer/orders").count() == 1)
-    assert(spark.read.parquet(s"$lake/silver_layer/order_items").count() == 1)
-    assert(spark.read.parquet(s"$lake/silver_layer/products").count() == 1)
+    val orderTable = silver(lake, "orders", "order_id", "date")
+    assert(orderTable.read.count() == 1)
+    assert(silver(lake, "order_items", "id", "date").read.count() == 1)
+    assert(silver(lake, "products", "product_id", "department").read.count() == 1)
+    // each run is one logged commit: the first run's version stays readable
+    assert(orderTable.currentVersion == 2)
+    assert(orderTable.readVersion(1).count() == 1)
+    // rejects accumulate across runs under distinct synthetic keys
+    assert(rejected(lake, "products", Nil).read.count() == 2)
   }
 }

@@ -7,7 +7,6 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.etl.Dedup
-import graft.lake.LakeTable
 import graft.quality.{Rule, Validator}
 
 /** Property-based invariants (SURVEY.md §5.3) over ScalaCheck generators
@@ -60,22 +59,7 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("∀ batches: merge result = updates ∪ (target \\ updated keys); idempotent") {
-    val kvGen = Gen.listOfN(30, Gen.zip(Gen.choose(1L, 20L), Gen.choose(0, 1000)))
-    (1L to 3L).foreach { seed =>
-      val target = draw(kvGen, seed).distinctBy(_._1)
-      val updates = draw(kvGen, seed + 100).distinctBy(_._1)
-      val t = LakeTable(spark, tmpDir("prop") + "/t", Seq("k"))
-      t.merge(target.toDF("k", "v"))
-      t.merge(updates.toDF("k", "v"))
-      val expected = (updates ++ target.filterNot(r => updates.exists(_._1 == r._1))).toSet
-      assert(t.read.as[(Long, Int)].collect().toSet == expected, s"seed=$seed")
-      t.merge(updates.toDF("k", "v")) // idempotence
-      assert(t.read.as[(Long, Int)].collect().toSet == expected, s"seed=$seed re-merge")
-    }
-  }
-
-  test("∀ batches: VersionedTable agrees with LakeTable and keeps history") {
+  test("∀ batches: merge = updates ∪ (target \\ updated keys), idempotent, keeps history") {
     val kvGen = Gen.listOfN(30, Gen.zip(Gen.choose(1L, 20L), Gen.choose(0, 1000)))
     (1L to 3L).foreach { seed =>
       val target = draw(kvGen, seed).distinctBy(_._1)

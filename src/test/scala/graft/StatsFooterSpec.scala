@@ -64,4 +64,22 @@ class StatsFooterSpec extends SparkSpec {
     assert(t.readWhere(col("s") === "zzz").count() == 0)
     assert(t.lastScanDirs == 2, "no stats for s → every dir conservatively kept")
   }
+
+  test("a pk column skipped in one dir still gets stats in the other dirs " +
+      "of the same commit") {
+    // parquet writes no min/max for a chunk whose values exceed 4 KiB, so
+    // dir p=0's pk chunk has no footer stats and its pk line is skipped;
+    // every other dir of the commit must still record its own pk bounds
+    val long = "x" * 5000
+    val df = ((0 until 3).map(i => (s"$long$i", 0, i.toLong)) ++
+      (1 to 7).flatMap(p => (0 until 10).map(i => (f"k$p%d$i%02d", p, i.toLong))))
+      .toDF("k", "p", "v")
+    val t = VersionedTable(spark, s"${dir()}/t3", Seq("k"), Seq("p"),
+      statsCols = Seq("v"))
+    t.overwrite(df)
+    assert(t.readWhere(col("k") === "k305").count() == 1)
+    // kept: p=3 (its bounds hold the key) and p=0 (no pk claim); every
+    // other dir's pk bounds prune it
+    assert(t.lastScanDirs == 2, s"scanned ${t.lastScanDirs} dirs")
+  }
 }

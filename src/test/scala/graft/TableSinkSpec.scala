@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.lake.VersionedTable

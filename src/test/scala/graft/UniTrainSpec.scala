@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Invariant test of the full unigram-LM trainer (TextOps.uniTrain) on a
   * synthetic word vocabulary — the trainer-level complement to
   * UniSegSpec's pure-DP properties, driving the SHIPPED code end to end

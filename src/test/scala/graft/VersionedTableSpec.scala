@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, concat, lit}
 
 import graft.lake.VersionedTable
 
@@ -529,5 +529,38 @@ class VersionedTableSpec extends SparkSpec {
     assert(t.versionAsOf(Long.MaxValue) == 3)
     assert(contents(t.readAsOf(tsOf(2))) == Set((1, "a", "p1"), (2, "b", "p2")))
     intercept[RuntimeException](t.versionAsOf(tsOf(1) - 1))
+  }
+
+  test("merge on an absent table creates it; an empty batch leaves the rows unchanged") {
+    val t = VersionedTable(spark, tmpDir("vt") + "/t", Seq("id"), Seq("part"))
+    assert(!t.exists)
+    t.merge(df((1, "a", "p1")))
+    assert(t.exists && contents(t.read) == Set((1, "a", "p1")))
+    t.merge(df())
+    assert(contents(t.read) == Set((1, "a", "p1")))
+  }
+
+  test("merge without primary-key columns is refused (would cross-join)") {
+    val t = VersionedTable(spark, tmpDir("vt") + "/t", Nil)
+    intercept[IllegalArgumentException](t.merge(df((1, "a", "p1"))))
+    assert(!t.exists)
+  }
+
+  test("optimized write: each partition dir holds ONE file regardless of " +
+      "upstream parallelism") {
+    val base = tmpDir("vt") + "/t"
+    val t = VersionedTable(spark, base, Seq("id"), Seq("part"))
+    // 3 partition values spread across 16 upstream partitions: a raw
+    // partitionBy would write up to 16 files per dir
+    t.merge(spark.range(300)
+      .select(col("id").cast("int").as("id"), concat(lit("v"), col("id")).as("val"),
+        concat(lit("p"), col("id") % 3).as("part"))
+      .repartition(16))
+    import scala.jdk.CollectionConverters._
+    val files = Files.walk(Paths.get(base, "data")).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+    assert(files.groupBy(_.getParent.getFileName.toString).view.mapValues(_.size).toMap ==
+      Map("part=p0" -> 1, "part=p1" -> 1, "part=p2" -> 1))
+    assert(t.read.count() == 300)
   }
 }
