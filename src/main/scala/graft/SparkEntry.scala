@@ -32,7 +32,7 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] = Catalog.oracleSql
 
-  /** Shared SPARK_GRAFT_ONLY matcher for Verify/Bench/Explain: a token
+  /** Shared SPARK_GRAFT_ONLY matcher for Verify/Bench/Diag: a token
     * selects a query by full name or by its qNN prefix — exact token
     * match, so ONLY=q7 does NOT also select q70..q79.
     */

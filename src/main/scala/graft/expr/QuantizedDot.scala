@@ -1,6 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -116,7 +116,7 @@ object GraftFunctions {
     * SAME hash pipeline, so the pre-filter can never produce a false
     * negative (see [[graft.ops.BloomJoin]]).
     */
-  private[expr] def entries: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+  private[graft] def entries: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     (QDotName, classOf[QuantizedDot], { children: Seq[Expression] =>
       require(children.length == 2, s"$QDotName expects 2 arguments")
       QuantizedDot(children.head, children(1))
@@ -156,29 +156,22 @@ object GraftFunctions {
           children.head, children(1))
       }))
 
-  /** Idempotent per-session registration (for sessions built without the
-    * extensions config — Verify/Bench).
+  /** The single per-session install of everything graft adds to Spark:
+    * the SQL functions above, the [[graft.plans.GraftStrategies]] planner
+    * strategy and the [[graft.plans.PushFilterThroughAsof]] optimizer rule.
+    * Idempotent. Called at the catalog boundary ([[graft.ops.Catalog]]) and
+    * by the public APIs used outside it.
     */
-  def register(spark: SparkSession): Unit =
+  def register(spark: SparkSession): Unit = {
     entries.foreach { case (name, cls, builder) =>
       if (!spark.catalog.functionExists(name))
         spark.sessionState.functionRegistry.registerFunction(
           FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
     }
-}
-
-/** `spark.sql.extensions=graft.expr.GraftExtensions` injects the function
-  * AND the custom-operator strategy catalog-wide — the
-  * SparkSessionExtensions route for deployments. (Per-session code paths
-  * use GraftFunctions.register / experimental.extraStrategies instead.)
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.entries.foreach { case (name, cls, builder) =>
-      ext.injectFunction(
-        (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
-    }
-    ext.injectPlannerStrategy(_ => graft.plans.GraftStrategies)
-    ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsof)
+    val ex = spark.experimental
+    if (!ex.extraStrategies.contains(graft.plans.GraftStrategies))
+      ex.extraStrategies = ex.extraStrategies :+ graft.plans.GraftStrategies
+    if (!ex.extraOptimizations.contains(graft.plans.PushFilterThroughAsof))
+      ex.extraOptimizations = ex.extraOptimizations :+ graft.plans.PushFilterThroughAsof
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.ops.{Caches, Exprs, Q, WorkDirs}
+import graft.ops.{Caches, Exprs, PlanChecks, Q, WorkDirs}
 import Exprs._
 
 /** LLM-training-data text operators over the `documents` table
@@ -1641,7 +1641,6 @@ object TextOps {
     //    breaks the hash match ──
     Q("q183_native_minhash",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val sig = t(s, d, "documents")
           .select(col("source"),
             call_function(graft.expr.GraftFunctions.MinHashName,
@@ -1673,7 +1672,6 @@ object TextOps {
     //    level, not just per-row ──
     Q("q184_native_lsh_pairs",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val sigs = t(s, d, "documents")
           .select(col("doc_id"),
             call_function(graft.expr.GraftFunctions.MinHashName,
@@ -2075,8 +2073,7 @@ object TextOps {
           .select(col("d1"), col("d2"), sim, lit("new-new").as("side"))
         val out = Caches.cached(
           cross.unionByName(within).orderBy("d1", "d2"))
-        val plan = out.queryExecution.executedPlan.toString
-        require(plan.contains("bandidx"),
+        require(PlanChecks.scans(out, s"$work/bandidx"),
           "the corpus side must read the persisted band index")
         val sides = out.groupBy("side").count().collect()
           .map(_.getString(0)).toSet

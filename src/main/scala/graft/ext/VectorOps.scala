@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Exprs, Q}
+import graft.ops.{Exprs, PlanChecks, Q}
 import Exprs._
 
 /** Similarity search over `embeddings` (vec_id, embedding: array<float>,
@@ -631,8 +631,8 @@ object VectorOps {
     * consumer require()s the pinned artifact VERSIONS it reads (coarseq
     * v1; pqbook v2 = trained, v1 = the stride seed it was trained from)
     * plus its own plan/pruning invariants; the index build's executed
-    * plan — captured from the UNCACHED frame, where the artifact scans
-    * are visible — is recorded for the build-provenance require().
+    * frame — UNCACHED, so its plan shows the artifact scans — is kept
+    * for the build-provenance require().
     */
   private[graft] object IvfPqFixture {
     final case class Arts(
@@ -640,7 +640,7 @@ object VectorOps {
         coarse: graft.lake.VersionedTable,
         pqbook: graft.lake.VersionedTable,
         index: graft.lake.VersionedTable,
-        buildPlan: String)
+        buildPlan: DataFrame)
 
     // keyed by (session, corpus dir): Arts hold VersionedTables bound to
     // the building SparkSession, so a JVM that stops one session and
@@ -726,9 +726,9 @@ object VectorOps {
           packedCellCodes(r, book)
         // provenance plan from the UNCACHED residuals (a persisted input
         // would hide the coarseq scan behind InMemoryTableScan)
-        val buildPlan = rowsFrom(res).queryExecution.executedPlan.toString
-        require(buildPlan.contains(s"$work/coarseq") &&
-            buildPlan.contains(s"$work/pqbook"),
+        val buildPlan = rowsFrom(res)
+        require(PlanChecks.scans(buildPlan, s"$work/coarseq") &&
+            PlanChecks.scans(buildPlan, s"$work/pqbook"),
           "the shared index build must scan BOTH persisted artifacts' " +
             s"data paths ($work/coarseq, $work/pqbook)")
         val idx = graft.lake.VersionedTable(s, s"$work/ivfpq",
@@ -752,7 +752,6 @@ object VectorOps {
     */
   private def ivfPqRecallFrame(s: SparkSession, e: DataFrame,
       arts: IvfPqFixture.Arts): DataFrame = {
-    graft.expr.GraftFunctions.register(s) // pqSq is a graft function now
     val qt = arts.coarse
     val pq = arts.pqbook
     val idx = arts.index
@@ -763,8 +762,8 @@ object VectorOps {
       s"serving must read the pinned artifact versions: coarseq " +
         s"v${qt.currentVersion} (want 1), pqbook v${pq.currentVersion} " +
         s"(want 2 = trained), index v${idx.currentVersion} (want 1)")
-    require(arts.buildPlan.contains(s"${arts.work}/coarseq") &&
-        arts.buildPlan.contains(s"${arts.work}/pqbook"),
+    require(PlanChecks.scans(arts.buildPlan, s"${arts.work}/coarseq") &&
+        PlanChecks.scans(arts.buildPlan, s"${arts.work}/pqbook"),
       "the index build must scan BOTH persisted artifacts' data paths " +
         s"(${arts.work}/coarseq, ${arts.work}/pqbook)")
     val cents = qt.read
@@ -943,7 +942,6 @@ object VectorOps {
     */
   private def passageRetrievalFrame(s: SparkSession, e: DataFrame,
       arts: IvfPqFixture.Arts, qPred: Column): DataFrame = {
-    graft.expr.GraftFunctions.register(s) // pqSq is a graft function now
     val qt = arts.coarse
     val pq = arts.pqbook
     val idx = arts.index
@@ -952,8 +950,8 @@ object VectorOps {
       s"serving must read the pinned artifact versions: coarseq " +
         s"v${qt.currentVersion} (want 1), pqbook v${pq.currentVersion} " +
         s"(want 2 = trained), index v${idx.currentVersion} (want 1)")
-    require(arts.buildPlan.contains(s"${arts.work}/coarseq") &&
-        arts.buildPlan.contains(s"${arts.work}/pqbook"),
+    require(PlanChecks.scans(arts.buildPlan, s"${arts.work}/coarseq") &&
+        PlanChecks.scans(arts.buildPlan, s"${arts.work}/pqbook"),
       "the index build must scan BOTH persisted artifacts' data paths " +
         s"(${arts.work}/coarseq, ${arts.work}/pqbook)")
     val cents = qt.read
@@ -1074,7 +1072,6 @@ object VectorOps {
     //    candidate row landing on the query's single window partition ──
     Q("q40_cosine_topk",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val topk = udaf(new TopK.TopKAgg(5))
         val e = t(s, d, "embeddings")
         val q = e.filter(col("vec_id") < 8)
@@ -1099,7 +1096,6 @@ object VectorOps {
     //    the bucket key is the partition key at scale ──
     Q("q41_ann_lsh",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val eb = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding"), bucket(col("embedding")).as("bkt"))
         val q = eb.filter(col("vec_id") < 8)
@@ -1125,7 +1121,6 @@ object VectorOps {
     //    exist — so the demo reports best-in-bucket instead of a threshold) ──
     Q("q42_embed_neardup",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val top1 = udaf(new TopK.TopKAgg(1))
         val eb = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding"), bucket(col("embedding")).as("bkt"))
@@ -1168,7 +1163,6 @@ object VectorOps {
     //    the exact scoring runs once per unique pair ──
     Q("q60_ann_banded",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val tables = Seq(hyperplanes(7L, 5), hyperplanes(11L, 5))
         val e = t(s, d, "embeddings")
         val ebx = e.select(col("vec_id"),
@@ -1214,7 +1208,6 @@ object VectorOps {
     //    cost linear in the sample ──
     Q("q94_ann_recall",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val topk = udaf(new TopK.TopKAgg(5))
         val e = t(s, d, "embeddings")
         val q = e.filter(col("vec_id") < 8)
@@ -1267,7 +1260,6 @@ object VectorOps {
     //    map a real pipeline materializes as a column ──
     Q("q95_int8_ann",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val topk = udaf(new TopK.TopKAgg(5))
         def i8(e: Column): Column = {
           val q = transform(e, x => qint(x))
@@ -1320,7 +1312,6 @@ object VectorOps {
     //    vectors ──
     Q("q106_semantic_dedup",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val e = t(s, d, "embeddings")
         val cents = centroids(e)
         val assigned = e.crossJoin(broadcast(cents))
@@ -1369,7 +1360,6 @@ object VectorOps {
     //    (engine-divergent) k-means training loop ──
     Q("q63_ann_ivf",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         ivfTopK(t(s, d, "embeddings"), IvfCentroids, probes = 2, k = 5)
       },
       Some(s"""WITH cents AS (${centroidsSql()}),
@@ -1397,7 +1387,6 @@ object VectorOps {
     //    centroid argmin, broadcast query set, one narrow scan ──
     Q("q157_ivf_recall",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val e = t(s, d, "embeddings")
         val q = e.filter(col("vec_id") < 8)
           .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
@@ -1453,7 +1442,6 @@ object VectorOps {
     //    trainer: each round one scan + one C×D-bounded shuffle ──
     Q("q163_ivf_lloyd_refine",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val e = t(s, d, "embeddings")
         val cents = centroids(e, IvfCentroids)
         val assigned = e.crossJoin(broadcast(cents))
@@ -1496,7 +1484,6 @@ object VectorOps {
     //    dot, just over a sliced array, so the oracle states both arms ──
     Q("q164_matryoshka_recall",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val e = t(s, d, "embeddings")
         val q = e.filter(col("vec_id") < 8)
           .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
@@ -1681,7 +1668,6 @@ object VectorOps {
     //    sums, counts, or divisions breaks the hash ──
     Q("q205_ivf_train_converged",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val e = t(s, d, "embeddings")
         val trained = trainedCentroids(e, IvfCentroids, rounds = 4)
         val assigned = assignCells(e, trained, keepEmbedding = false)
@@ -1714,7 +1700,6 @@ object VectorOps {
     //    the query rather than silently shipping worse cells ──
     Q("q206_trained_ivf_recall",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val e = t(s, d, "embeddings")
         val q = e.filter(col("vec_id") < 8)
           .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
@@ -1773,7 +1758,6 @@ object VectorOps {
     //    test is nprobe, and q206 already covers trained-vs-seed ──
     Q("q208_ivf_probe_sweep",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val e = t(s, d, "embeddings")
         val cents = centroids(e, IvfCentroids)
         val assigned = graft.ops.Caches.cached(assignCells(e, cents))
@@ -1858,7 +1842,6 @@ object VectorOps {
     //    erode first ──
     Q("q211_cell_drift",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val e = t(s, d, "embeddings")
         val cents = centroids(e, IvfCentroids)
         val assigned = assignCells(e, cents, keepEmbedding = false)
@@ -1902,7 +1885,6 @@ object VectorOps {
     //    identical to the in-memory q63 plan — same oracle verbatim ──
     Q("q213_ivf_partitioned_probe",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val work = graft.ops.WorkDirs.workDir("graft_q213")
         val e = t(s, d, "embeddings")
         val cents = centroids(e, IvfCentroids)
@@ -1972,7 +1954,6 @@ object VectorOps {
     //    driver compare cannot hash nested cells) ──
     Q("q214_cdf_ann_maintenance",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val work = graft.ops.WorkDirs.workDir("graft_q214")
         val src = graft.lake.VersionedTable(s, s"$work/src", Seq("vec_id"),
           recordCdf = true)
@@ -2084,7 +2065,6 @@ object VectorOps {
     //    read of one tiny table ──
     Q("q216_persisted_quantizer",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val work = graft.ops.WorkDirs.workDir("graft_q216")
         val e = t(s, d, "embeddings")
         val qt = graft.lake.VersionedTable(s, s"$work/quantizer", Seq("c_id"))
@@ -2111,8 +2091,7 @@ object VectorOps {
         val assigned = assignCells(e, cents)
         // match the artifact table's DATA PATH (workdir-unique), not a bare
         // name substring a renamed unrelated dir could satisfy (VERDICT r16)
-        require(assigned.queryExecution.executedPlan.toString
-            .contains(s"$work/quantizer"),
+        require(PlanChecks.scans(assigned, s"$work/quantizer"),
           "the index build must scan the persisted quantizer artifact's " +
             s"data path ($work/quantizer)")
         val vt = graft.lake.VersionedTable(s, s"$work/ivf",
@@ -2185,7 +2164,6 @@ object VectorOps {
     //    never all-pairs; the exact arm exists only as the oracle ──
     Q("q219_embed_decontaminate",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val e = t(s, d, "embeddings")
         val train = e.filter(col("vec_id") % 10 =!= 0)
         val bench = e.filter(col("vec_id") % 10 === 0)
@@ -2281,7 +2259,6 @@ object VectorOps {
     //    DuckDB reproduces the recall rows bit-for-bit ──
     Q("q226_ivfpq_index",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         ivfPqRecallFrame(s, t(s, d, "embeddings"), IvfPqFixture(s, d))
       },
       Some(s"""WITH ${lloydSql(4)},
@@ -2309,7 +2286,6 @@ object VectorOps {
     //    C-row codebook or ≤(queries×nprobe) distance table ──
     Q("q231_ivfpq_residual_ab",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val e = t(s, d, "embeddings")
         // the shared fixture's coarse quantizer IS trainedCentroids(e, C,
         // 4) persisted — same values, trained once per session (r17 #2)
@@ -2525,7 +2501,6 @@ object VectorOps {
     //    sf0.001/0.01/0.1 — the visibility require() is never vacuous ──
     Q("q234_ivfpq_add",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val work = graft.ops.WorkDirs.workDir("graft_q234")
         val e = t(s, d, "embeddings")
         val base = e.filter(col("vec_id") % 5 =!= 4)
@@ -2584,9 +2559,8 @@ object VectorOps {
         // across append's validation passes + the commit-cell collect
         val add1 = encode(fresh.filter(col("vec_id") % 10 === 4))
         val add2 = encode(fresh.filter(col("vec_id") % 10 === 9))
-        val addPlan = add1.queryExecution.executedPlan.toString
-        require(addPlan.contains(s"$work/coarseq") &&
-            addPlan.contains(s"$work/pqbook"),
+        require(PlanChecks.scans(add1, s"$work/coarseq") &&
+            PlanChecks.scans(add1, s"$work/pqbook"),
           "the incremental add must encode with the persisted artifacts' " +
             s"data paths ($work/coarseq, $work/pqbook) — not a retrain")
         val add1c = graft.ops.Caches.cached(add1)
@@ -2626,7 +2600,12 @@ object VectorOps {
             // the BASE commit's cells are its partition dirs — commit-log
             // metadata (a dir exists iff the overwrite landed rows under
             // it), replacing a full scan of the base index; the two add
-            // batches are cached frames, one tiny union-distinct job
+            // batches are cached frames, one tiny union-distinct job.
+            // Dir listings are pre-tombstone, so this holds only while the
+            // log shows no live tombstone dirs at vBase
+            require(idx.liveDvDirs(vBase).isEmpty,
+              s"the base index carries tombstones at v$vBase — its partition " +
+                "dirs would overstate the base commit's cells")
             val baseCells = idx.partitionPathsAt(vBase)
               .map(_.stripPrefix("cell=").toLong).toSet
             val tagged = Seq(add1c, add2c).zipWithIndex
@@ -2719,7 +2698,6 @@ object VectorOps {
     //    rescanned ──
     Q("q237_stream_ann_probe",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val work = graft.ops.WorkDirs.workDir("graft_q237")
         val e = t(s, d, "embeddings")
         val cents = centroids(e, IvfCentroids)
@@ -2821,7 +2799,6 @@ object VectorOps {
     //    query-bounded, never corpus-bounded ──
     Q("q240_staged_rerank",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val out = graft.ops.Caches.cached(
           stagedRerankFrame(t(s, d, "embeddings"), col("vec_id") < 8))
         val bad = out.filter(col("n_hit_reranked") < col("n_hit_stage1")).count()
@@ -2884,7 +2861,6 @@ object VectorOps {
     //    never re-encoded ──
     Q("q242_ivfpq_cdf_maintenance",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val work = graft.ops.WorkDirs.workDir("graft_q242")
         val src = graft.lake.VersionedTable(s, s"$work/src", Seq("vec_id"),
           recordCdf = true)
@@ -2908,9 +2884,9 @@ object VectorOps {
           packedCellCodes(residualFrame(up, cents), book)
             .select(col("vec_id"), col("cell"), grpOf(col("cell")).as("grp"),
               col("codes"))
-        val encPlan = encode(v1).queryExecution.executedPlan.toString
-        require(encPlan.contains(s"${arts.work}/coarseq") &&
-            encPlan.contains(s"${arts.work}/pqbook"),
+        val encPlan = encode(v1)
+        require(PlanChecks.scans(encPlan, s"${arts.work}/coarseq") &&
+            PlanChecks.scans(encPlan, s"${arts.work}/pqbook"),
           "maintenance must re-encode against the persisted artifacts' " +
             s"data paths (${arts.work}/coarseq, ${arts.work}/pqbook) — " +
             "not a retrain")
@@ -3004,7 +2980,6 @@ object VectorOps {
     //    data-dependent behavior the frontier exists to surface ──
     Q("q243_ivfpq_probe_frontier",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val arts = IvfPqFixture(s, d)
         require(arts.coarse.currentVersion == 1 &&
             arts.pqbook.currentVersion == 2 && arts.index.currentVersion == 1,
@@ -3162,7 +3137,6 @@ object VectorOps {
     //    session); both arms' probes are cell-pruned candidates ──
     Q("q245_pq_trained_ab",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val arts = IvfPqFixture(s, d)
         require(arts.coarse.currentVersion == 1 &&
             arts.pqbook.currentVersion == 2,
@@ -3305,7 +3279,6 @@ object VectorOps {
     //    health check that runs before every serving deploy ──
     Q("q247_ann_describe",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val arts = IvfPqFixture(s, d)
         require(arts.coarse.currentVersion == 1 &&
             arts.pqbook.currentVersion == 2 && arts.index.currentVersion == 1,
@@ -3368,7 +3341,6 @@ object VectorOps {
     //    it is the argmin on data that says otherwise ──
     Q("q248_serving_config_select",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val arts = IvfPqFixture(s, d)
         require(arts.coarse.currentVersion == 1 &&
             arts.pqbook.currentVersion == 2,
@@ -3558,7 +3530,6 @@ object VectorOps {
     //    cell-local candidates; the manifest is two left joins ──
     Q("q249_fused_decontam",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val docs = t(s, d, "documents")
         def isBench(src: Column) = substring(src, 4, 10).cast("int") % 2 === 0
         val cls = docs.select(col("doc_id"), isBench(col("source")).as("is_bench"))
@@ -3711,7 +3682,6 @@ object VectorOps {
     //    C-row broadcasts, probed-cell-local candidates) ──
     Q("q252_image_ann_ivfpq",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         // cached: train, encode, probe and the exact arm all re-scan the
         // feature corpus, and each uncached scan would re-decode the PNGs
         val feats = graft.ops.Caches.cached(Multimodal.rasterFeatures(s, d))
@@ -3749,7 +3719,6 @@ object VectorOps {
     //    rebuilt, including the 1→0 flip of the scrubbed doc ──
     Q("q255_incremental_decontam",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val work = graft.ops.WorkDirs.workDir("graft_q255")
         def isBench(src: Column) = substring(src, 4, 10).cast("int") % 2 === 0
         val src = graft.lake.VersionedTable(s, s"$work/src", Seq("doc_id"),
@@ -4047,7 +4016,6 @@ object VectorOps {
     //    the retrain is q205's bounded-stats Lloyd ──
     Q("q256_drift_retrain",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val work = graft.ops.WorkDirs.workDir("graft_q256")
         val e = t(s, d, "embeddings")
         val ref = e.filter(col("vec_id") % 2 === 0)
@@ -4112,8 +4080,7 @@ object VectorOps {
           "the drift trigger must persist a NEW quantizer version")
         // serving reads the new pin: the probe plan must scan the artifact
         val probe = ivfTopKWith(driftCur, qt.read, 2, 5)
-        require(probe.queryExecution.executedPlan.toString
-            .contains(s"$work/quantizer"),
+        require(PlanChecks.scans(probe, s"$work/quantizer"),
           "post-retrain serving must scan the persisted quantizer's data " +
             s"path ($work/quantizer)")
         require(probe.count() > 0, "post-retrain probe returned nothing")
@@ -4196,7 +4163,6 @@ object VectorOps {
     //    like q252's pixels and unlike the near-uniform text embeddings ──
     Q("q258_audio_ann_ivfpq",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         // cached: train, encode, probe and the exact arm all re-scan the
         // feature corpus, and each uncached scan re-decodes the WAVs
         val feats = graft.ops.Caches.cached(Multimodal.audioFeatures(s, d))
@@ -4230,7 +4196,6 @@ object VectorOps {
     //    nothing changes when chunks ≫ docs, which is the point ──
     Q("q259_passage_retrieval",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         // cached: train, encode, probe and the exact arm all re-scan the
         // chunk corpus, and each uncached scan re-tokenizes every doc
         val feats = graft.ops.Caches.cached(chunkFeatures(s, d))
@@ -4272,7 +4237,6 @@ object VectorOps {
     //    recall cliff hidden from the oracle ──
     Q("q260_filtered_ann",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val work = graft.ops.WorkDirs.workDir("graft_q260")
         val langOf = t(s, d, "documents")
           .select(col("doc_id").as("base_id"), col("lang"))
@@ -4300,8 +4264,7 @@ object VectorOps {
             uni.select(col("vec_id"), col("embedding")), cents)
           .join(uni.select(col("vec_id"), col("modality"), col("lang")),
             Seq("vec_id"))
-        require(assigned.queryExecution.executedPlan.toString
-            .contains(s"$work/coarseq"),
+        require(PlanChecks.scans(assigned, s"$work/coarseq"),
           "the index build must scan the persisted quantizer artifact's " +
             s"data path ($work/coarseq)")
         val vt = graft.lake.VersionedTable(s, s"$work/unidx",
@@ -4509,7 +4472,6 @@ object VectorOps {
     //    contributes ≥ 1 exclusive fused row) ──
     Q("q263_hybrid_rrf",
       (s, d) => {
-        graft.expr.GraftFunctions.register(s)
         val topk = udaf(new TopK.TopKAgg(10))
         // cached: the stats pass, both legs' corpus scans and the query
         // selection all re-read the chunk corpus; uncached each scan

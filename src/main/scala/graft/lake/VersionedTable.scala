@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Phases
+
 /** Versioned lake table: Delta-style time travel re-expressed as a
   * directory-granular commit log over plain Parquet.
   *
@@ -93,17 +95,6 @@ final case class VersionedTable(
     * deterministically interleave a competing writer). No-op in production.
     */
   private[graft] var beforeCommitHook: () => Unit = () => ()
-
-  /** Phase timer for the commit-path profile (see
-    * [[VersionedTable.timing]]); identity when the switch is off.
-    */
-  @inline private def timed[T](what: String)(f: => T): T =
-    if (!VersionedTable.timing) f
-    else {
-      val t0 = System.nanoTime()
-      try f finally System.err.println(
-        f"[vt-timing] $what%-14s ${(System.nanoTime() - t0) / 1e9}%7.3f s  $path")
-    }
 
   def exists: Boolean = fs.exists(logDir) && fs.listStatus(logDir).nonEmpty
 
@@ -292,7 +283,7 @@ final case class VersionedTable(
     * to exactly what the commit declares. Replayed checkpoint + tail
     * (`livedv=` lines) like [[liveDirs]].
     */
-  private def liveDvDirs(v: Int): Seq[String] =
+  private[graft] def liveDvDirs(v: Int): Seq[String] =
     replayed[Seq[String]](dvCache, Seq.empty,
       prefixed(_, "livedv="),
       (dv, e) => e.action match {
@@ -2592,10 +2583,17 @@ final case class VersionedTable(
     // is the atomicity boundary — the Delta/Iceberg posture), and a failed
     // stage aborts the whole mutation with the orphaned dir ignored. At
     // ~1 s/commit × every maintenance micro-batch this was the single
-    // largest fixed cost in the commit profile (vt-timing stage-write).
+    // largest fixed cost in the commit profile (the stage-write phase).
+    // v2's task commits are not atomic: a speculative duplicate attempt
+    // could leave a second copy of a task's part files in the staging dir,
+    // and `adds`/stats list that dir wholesale — so refuse speculation
+    require(!spark.sparkContext.getConf.getBoolean("spark.speculation", false),
+      "VersionedTable stage writes need spark.speculation=false: output " +
+        "committer v2 moves task output at task commit, so a speculative " +
+        "attempt's part files would land in the staged commit")
     val w = toPhysical(clustered).write.mode("overwrite")
       .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-    timed("stage-write") {
+    Phases.timed(s"stage-write $path") {
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols.map(physicalOf): _*) else w)
         .parquet(root.toString)
     }
@@ -2674,7 +2672,7 @@ final case class VersionedTable(
     */
   private def statsLines(root: Path, rel: Seq[String]): Seq[String] = {
     if (statsCols.isEmpty || rel.isEmpty) return Nil
-    timed("stats-pass") {
+    Phases.timed(s"stats-pass $path") {
       footerStatsLines(root, rel).getOrElse(scanStatsLines(root, rel))
     }
   }
@@ -2915,8 +2913,8 @@ final case class VersionedTable(
         }
       })
     } catch { case e: Exception =>
-      if (sys.env.get("SPARK_GRAFT_TIMING").contains("1"))
-        System.err.println(s"[stats-footer] fallback for $path: $e")
+      // loud, not silent: the fallback costs a full scan of the staged data
+      System.err.println(s"[stats-footer] fallback to a stats scan for $path: $e")
       None
     }
   }
@@ -3022,7 +3020,7 @@ final case class VersionedTable(
     // bounded by the commit's own output, never table size, and footer
     // reads are O(1) metadata IO on files just written. Best-effort: a
     // failed footer read must never fail a commit whose data is staged.
-    val metricsLine = timed("commit-footers") {
+    val metricsLine = Phases.timed(s"commit-footers $path") {
       val own = adds.filterNot(_.startsWith(ExtPrefix))
       if (own.isEmpty) Nil
       else try {
@@ -3482,7 +3480,7 @@ final case class VersionedTable(
     // doubled null key is a null-pk error, not a duplicate-key error).
     // The SAME job also captures the batch's per-pk-column bounds, which
     // feed the collision-scan dir pruning below.
-    val pkBounds: Seq[(Any, Any)] = timed("append-shape") {
+    val pkBounds: Seq[(Any, Any)] = Phases.timed(s"append-shape $path") {
       val anyNullPk = pk.map(col(_).isNull).reduce(_ || _)
       val headAggs = Seq(max(col("__nl")).as("__nulls"), max(col("__n")).as("__mx"))
       val boundAggs = pk.flatMap(c =>
@@ -3538,7 +3536,7 @@ final case class VersionedTable(
     // must scan the whole table or it admits a duplicate PK.
     val pkAligned = partitionCols.nonEmpty &&
       partitionCols.forall(pc => pk.exists(_.equalsIgnoreCase(pc)))
-    timed("append-collide") {
+    Phases.timed(s"append-collide $path") {
       if (liveForCollide.nonEmpty) {
         val raw = frameFor(next - 1, liveForCollide)
         val rawT =
@@ -3709,7 +3707,7 @@ final case class VersionedTable(
     // recording is on) the change-image join (identity columns cannot be
     // partition columns, so deriving it BEFORE identity assignment is
     // sound)
-    val touched = timed("touched-set") {
+    val touched = Phases.timed(s"touched-set $path") {
       if (partitionCols.isEmpty) Array.empty[org.apache.spark.sql.Row]
       else updates0.select(partitionCols.map(col): _*).distinct().collect()
     }
@@ -3722,7 +3720,7 @@ final case class VersionedTable(
     // partition) semi-join over the untouched partitions, and is skipped
     // entirely when every partition column is part of the pk (equal pk ⇒
     // equal partition values ⇒ migration impossible).
-    val migrated = timed("migrate-probe") {
+    val migrated = Phases.timed(s"migrate-probe $path") {
       if (partitionCols.isEmpty ||
           partitionCols.forall(pc => pk.exists(_.equalsIgnoreCase(pc))))
         Array.empty[org.apache.spark.sql.Row]
@@ -3760,7 +3758,7 @@ final case class VersionedTable(
           merged.schema.json)
       }
     }
-    val cdfStaged: Option[(Path, String)] = timed("cdf-stage") {
+    val cdfStaged: Option[(Path, String)] = Phases.timed(s"cdf-stage $path") {
       if (recordCdf) Some(stageChanges(mergeChanges(curT, updates), next)) else None
     }
     // once — retries re-commit the same staging
@@ -5239,14 +5237,6 @@ final case class VersionedTable(
 }
 
 object VersionedTable {
-  /** SPARK_GRAFT_TIMING=1 prints per-phase wall times of the commit path
-    * (stage / stats / probe / cdf / commit) to stderr — the profiling
-    * switch for the partitioned-commit-floor A/B workflow; zero cost when
-    * unset.
-    */
-  private[lake] val timing: Boolean =
-    sys.env.get("SPARK_GRAFT_TIMING").contains("1")
-
   /** TBLPROPERTIES keys that carry the table LAYOUT (consumed by CREATE /
     * CONVERT / attach) — immutable after creation, refused by
     * [[VersionedTable.setProperties]] so they can never shadow the layout

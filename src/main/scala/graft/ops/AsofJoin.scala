@@ -93,12 +93,7 @@ object AsofJoin {
     require(collisions.isEmpty,
       s"column collision between sides: ${collisions.mkString(",")}")
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(graft.plans.GraftStrategies))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.GraftStrategies
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.PushFilterThroughAsof))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.PushFilterThroughAsof
+    graft.expr.GraftFunctions.register(spark)
     val lp = left.queryExecution.analyzed
     val rp0 = right.queryExecution.analyzed
     // self-join-style attribute-id sharing (both sides derived from one

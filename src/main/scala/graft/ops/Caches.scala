@@ -29,10 +29,11 @@ object Caches {
   }
 }
 
-/** SPARK_GRAFT_TIMING=1 phase timer for query-internal profiling — the
-  * query-side sibling of the VersionedTable commit-path timer (same env
-  * switch, same stderr format), so a slow catalog entry can be broken into
-  * its eager phases without temporary instrumentation. Zero cost unset.
+/** SPARK_GRAFT_TIMING=1 phase timer — the one switch and stderr format
+  * for query-internal phases (label = query and phase) and the
+  * VersionedTable commit path (label = phase and table path), so a slow
+  * entry or commit can be broken into its eager phases without temporary
+  * instrumentation. Zero cost unset.
   */
 object Phases {
   private val timing: Boolean =
@@ -44,6 +45,6 @@ object Phases {
       val t0 = System.nanoTime()
       try f
       finally System.err.println(
-        f"[q-timing] $label%-18s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
+        f"[timing] ${(System.nanoTime() - t0) / 1e9}%7.3f s  $label")
     }
 }

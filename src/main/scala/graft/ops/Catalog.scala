@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.expr.GraftFunctions
 import graft.ext.{Multimodal, TextOps, VectorOps}
 
 /** Aggregates every query group into the driver contract. */
@@ -16,7 +17,10 @@ object Catalog {
     val noOracle = qs.filter(_.oracle.isEmpty).map(_.name)
     require(noOracle.isEmpty,
       s"catalog entries without a DuckDB oracle: ${noOracle.mkString(",")}")
-    qs
+    // the catalog boundary installs graft's functions, strategy and rule
+    // before every entry, so any run — a full sweep, a narrow
+    // SPARK_GRAFT_ONLY selection, a fresh session — resolves them
+    qs.map(q => q.copy(run = (s, d) => { GraftFunctions.register(s); q.run(s, d) }))
   }
 
   def queries = all.map(q => q.name -> q.run).toMap

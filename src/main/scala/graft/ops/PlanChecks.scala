@@ -1,7 +1,8 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{SortExec, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.{FileSourceScanExec, ReusedSubqueryExec, SortExec, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
@@ -29,6 +30,37 @@ object PlanChecks {
     case q: QueryStageExec => aggregatedSpine(q.plan)
     case u: UnaryExecNode => aggregatedSpine(u.child)
     case _ => false
+  }
+
+  /** Root paths of every file scan under `p`, walking through caches,
+    * reused exchanges/subqueries, AQE wrappers and subqueries as
+    * [[aggregatedSpine]] does. Provenance proofs match these, never the
+    * plan's text: Spark cuts a scan's location string at
+    * `spark.sql.maxMetadataStringLength` (100 characters by default), so a
+    * long path — or any path after the first — is missing from `toString`.
+    */
+  def scanRoots(p: SparkPlan): Seq[Path] = p match {
+    case s: FileSourceScanExec => s.relation.location.rootPaths
+    case i: InMemoryTableScanExec => scanRoots(i.relation.cachedPlan)
+    case r: ReusedExchangeExec => scanRoots(r.child)
+    case r: ReusedSubqueryExec => scanRoots(r.child)
+    case a: AdaptiveSparkPlanExec => scanRoots(a.executedPlan)
+    case q: QueryStageExec => scanRoots(q.plan)
+    case o => (o.children ++ o.subqueries).flatMap(scanRoots)
+  }
+
+  /** Is `p` (any URI form) the table root `root` or under it? */
+  private[ops] def under(p: Path, root: String): Boolean = {
+    val s = p.toUri.getPath
+    s == root || s.startsWith(root + "/")
+  }
+
+  /** Does `df`'s executed plan scan files under `root` (absolute,
+    * scheme-less or qualified)?
+    */
+  def scans(df: DataFrame, root: String): Boolean = {
+    val r = new Path(root).toUri.getPath
+    scanRoots(df.queryExecution.executedPlan).exists(under(_, r))
   }
 
   /** Names of serial stages in `df`'s physical plan: Windows with no
@@ -66,11 +98,9 @@ object SmallArtifacts {
 
   /** Register a table root (absolute, scheme-less) as bounded. */
   def register(path: String): Unit =
-    paths.put(new org.apache.hadoop.fs.Path(path).toUri.getPath, ())
+    paths.put(new Path(path).toUri.getPath, ())
 
   /** Is `p` (any URI form) under a registered bounded table root? */
-  def covers(p: org.apache.hadoop.fs.Path): Boolean = {
-    val s = p.toUri.getPath
-    paths.keysIterator.exists(r => s == r || s.startsWith(r + "/"))
-  }
+  def covers(p: Path): Boolean =
+    paths.keysIterator.exists(PlanChecks.under(p, _))
 }

@@ -31,16 +31,8 @@ final case class Q(
   */
 object Exprs {
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // idempotent (functionExists-guarded) graft function registration on
-    // every table load: a NARROW run (SPARK_GRAFT_ONLY) of a query whose
-    // lambda omits its own register() call must not fail with
-    // UNRESOLVED_ROUTINE just because the alphabetically-earlier query
-    // that used to register for it was filtered out (q177 did exactly
-    // that). Full sweeps are unaffected.
-    graft.expr.GraftFunctions.register(spark)
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
     Sources.table(spark, dir, name)
-  }
 
   /** Exact-decimal view of a 2-decimal double column. */
   def dec(c: Column): Column = c.cast(DecimalType(18, 4))

@@ -9,19 +9,13 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * disable predicate pushdown for its whole subtree. This rule restores
   * it for the sound case: the asof join emits exactly one row per LEFT
   * row, so any conjunct referencing only left-side attributes commutes
-  * with the join and can evaluate below it (where it can keep moving down
-  * to the scan). Conjuncts touching the right-side payload must stay
+  * with the join and can evaluate below it. Conjuncts touching the right-side payload must stay
   * above (they depend on the match result).
   *
-  * Registration route matters: via `SparkSessionExtensions
-  * .injectOptimizerRule` ([[GraftExtensions]]) this rule interleaves with
-  * the standard pushdown batches, so a pushed predicate keeps moving down
-  * to the data source. Via `spark.experimental.extraOptimizations` (the
-  * per-session fallback `AsofJoin.asofJoinNative` uses) it runs AFTER the
-  * main optimizer batches: the predicate lands below the asof node and
-  * prunes rows before the shuffle/merge, but no longer reaches data-source
-  * pushdown. Perf-only difference; prefer the extensions route when the
-  * session can be configured up front.
+  * Installed per session by [[graft.expr.GraftFunctions.register]] through
+  * `spark.experimental.extraOptimizations`, so it runs AFTER the main
+  * optimizer batches: the predicate lands below the asof node and prunes
+  * rows before the shuffle/merge, but does not reach data-source pushdown.
   */
 object PushFilterThroughAsof extends Rule[LogicalPlan] with PredicateHelper {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {

@@ -3,9 +3,9 @@ package graft.plans
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
-/** Plans [[AsofJoinPlan]] as [[AsofJoinExec]]. Registered per session via
-  * `spark.experimental.extraStrategies` (public API, no config needed) or
-  * catalog-wide through `graft.expr.GraftExtensions`.
+/** Plans [[AsofJoinPlan]] as [[AsofJoinExec]]. Installed per session via
+  * `spark.experimental.extraStrategies` by
+  * [[graft.expr.GraftFunctions.register]].
   */
 object GraftStrategies extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

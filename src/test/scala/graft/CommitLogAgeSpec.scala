@@ -11,9 +11,8 @@ import graft.lake.VersionedTable
   * merge commit stream through one table and asserts both the structural
   * contract (a fresh handle attaching late replays O(interval) log files,
   * not the whole history) and the wall-clock one (late commits cost what
-  * early commits cost). The 300-commit offline sibling lives in
-  * [[graft.CommitProbe]] (`SPARK_GRAFT_PROBE=canary`); measured curves are
-  * recorded in PLANS.md.
+  * early commits cost). The 300-commit offline sibling is
+  * `graft.tools.Diag canary`; measured curves are recorded in PLANS.md.
   */
 class CommitLogAgeSpec extends SparkSpec {
   import spark.implicits._
