@@ -313,12 +313,18 @@ final case class VersionedTable(
   private def withTombstones(df: DataFrame, v: Int): DataFrame = {
     val dvs = liveDvDirs(v)
     if (dvs.isEmpty) return df
+    val keys = (partitionCols ++ pk).distinct
     val groups = dvs.groupBy(_.split("/")(0))
+    // a tombstone root holds exactly (partition cols + PK) — read under
+    // those fields of its recorded schema, so no footer is opened (a
+    // shallow clone's ext= tombstones are inferred)
     val dvFrame = toLogical(groups.toSeq.sortBy(_._1).map { case (root, ds) =>
-      spark.read.option("basePath", resolveRoot(root))
+      val reader = spark.read.option("basePath", resolveRoot(root))
+      (if (root.startsWith(ExtPrefix)) reader
+       else reader.schema(org.apache.spark.sql.types.StructType(
+         rootSchema(root).fields.filter(f => keys.exists(_.equalsIgnoreCase(f.name))))))
         .parquet(ds.map(d => resolvedPath(d).toString): _*)
     }.reduce(_.unionByName(_)), v)
-    val keys = (partitionCols ++ pk).distinct
     val l = df.as("__dvl")
     val r = dvFrame.as("__dvr")
     val cond = keys.map(k => col(s"__dvl.$k") <=> col(s"__dvr.$k")).reduce(_ && _)
@@ -1069,18 +1075,25 @@ final case class VersionedTable(
       declaredFpp: Double, realizedFpp: Double)
 
   private def writeBloomSidecars(targets: Seq[String],
-      idx: Map[String, (Double, Option[Long])]): (Int, Seq[BloomClamp]) = {
+      idx: Map[String, (Double, Option[Long])],
+      schemaOf: String => org.apache.spark.sql.types.StructType)
+      : (Int, Seq[BloomClamp]) = {
     val clamps = scala.collection.mutable.ArrayBuffer.empty[BloomClamp]
     val own = targets.filterNot(_.startsWith(ExtPrefix))
       // an empty leaf (TRUNCATE / zero-row partition) holds no rows to
-      // index; reading it would fail schema inference
+      // index
       .filter(d => hasParquetFiles(resolvedPath(d)))
     if (own.isEmpty || idx.isEmpty) return (0, Nil)
     graft.expr.GraftFunctions.register(spark)
     val byAbs = own
       .map(d => fs.makeQualified(resolvedPath(d)).toUri.getPath -> d).toMap
-    val raw = spark.read.option("mergeSchema", "true")
-      .parquet(own.map(d => resolvedPath(d).toString): _*)
+    // leaf dirs are read WITHOUT basePath (no partition columns), each
+    // root under its known physical schema — no footer-inference job
+    val raw = own.groupBy(_.split("/")(0)).toSeq.sortBy(_._1).map { case (root, ds) =>
+      spark.read.schema(org.apache.spark.sql.types.StructType(schemaOf(root).fields
+        .filterNot(f => partitionCols.exists(_.equalsIgnoreCase(f.name)))))
+        .parquet(ds.map(d => resolvedPath(d).toString): _*)
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
     val present = idx.toSeq.sortBy(_._1).flatMap { case (lc, (fpp, ni)) =>
       for {
         c <- raw.columns.find(_.equalsIgnoreCase(lc))
@@ -1202,7 +1215,7 @@ final case class VersionedTable(
       !d.startsWith(ExtPrefix) &&
         all.keys.exists(c => bloomTypeOf(c).exists(dt =>
           !fs.exists(bloomSidecarPath(d, c, bloomTag(dt))))))
-    writeBloomSidecars(missing, all)
+    writeBloomSidecars(missing, all, rootSchema)
   }
 
   /** Drop the bloom index on `cols` (empty = every indexed column): one
@@ -1500,8 +1513,8 @@ final case class VersionedTable(
     * nested ADD COLUMN, e.g. `ADD COLUMN s.newf INT`): metadata-only —
     * the recorded struct type widens, files written before the add lack
     * the field and read it as NULL ([[frameFor]]'s struct conformance),
-    * files written after carry it (parquet mergeSchema unions the struct
-    * fields). `parent` is the field path to the enclosing struct
+    * files written after carry it (each root reads under the struct type
+    * its commit recorded). `parent` is the field path to the enclosing struct
     * (arbitrary depth).
     */
   def addNestedColumn(parent: Seq[String], name: String,
@@ -2130,17 +2143,67 @@ final case class VersionedTable(
   def readAsOf(tsMillis: Long): DataFrame = readVersion(versionAsOf(tsMillis))
 
   /** The table exactly as of commit `v` — dirs are grouped by the version
-    * root that wrote them so partition-column discovery gets a clean
-    * basePath per group, then unioned by name (null-filling columns added
-    * by later schema evolution).
+    * root that wrote them, each group read under the schema the log
+    * recorded for that root ([[rootSchema]]: no footer is opened and no
+    * Spark job runs to build the frame), then unioned by name
+    * (null-filling columns added by later schema evolution). Only `ext=`
+    * roots (CONVERT TO GRAFT / shallow clone) infer their schema from
+    * the files.
     */
   def readVersion(v: Int): DataFrame = {
     require(v >= 1 && v <= currentVersion, s"version $v out of range 1..$currentVersion")
     withTombstones(frameFor(v, liveDirs(v)), v)
   }
 
-  /** Assemble a frame over `dirs` (a subset of version `v`'s live set);
-    * falls back to the log-recorded schema when the subset is empty.
+  // version root → version of the log entry that added it; a root is
+  // immutable once committed, so a found entry never changes
+  private val addedAtCache = scala.collection.mutable.HashMap.empty[String, Int]
+
+  /** Version of the log entry that added version root `root` (as data
+    * dirs, `add=`, or as tombstone dirs, `dvadd=`). The version in the
+    * root's name is only a HINT: a merge that loses a commit race
+    * re-commits the SAME staging root (named for the version it first
+    * attempted) at a later version, so the search walks forward through
+    * the (memoized) log from the hint. A clone-referenced (`ext=`) root
+    * carries no version in its name — it rides the clone/convert commit
+    * itself, so the walk starts at 1. Found versions are memoized per
+    * root.
+    */
+  private def addedAt(root: String): Option[Int] =
+    addedAtCache.get(root).orElse {
+      val hint =
+        if (root.startsWith(ExtPrefix)) Some(1)
+        else scala.util.Try(root.split("_")(0).stripPrefix("v").toInt).toOption
+      val found = hint.flatMap(h => (h to currentVersion).find { i =>
+        val e = readLog(i)
+        (e.adds ++ e.dvAdds).exists(_.split("/")(0) == root)
+      })
+      found.foreach(addedAtCache(root) = _)
+      found
+    }
+
+  /** Physical schema of the files under this table's own version root
+    * `root`: the schema the adding entry recorded (`schemaAt(a)`), renamed
+    * to the physical names of that era (`colMapAt(a)`) — partition columns
+    * included, with their recorded types. A root is written by ONE
+    * commit, so its files are schema-homogeneous and this is exactly what
+    * they carry. Not for `ext=` roots: their foreign source may hold files
+    * of different schemas, so only they are inferred.
+    */
+  private def rootSchema(root: String): org.apache.spark.sql.types.StructType = {
+    val a = addedAt(root).getOrElse(throw new IllegalStateException(
+      s"table '$path': no log entry adds version root '$root'"))
+    val sch = schemaAt(a).getOrElse(throw new IllegalStateException(
+      s"table '$path': version $a records no schema"))
+    val cm = colMapAt(a)
+    org.apache.spark.sql.types.StructType(sch.fields.map(f =>
+      cm.collectFirst { case (l, p) if l.equalsIgnoreCase(f.name) => p }
+        .fold(f)(p => f.copy(name = p))))
+  }
+
+  /** Assemble a frame over `dirs` (a subset of version `v`'s live set),
+    * each root read under its [[rootSchema]]; falls back to the
+    * log-recorded schema when the subset is empty.
     */
   private def frameFor(v: Int, dirs: Seq[String]): DataFrame = {
     val groups = dirs.groupBy(_.split("/")(0))
@@ -2155,16 +2218,16 @@ final case class VersionedTable(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
     val frames = groups.toSeq.sortBy(_._1).map { case (root, dirs) =>
-      try spark.read.option("mergeSchema", "true")
-        .option("basePath", resolveRoot(root))
-        .parquet(dirs.map(d => resolvedPath(d).toString): _*)
+      val reader = spark.read.option("basePath", resolveRoot(root))
+      val paths = dirs.map(d => resolvedPath(d).toString)
+      if (!root.startsWith(ExtPrefix)) reader.schema(rootSchema(root)).parquet(paths: _*)
+      // an ext= root (CONVERT TO GRAFT / shallow clone) references the
+      // SOURCE's absolute location and never copies the files — if the
+      // source moved or was deleted, name the contract instead of
+      // surfacing a bare PATH_NOT_FOUND
+      else try reader.option("mergeSchema", "true").parquet(paths: _*)
       catch {
-        // an ext= root (CONVERT TO GRAFT / shallow clone) references the
-        // SOURCE's absolute location and never copies the files — if the
-        // source moved or was deleted, name the contract instead of
-        // surfacing a bare PATH_NOT_FOUND
-        case e: org.apache.spark.sql.AnalysisException
-            if root.startsWith(ExtPrefix) =>
+        case e: org.apache.spark.sql.AnalysisException =>
           throw new IllegalStateException(
             s"external source '${resolveRoot(root)}' referenced by table " +
               s"'$path' is missing or moved — CONVERT TO GRAFT and shallow " +
@@ -2426,29 +2489,14 @@ final case class VersionedTable(
   private def statsFor(d: String, v: Int): Map[String, (String, String)] =
     writeTimeStats(d) ++ analyzedAt(v).getOrElse(d, Map.empty)
 
-  /** The version embedded in the dir's root name is only a HINT: a merge
-    * that loses a commit race re-commits the SAME staging root (named for
-    * the version it first attempted) at a later version, so on a hint
-    * miss the search walks forward through the (memoized) log until the
-    * adding entry is found. Misses are cached — a stats-less table pays
-    * the walk once per dir, not per read.
+  /** Stats the entry that added `d` recorded for it ([[addedAt]]). Misses
+    * are cached too — a stats-less table pays the lookup once per dir,
+    * not per read.
     */
   private def writeTimeStats(d: String): Map[String, (String, String)] =
-    statsCache.getOrElseUpdate(d, {
-      // a clone-referenced dir carries no version in its name — its stats
-      // ride the clone commit itself, so the (memoized) walk starts at 1
-      val hint =
-        if (d.startsWith(ExtPrefix)) Some(1)
-        else scala.util.Try(d.split("_")(0).stripPrefix("v").toInt).toOption
-      hint match {
-        case None => Map.empty[String, (String, String)]
-        case Some(h) =>
-          (h to currentVersion).iterator
-            .map(readLog)
-            .collectFirst { case e if e.adds.contains(d) => e.stats.getOrElse(d, Map.empty[String, (String, String)]) }
-            .getOrElse(Map.empty)
-      }
-    })
+    statsCache.getOrElseUpdate(d,
+      addedAt(d.split("/")(0)).flatMap(readLog(_).stats.get(d))
+        .getOrElse(Map.empty))
 
   /** Conservative three-valued stats check over a RESOLVED predicate:
     * false ONLY when the dir's min/max prove no row satisfies `e`. Handles
@@ -2591,7 +2639,8 @@ final case class VersionedTable(
       "VersionedTable stage writes need spark.speculation=false: output " +
         "committer v2 moves task output at task commit, so a speculative " +
         "attempt's part files would land in the staged commit")
-    val w = toPhysical(clustered).write.mode("overwrite")
+    val physical = toPhysical(clustered)
+    val w = physical.write.mode("overwrite")
       .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
     Phases.timed(s"stage-write $path") {
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols.map(physicalOf): _*) else w)
@@ -2612,7 +2661,7 @@ final case class VersionedTable(
       val idx = bloomIndexAt(currentVersion)
       // stage-time clamps still warn on stderr inside the build; the
       // machine-readable report belongs to explicit index builds
-      if (idx.nonEmpty) { val _ = writeBloomSidecars(rel, idx) }
+      if (idx.nonEmpty) { val _ = writeBloomSidecars(rel, idx, _ => physical.schema) }
     }
     (root, rel)
   }
@@ -3565,10 +3614,9 @@ final case class VersionedTable(
     // batch, not a table scan) before re-committing.
     val batchKeys = updates.select(pk.map(col): _*)
     // the committed schema is the TABLE's schema verbatim — `updates` was
-    // aligned to it above and append never evolves the schema, so building
-    // the DV-aware `read` frame (a per-dir parquet footer/listing pass on
-    // the driver, ~0.3-0.6 s per append) just to render the same json was
-    // pure overhead
+    // aligned to it above and append never evolves the schema, so it is
+    // rendered from the log, not from a DV-aware `read` frame (whose
+    // per-root file listing would only re-derive the same json)
     commitMergeStaged(next, adds, Seq.empty, root, sch.json,
       statsLines(root, adds) ++ identityWmLines(root) ++ txnLines(txn) ++
         cdfStaged.map(_._2).toSeq ++ ledger,

@@ -38,7 +38,8 @@ import graft.lake.VersionedTable
   *    decile: commit cost must stay O(checkpointInterval), never
   *    O(commits) (n = 300; `CommitLogAgeSpec` asserts it at a smaller n).
   *  - `bloom <sfDir>` — point lookups on a 16-dir md5-keyed table with and
-  *    without a bloom index, with the dirs each scanned.
+  *    without a bloom index: total and per-lookup seconds, and the dirs
+  *    each scanned.
   *
   * Exits non-zero when a per-query mode sees a query fail.
   */
@@ -256,6 +257,8 @@ object Diag {
       s""""lookups":${keys.length},"sidecars_built":$sidecars,""" +
       s""""build_sec":${s3(buildSec)},""" +
       s""""no_index_sec":${s3(noIdxSec)},"no_index_dirs_scanned":$noIdxDirs,""" +
-      s""""indexed_sec":${s3(idxSec)},"indexed_dirs_scanned":$idxDirs}""")
+      s""""no_index_per_lookup_sec":${s3(noIdxSec / keys.length)},""" +
+      s""""indexed_sec":${s3(idxSec)},"indexed_dirs_scanned":$idxDirs,""" +
+      s""""indexed_per_lookup_sec":${s3(idxSec / keys.length)}}""")
   }
 }
