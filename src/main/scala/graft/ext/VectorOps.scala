@@ -2603,7 +2603,7 @@ object VectorOps {
             // batches are cached frames, one tiny union-distinct job.
             // Dir listings are pre-tombstone, so this holds only while the
             // log shows no live tombstone dirs at vBase
-            require(idx.liveDvDirs(vBase).isEmpty,
+            require(idx.snapshotAt(vBase).dvDirs.isEmpty,
               s"the base index carries tombstones at v$vBase — its partition " +
                 "dirs would overstate the base commit's cells")
             val baseCells = idx.partitionPathsAt(vBase)

@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.functions.lit
 
+import TableLog.enc
+
 /** SQL DML surface for [[VersionedTable]] — the reference's user boundary
   * is plain SQL (Athena queries in its Step Function,
   * /root/reference/step_function_code.json:75,94,113), and Delta exposes
@@ -1844,7 +1846,6 @@ object GraftSql {
     val defaultDeltaLines: Seq[String] =
       if (!t.exists) Nil
       else newColsLc.toSeq.flatMap { ncs =>
-        def enc(x: String) = java.net.URLEncoder.encode(x, "UTF-8")
         val droppedIdent = t.identityCols.keySet.diff(ncs)
         require(droppedIdent.isEmpty,
           s"REPLACE TABLE cannot drop identity column(s) ${
@@ -1900,7 +1901,6 @@ object GraftSql {
         retire ++ install
       }
     val replacePropLines = {
-      def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
       val cur = if (t.exists) t.properties else Map.empty[String, String]
       ((cur.keySet -- extraProps.keySet).toSeq.sorted
         .map(k => s"unsetprop=${enc(k)}") ++

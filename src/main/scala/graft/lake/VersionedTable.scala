@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.Phases
 
+import TableLog.{dec, enc, partOf}
+
 /** Versioned lake table: Delta-style time travel re-expressed as a
   * directory-granular commit log over plain Parquet.
   *
@@ -77,7 +79,7 @@ final case class VersionedTable(
   /** Absolute location of a dir entry's version-root component. */
   private def resolveRoot(rootComp: String): String =
     if (rootComp.startsWith(ExtPrefix))
-      java.net.URLDecoder.decode(rootComp.stripPrefix(ExtPrefix), "UTF-8")
+      dec(rootComp.stripPrefix(ExtPrefix))
     else s"$dataDir/$rootComp"
 
   /** Absolute location of a full dir entry (root + partition path). */
@@ -106,29 +108,6 @@ final case class VersionedTable(
       .map(_.stripPrefix("v").stripSuffix(".log").toInt)
       .foldLeft(0)(math.max)
 
-  private case class LogEntry(
-      action: String, adds: Seq[String], removes: Seq[String],
-      schemaJson: Option[String],
-      stats: Map[String, Map[String, (String, String)]],
-      txn: Option[(String, Long)],
-      constraintsAdded: Seq[(String, String)],
-      constraintsDropped: Seq[String],
-      dvAdds: Seq[String],
-      gencolsAdded: Seq[(String, String)],
-      gencolsDropped: Seq[String],
-      ts: Option[Long],
-      cdf: Option[String],
-      renames: Seq[(String, String)],
-      drops: Seq[String],
-      undrops: Seq[String],
-      propsSet: Seq[(String, String)],
-      propsUnset: Seq[String],
-      copied: Seq[String],
-      // (numFiles, numOutputRows) of the commit's OWN added dirs, recorded
-      // at commit time (Delta's operationMetrics) — None for metadata-only
-      // commits and entries written before the field existed
-      metrics: Option[(Long, Long)])
-
   private def slurp(p: Path): Seq[String] = {
     val bytes = {
       val in = fs.open(p)
@@ -141,72 +120,16 @@ final case class VersionedTable(
     new String(bytes, "UTF-8").split("\n").toSeq
   }
 
-  // Committed log entries and replayed live-dir sets are IMMUTABLE (a
+  // Committed log entries and replayed snapshots are IMMUTABLE (a
   // version, once claimed, is never rewritten), so both memoize safely for
   // the instance's lifetime. This alone fixes the merge-replays-the-log-3×
-  // pattern (read → liveDirs, commit → liveDirs(next-1), currentVersion).
+  // pattern (its read, its commit and its version check need the same state).
   private val logCache = scala.collection.mutable.HashMap.empty[Int, LogEntry]
-  private val liveCache = scala.collection.mutable.HashMap.empty[Int, Seq[String]]
+  private val snapshots = scala.collection.mutable.HashMap.empty[Int, Snapshot]
 
   private def readLog(v: Int): LogEntry = logCache.getOrElseUpdate(v, {
     logReads += 1
-    val lines = slurp(new Path(logDir, s"${vname(v)}.log"))
-    def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-    val stats = lines.filter(_.startsWith("stats="))
-      .map(_.stripPrefix("stats=").split("\t", -1))
-      .collect { case Array(d, c, mn, mx) => (dec(d), dec(c), dec(mn), dec(mx)) }
-      .groupBy(_._1)
-      .map { case (d, xs) => d -> xs.map(x => x._2 -> (x._3, x._4)).toMap }
-    LogEntry(
-      lines.collectFirst { case l if l.startsWith("action=") => l.stripPrefix("action=") }.getOrElse("?"),
-      lines.filter(_.startsWith("add=")).map(_.stripPrefix("add=")),
-      lines.filter(_.startsWith("remove=")).map(_.stripPrefix("remove=")),
-      lines.collectFirst { case l if l.startsWith("schema=") => l.stripPrefix("schema=") },
-      stats,
-      lines.collectFirst { case l if l.startsWith("txn=") =>
-        val Array(app, ver) = l.stripPrefix("txn=").split("\t", 2)
-        (dec(app), ver.toLong)
-      },
-      lines.filter(_.startsWith("constraint="))
-        .map(_.stripPrefix("constraint=").split("\t", 2))
-        .collect { case Array(n, e) => (dec(n), dec(e)) },
-      lines.filter(_.startsWith("dropconstraint="))
-        .map(l => dec(l.stripPrefix("dropconstraint="))),
-      lines.filter(_.startsWith("dvadd=")).map(_.stripPrefix("dvadd=")),
-      lines.filter(_.startsWith("gencol="))
-        .map(_.stripPrefix("gencol=").split("\t", 2))
-        .collect { case Array(n, e) => (dec(n), dec(e)) },
-      lines.filter(_.startsWith("dropgencol="))
-        .map(l => dec(l.stripPrefix("dropgencol="))),
-      lines.collectFirst { case l if l.startsWith("ts=") =>
-        l.stripPrefix("ts=").toLong
-      },
-      lines.collectFirst { case l if l.startsWith("cdf=") =>
-        l.stripPrefix("cdf=")
-      },
-      lines.filter(_.startsWith("rename="))
-        .map(_.stripPrefix("rename=").split("\t", 2))
-        .collect { case Array(o, n) => (dec(o), dec(n)) },
-      lines.filter(_.startsWith("dropcol="))
-        .map(l => dec(l.stripPrefix("dropcol="))),
-      lines.filter(_.startsWith("undropcol="))
-        .map(l => dec(l.stripPrefix("undropcol="))),
-      lines.filter(_.startsWith("setprop="))
-        .map(_.stripPrefix("setprop=").split("\t", 2))
-        .collect { case Array(k, v) => (dec(k), dec(v)) },
-      lines.filter(_.startsWith("unsetprop="))
-        .map(l => dec(l.stripPrefix("unsetprop="))),
-      lines.filter(_.startsWith("copied="))
-        .map(l => dec(l.stripPrefix("copied="))),
-      // tolerant like the rename=/setprop= parsers above: a malformed
-      // metrics line (foreign writer, truncated write) degrades to
-      // no-metrics — it must never brick log replay for the whole table
-      lines.collectFirst { case l if l.startsWith("metrics=") => l }
-        .flatMap(_.stripPrefix("metrics=").split("\t", 2) match {
-          case Array(nf, nr) =>
-            scala.util.Try((nf.toLong, nr.toLong)).toOption
-          case _ => None
-        }))
+    LogEntry.parse(slurp(new Path(logDir, s"${vname(v)}.log")))
   })
 
   /** Largest checkpoint version ≤ `atOrBefore`, from one directory listing. */
@@ -218,85 +141,43 @@ final case class VersionedTable(
       .filter(_ <= atOrBefore)
       .maxOption
 
-  /** Relative data dirs live at version `v`: replay from the nearest
-    * checkpoint (Delta's log-checkpoint trick — `_last_checkpoint` + tail
-    * replay), so a read opens O(checkpointInterval) log files however long
-    * the table's history, instead of O(commits) — which compounds to
-    * O(commits²) over a CDC table's life.
+  private var checkpointWarned = false
+
+  /** Table state at version `v`: the latest checkpoint's parse folded
+    * forward through the tail's log entries (Delta's `_last_checkpoint` +
+    * tail replay), memoized per version, so a read opens
+    * O(checkpointInterval) log files however long the history. A
+    * checkpoint that fails to open — e.g. the HDFS delete+rename gap of a
+    * concurrent rewrite — is skipped with one warning per handle: the log
+    * alone is always a complete record, replay just costs more.
     */
-  /** Generic checkpoint + tail replay with per-version memoization: the
-    * state at version `v` is the latest checkpoint's parse (a checkpoint
-    * that fails to open — e.g. the HDFS delete+rename gap of a concurrent
-    * rewrite — is IGNORED, not an error: the log alone is always a
-    * complete record, replay just costs more) folded forward through the
-    * tail's log entries. Every derived table state (live dirs, txn
-    * watermarks, constraints, generated columns, deletion vectors) replays
-    * through here, so each is O(checkpointInterval) log reads however long
-    * the history.
-    */
-  private def replayed[T](cache: scala.collection.mutable.HashMap[Int, T], zero: T,
-                          fromCheckpoint: Seq[String] => T,
-                          step: (T, LogEntry) => T)(v: Int): T = {
-    if (v <= 0) return zero
-    cache.get(v) match {
-      case Some(x) => x
+  private[graft] def snapshotAt(v: Int): Snapshot = {
+    if (v <= 0) return Snapshot.empty
+    snapshots.get(v) match {
+      case Some(s) => s
       case None =>
-        latestCheckpoint(v).foreach { cv =>
-          if (!cache.contains(cv))
-            scala.util.Try(slurp(new Path(logDir, s"${vname(cv)}.checkpoint")))
-              .foreach(lines => cache(cv) = fromCheckpoint(lines))
+        latestCheckpoint(v).filterNot(snapshots.contains).foreach { cv =>
+          val file = new Path(logDir, s"${vname(cv)}.checkpoint")
+          scala.util.Try(slurp(file)) match {
+            case scala.util.Success(lines) => snapshots(cv) = Snapshot.fromCheckpoint(lines)
+            case scala.util.Failure(e) =>
+              if (!checkpointWarned) {
+                checkpointWarned = true
+                org.slf4j.LoggerFactory.getLogger(getClass).warn(
+                  s"checkpoint $file is unreadable (${e.getMessage}); " +
+                    "replaying the log without it")
+              }
+          }
         }
-        val start = cache.keys.filter(_ <= v).maxOption.getOrElse(0)
-        var x = cache.getOrElse(start, zero)
-        var i = start + 1
-        while (i <= v) {
-          x = step(x, readLog(i))
-          cache(i) = x
-          i += 1
+        val start = snapshots.keys.filter(_ <= v).maxOption.getOrElse(0)
+        var s = snapshots.getOrElse(start, Snapshot.empty)
+        for (i <- start + 1 to v) {
+          s = s.step(readLog(i))
+          snapshots(i) = s
         }
-        x
+        s
     }
   }
-
-  private def prefixed(lines: Seq[String], p: String): Seq[String] =
-    lines.filter(_.startsWith(p)).map(_.stripPrefix(p))
-
-  private def kvLines(lines: Seq[String], p: String): Map[String, String] =
-    prefixed(lines, p).map(_.split("\t", 2))
-      .collect { case Array(n, e) =>
-        java.net.URLDecoder.decode(n, "UTF-8") -> java.net.URLDecoder.decode(e, "UTF-8")
-      }.toMap
-
-  private def liveDirs(v: Int): Seq[String] =
-    replayed[Seq[String]](liveCache, Seq.empty,
-      prefixed(_, "live="),
-      (dirs, e) => dirs.filterNot(e.removes.contains) ++ e.adds)(v)
-
-  private val dvCache = scala.collection.mutable.HashMap.empty[Int, Seq[String]]
-
-  /** Live deletion-vector (tombstone) dirs as of version `v` — the
-    * merge-on-read side of [[deleteMor]]. Tombstones are PARTITION-scoped:
-    * any commit that restages a partition's data (merge/delete/update —
-    * whose staged output is the DV-aware read, so suppressed rows stay
-    * gone) kills that partition's tombstones in the same replay step, and
-    * whole-table rewrites (overwrite/compact) or [[restore]] reset the set
-    * to exactly what the commit declares. Replayed checkpoint + tail
-    * (`livedv=` lines) like [[liveDirs]].
-    */
-  private[graft] def liveDvDirs(v: Int): Seq[String] =
-    replayed[Seq[String]](dvCache, Seq.empty,
-      prefixed(_, "livedv="),
-      (dv, e) => e.action match {
-        case "overwrite" | "compact" | "restore" | "clone" | "fsck" => e.dvAdds
-        // append commits add dirs WITHOUT restaging the partition — its
-        // tombstones must survive, or suppressed rows would resurrect
-        // (append refuses keys colliding with tombstoned rows for the
-        // same reason: the new dir never absorbs the suppressed state)
-        case "insert" => dv ++ e.dvAdds
-        case _ =>
-          val touched = e.adds.map(partOf).toSet
-          dv.filterNot(d => touched.contains(partOf(d))) ++ e.dvAdds
-      })(v)
 
   /** Anti-join `df` against version `v`'s live tombstones on
     * (partition cols + PK). The tombstone side is broadcast — the
@@ -311,7 +192,7 @@ final case class VersionedTable(
     * one comparison.
     */
   private def withTombstones(df: DataFrame, v: Int): DataFrame = {
-    val dvs = liveDvDirs(v)
+    val dvs = snapshotAt(v).dvDirs
     if (dvs.isEmpty) return df
     val keys = (partitionCols ++ pk).distinct
     val groups = dvs.groupBy(_.split("/")(0))
@@ -331,49 +212,20 @@ final case class VersionedTable(
     l.join(broadcast(r), cond, "left_anti")
   }
 
-  private val txnCache = scala.collection.mutable.HashMap.empty[Int, Map[String, Long]]
-
-  /** Highest committed transaction version per writer app as of table
-    * version `v` (Delta's txnAppId/txnVersion idempotency ledger).
-    * Replayed checkpoint + tail like [[liveDirs]] — checkpoints carry
-    * `txnwm=` watermark lines — so the idempotent-merge check stays
-    * O(checkpointInterval) however long the table's history.
-    */
-  private def txnWatermarks(v: Int): Map[String, Long] =
-    replayed[Map[String, Long]](txnCache, Map.empty,
-      lines => kvLines(lines, "txnwm=").map { case (a, x) => a -> x.toLong },
-      (wm, e) => e.txn.fold(wm) { case (a, x) =>
-        if (wm.get(a).forall(_ < x)) wm.updated(a, x) else wm
-      })(v)
-
   /** True when `txn` (app, version) is already committed at or below the
     * current table version — the caller's write is a replay and must
     * no-op. None never skips.
     */
   private def txnAlreadyApplied(txn: Option[(String, Long)]): Boolean =
     txn.exists { case (app, ver) =>
-      txnWatermarks(currentVersion).get(app).exists(_ >= ver)
+      snapshotAt(currentVersion).txnWatermarks.get(app).exists(_ >= ver)
     }
 
   private def txnLines(txn: Option[(String, Long)]): Seq[String] =
-    txn.toSeq.map { case (app, ver) =>
-      s"txn=${java.net.URLEncoder.encode(app, "UTF-8")}\t$ver"
-    }
-
-  private val constrCache = scala.collection.mutable.HashMap.empty[Int, Map[String, String]]
-
-  /** Active CHECK constraints (name → boolean SQL expression) as of table
-    * version `v`. Replayed checkpoint + tail like [[liveDirs]] —
-    * checkpoints carry `constr=` lines — so the write-path lookup stays
-    * O(checkpointInterval) however long the history.
-    */
-  private def constraintsAt(v: Int): Map[String, String] =
-    replayed[Map[String, String]](constrCache, Map.empty,
-      kvLines(_, "constr="),
-      (m, e) => (m ++ e.constraintsAdded) -- e.constraintsDropped)(v)
+    txn.toSeq.map { case (app, ver) => s"txn=${enc(app)}\t$ver" }
 
   /** Active CHECK constraints at the current version. */
-  def constraints: Map[String, String] = constraintsAt(currentVersion)
+  def constraints: Map[String, String] = snapshotAt(currentVersion).constraints
 
   /** Add a CHECK constraint (Delta's ALTER TABLE ADD CONSTRAINT): verifies
     * every EXISTING row first (one scan, the Delta trade), then records the
@@ -390,11 +242,10 @@ final case class VersionedTable(
     // FAIL (the fail-fast pattern every other mutator uses) instead of
     // recording a constraint the unvalidated winner's rows may violate
     val v = currentVersion
-    require(!constraintsAt(v).contains(name), s"constraint '$name' already exists")
+    require(!snapshotAt(v).constraints.contains(name), s"constraint '$name' already exists")
     val cur = readVersion(v)
     val bad = cur.filter(expr(exprSql) <=> false).count()
     if (bad > 0) throw new ConstraintViolationException(name, exprSql, bad)
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     commitMetadataOnly("constraint", v + 1, cur.schema.json,
       Seq(s"constraint=${enc(name)}\t${enc(exprSql)}"),
       s"addConstraint($name)")
@@ -403,25 +254,11 @@ final case class VersionedTable(
   /** Remove a CHECK constraint as a metadata-only commit. */
   def dropConstraint(name: String): Unit = {
     val v = currentVersion
-    require(constraintsAt(v).contains(name), s"constraint '$name' does not exist")
+    require(snapshotAt(v).constraints.contains(name), s"constraint '$name' does not exist")
     commitMetadataOnly("dropconstraint", v + 1, readVersion(v).schema.json,
-      Seq(s"dropconstraint=${java.net.URLEncoder.encode(name, "UTF-8")}"),
+      Seq(s"dropconstraint=${enc(name)}"),
       s"dropConstraint($name)")
   }
-
-  private val propsCache = scala.collection.mutable.HashMap.empty[Int, Map[String, String]]
-
-  /** Free-form table properties (Delta's TBLPROPERTIES) as of version `v`
-    * — replayed checkpoint (`tprop=` lines) + tail like [[constraintsAt]].
-    * These are USER metadata (comments, pipeline tags, retention hints);
-    * the layout keys the CREATE surface consumes ('pk', 'partition', …)
-    * live in the layout sidecar, not here, and [[GraftSql]] refuses to SET
-    * them after the fact.
-    */
-  private def propertiesAt(v: Int): Map[String, String] =
-    replayed[Map[String, String]](propsCache, Map.empty,
-      kvLines(_, "tprop="),
-      (m, e) => (m ++ e.propsSet) -- e.propsUnset)(v)
 
   /** Table properties at the current version. ENGINE-internal keys (the
     * `graft.` namespace — identity-column specs and watermarks ride the
@@ -430,10 +267,12 @@ final case class VersionedTable(
     * declared-map-supersedes semantics never unsets them (replacing a
     * table must not silently reset its identity high watermark — id
     * reuse would corrupt downstream joins; Delta's replace resets it,
-    * a divergence documented in SURVEY §8).
+    * a divergence documented in SURVEY §8). These are USER metadata
+    * (comments, pipeline tags, retention hints); the layout keys CREATE
+    * consumes ('pk', 'partition', …) live in the layout sidecar instead.
     */
   def properties: Map[String, String] =
-    propertiesAt(currentVersion)
+    snapshotAt(currentVersion).properties
       // case-INSENSITIVE, matching the set/unset guards: a key like
       // 'GRAFT.x' must be internal everywhere or nowhere — visible here
       // but refused by unsetProperties would be a permanently stuck key
@@ -441,7 +280,7 @@ final case class VersionedTable(
 
   /** Table properties as of version `v` (time-travel read of metadata). */
   def propertiesAsOfVersion(v: Int): Map[String, String] =
-    propertiesAt(v)
+    snapshotAt(v).properties
       .filterNot(_._1.toLowerCase.startsWith(VersionedTable.InternalPropPrefix))
 
   /** Set (upsert) table properties as one metadata-only commit — Delta's
@@ -470,27 +309,13 @@ final case class VersionedTable(
       s"TBLPROPERTIES ${internalHit.mkString(",")}: the 'graft.' namespace " +
         "is reserved for engine state and cannot be set directly")
     val v = currentVersion
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     commitMetadataOnly("setproperties", v + 1, readVersion(v).schema.json,
       kvs.toSeq.sortBy(_._1).map { case (k, x) => s"setprop=${enc(k)}\t${enc(x)}" },
       s"setProperties(${kvs.keys.toSeq.sorted.mkString(",")})")
   }
 
-  private val copiedCache = scala.collection.mutable.HashMap.empty[Int, Set[String]]
-
-  /** Source files already ingested by [[copyAppend]] as of version `v` —
-    * the COPY INTO idempotency ledger (Delta's loaded-file tracking),
-    * replayed checkpoint (`copiedf=` lines) + tail. Bounded by files ever
-    * copied, names only — never rows.
-    */
-  private def copiedFilesAt(v: Int): Set[String] =
-    replayed[Set[String]](copiedCache, Set.empty,
-      lines => prefixed(lines, "copiedf=")
-        .map(java.net.URLDecoder.decode(_, "UTF-8")).toSet,
-      (s, e) => s ++ e.copied)(v)
-
   /** The COPY INTO ledger at the current version. */
-  def copiedFiles: Set[String] = copiedFilesAt(currentVersion)
+  def copiedFiles: Set[String] = snapshotAt(currentVersion).copiedFiles
 
   /** Remove table properties as one metadata-only commit — Delta's ALTER
     * TABLE … UNSET TBLPROPERTIES. Unknown keys are refused unless
@@ -512,7 +337,7 @@ final case class VersionedTable(
     // user-facing existence semantics see the USER property map — an
     // engine key must read as nonexistent here (case-insensitive, same
     // comparison as the guards and the `properties` view)
-    val have = propertiesAt(v).keySet
+    val have = snapshotAt(v).properties.keySet
       .filterNot(_.toLowerCase.startsWith(VersionedTable.InternalPropPrefix))
     val missing = keys.filterNot(have)
     if (!ifExists) require(missing.isEmpty,
@@ -520,28 +345,15 @@ final case class VersionedTable(
     val drop = keys.filter(have)
     if (drop.isEmpty) return
     commitMetadataOnly("unsetproperties", v + 1, readVersion(v).schema.json,
-      drop.sorted.map(k => s"unsetprop=${java.net.URLEncoder.encode(k, "UTF-8")}"),
+      drop.sorted.map(k => s"unsetprop=${enc(k)}"),
       s"unsetProperties(${drop.sorted.mkString(",")})")
   }
-
-  private val gencolCache = scala.collection.mutable.HashMap.empty[Int, Map[String, String]]
-
-  /** Generated-column definitions (name → SQL expression) as of version
-    * `v` — Delta's generated columns: a write batch that OMITS the column
-    * gets it derived automatically; a batch that supplies it is verified
-    * against the expression. Replayed checkpoint + tail (`genc=` lines)
-    * like [[constraintsAt]].
-    */
-  private def generatedColsAt(v: Int): Map[String, String] =
-    replayed[Map[String, String]](gencolCache, Map.empty,
-      kvLines(_, "genc="),
-      (m, e) => (m ++ e.gencolsAdded) -- e.gencolsDropped)(v)
 
   /** Generated-column definitions at the current version (plus any
     * CREATE-declared definitions still buffered before the first commit).
     */
   def generatedCols: Map[String, String] =
-    (if (exists) generatedColsAt(currentVersion)
+    (if (exists) snapshotAt(currentVersion).generatedCols
      else Map.empty[String, String]) ++ pendingGeneratedCols
 
   /** Register `name` as a generated column defined by `exprSql` (Delta's
@@ -552,14 +364,13 @@ final case class VersionedTable(
     require(exists, "addGeneratedColumn on a table with no commits")
     // pinned-version validate-then-claim, exactly as [[addConstraint]]
     val v = currentVersion
-    require(!generatedColsAt(v).contains(name), s"generated column '$name' already defined")
+    require(!snapshotAt(v).generatedCols.contains(name), s"generated column '$name' already defined")
     val cur = readVersion(v)
     require(cur.columns.contains(name),
       s"generated column '$name' must exist in the table schema")
     val bad = cur.filter(!(col(name) <=> expr(exprSql))).count()
     if (bad > 0) throw new ConstraintViolationException(
       s"generated:$name", exprSql, bad)
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     commitMetadataOnly("gencol", v + 1, cur.schema.json,
       Seq(s"gencol=${enc(name)}\t${enc(exprSql)}"),
       s"addGeneratedColumn($name)")
@@ -581,7 +392,6 @@ final case class VersionedTable(
   private var pendingGeneratedCols: Map[String, String] = Map.empty
 
   private def pendingGeneratedLines: Seq[String] = {
-    def enc(x: String) = java.net.URLEncoder.encode(x, "UTF-8")
     pendingGeneratedCols.toSeq.sortBy(_._1).map { case (n, e) =>
       s"gencol=${enc(n)}\t${enc(e)}"
     }
@@ -603,7 +413,7 @@ final case class VersionedTable(
   private var pendingNotNull: Set[String] = Set.empty
 
   private def defaultsAt(v: Int): Map[String, (String, String)] =
-    propertiesAt(v).collect {
+    snapshotAt(v).properties.collect {
       case (k, enc) if k.startsWith("graft.default.col.") =>
         val Array(dt, sql) = enc.split("\t", 2)
         k.stripPrefix("graft.default.col.") -> ((dt, sql))
@@ -627,7 +437,6 @@ final case class VersionedTable(
     val sch = tableSchema
     lcs.keys.foreach(n => require(sch.fieldNames.exists(_.equalsIgnoreCase(n)),
       s"default column '$n' must exist in the table schema"))
-    def enc(x: String) = java.net.URLEncoder.encode(x, "UTF-8")
     commitMetadataOnly("defaults", v + 1, readVersion(v).schema.json,
       lcs.toSeq.sortBy(_._1).map { case (n, (dt, sql)) =>
         s"setprop=${enc(s"graft.default.col.$n")}\t${enc(s"$dt\t$sql")}" },
@@ -635,7 +444,6 @@ final case class VersionedTable(
   }
 
   private def pendingDefaultLines: Seq[String] = {
-    def enc(x: String) = java.net.URLEncoder.encode(x, "UTF-8")
     pendingDefaults.toSeq.sortBy(_._1).map { case (n, (dt, sql)) =>
       s"setprop=${enc(s"graft.default.col.$n")}\t${enc(s"$dt\t$sql")}"
     }
@@ -660,7 +468,7 @@ final case class VersionedTable(
     * NULL. lc logical name → (catalog type, frozen literal as string).
     */
   private def existDefaultsAt(v: Int): Map[String, (String, String)] =
-    propertiesAt(v).collect {
+    snapshotAt(v).properties.collect {
       case (k, enc) if k.startsWith("graft.existdefault.col.") =>
         val Array(dt, value) = enc.split("\t", 2)
         k.stripPrefix("graft.existdefault.col.") -> ((dt, value))
@@ -683,7 +491,6 @@ final case class VersionedTable(
     val v = currentVersion
     val lc = name.toLowerCase
     require(defaultsAt(v).contains(lc), s"column '$name' has no DEFAULT")
-    def enc(x: String) = java.net.URLEncoder.encode(x, "UTF-8")
     commitMetadataOnly("dropdefault", v + 1, readVersion(v).schema.json,
       Seq(s"unsetprop=${enc(s"graft.default.col.$lc")}"),
       s"dropDefault($name)")
@@ -707,7 +514,7 @@ final case class VersionedTable(
     * column name.
     */
   private def identitySpecsAt(v: Int): Map[String, VersionedTable.IdentitySpec] =
-    propertiesAt(v).collect {
+    snapshotAt(v).properties.collect {
       case (k, enc) if k.startsWith("graft.identity.col.") =>
         k.stripPrefix("graft.identity.col.") ->
           VersionedTable.decodeIdentitySpec(enc)
@@ -729,7 +536,7 @@ final case class VersionedTable(
     */
   def identityWatermark(name: String): Option[Long] =
     if (!exists) None
-    else propertiesAt(currentVersion)
+    else snapshotAt(currentVersion).properties
       .get(VersionedTable.identityWmKey(name)).map(_.toLong)
 
   /** Declare identity columns. On a table with no commits the specs
@@ -765,7 +572,6 @@ final case class VersionedTable(
       existing.get(n.toLowerCase).foreach(old => require(old == s,
         s"identity column '$n' is already declared with a different spec"))
     }
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     // Seed the watermark from values the column ALREADY holds (one
     // syncIdentity-style aggregate per declared column, riding the same
     // commit): declaring BY DEFAULT identity on a populated BIGINT column
@@ -809,7 +615,6 @@ final case class VersionedTable(
     * (consumed by [[commit]]; cleared once a commit lands).
     */
   private def pendingIdentityLines: Seq[String] = {
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     pendingIdentitySpecs.toSeq.sortBy(_._1).map { case (n, s) =>
       s"setprop=${enc(VersionedTable.identitySpecKey(n))}\t${enc(s.encode)}"
     }
@@ -923,7 +728,6 @@ final case class VersionedTable(
           .cast(org.apache.spark.sql.types.LongType).as(s"__wm_$lc")
       }
       val row = staged.agg(aggs.head, aggs.tail: _*).head()
-      def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
       present.zipWithIndex.flatMap { case ((lc, _, sp), i) =>
         if (row.isNullAt(i)) None
         else {
@@ -964,7 +768,6 @@ final case class VersionedTable(
     // pre-first-allocation base, not past it
     val wm = if (sp.step > 0) math.max(seen, sp.start - sp.step)
              else math.min(seen, sp.start - sp.step)
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     commitMetadataOnly("syncidentity", v + 1, readVersion(v).schema.json,
       Seq(s"setprop=${enc(VersionedTable.identityWmKey(lc))}\t${enc(wm.toString)}"),
       s"syncIdentity($name)")
@@ -1009,7 +812,7 @@ final case class VersionedTable(
     * (fpp, declared numItems override).
     */
   private def bloomIndexAt(v: Int): Map[String, (Double, Option[Long])] =
-    propertiesAt(v).collect {
+    snapshotAt(v).properties.collect {
       case (k, enc) if k.startsWith("graft.bloom.col.") =>
         val parts = enc.split("\t", 2)
         k.stripPrefix("graft.bloom.col.") ->
@@ -1202,7 +1005,6 @@ final case class VersionedTable(
         clash.keys.mkString(",")} — DROP BLOOMFILTER INDEX first")
     val fresh = specs.filterNot { case (c, s) => existing.get(c).contains(s) }
     if (fresh.nonEmpty) {
-      def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
       commitMetadataOnly("bloomindex", v + 1, readVersion(v).schema.json,
         fresh.toSeq.sortBy(_._1).map { case (c, (fpp, ni)) =>
           s"setprop=${enc(s"graft.bloom.col.$c")}\t${
@@ -1211,7 +1013,7 @@ final case class VersionedTable(
     }
     // backfill: live dirs lacking a sidecar for any indexed column
     val all = specs ++ (existing -- specs.keySet)
-    val missing = liveDirs(currentVersion).filter(d =>
+    val missing = snapshotAt(currentVersion).liveDirs.filter(d =>
       !d.startsWith(ExtPrefix) &&
         all.keys.exists(c => bloomTypeOf(c).exists(dt =>
           !fs.exists(bloomSidecarPath(d, c, bloomTag(dt))))))
@@ -1236,7 +1038,6 @@ final case class VersionedTable(
         c
       }
     require(targets.nonEmpty, "no bloom index to drop")
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     commitMetadataOnly("dropbloomindex", v + 1, readVersion(v).schema.json,
       targets.sorted.map(c => s"unsetprop=${enc(s"graft.bloom.col.$c")}"),
       s"dropBloomIndex(${targets.sorted.mkString(",")})")
@@ -1280,57 +1081,9 @@ final case class VersionedTable(
     }
   }
 
-  private val colmapCache =
-    scala.collection.mutable.HashMap.empty[Int, Map[String, String]]
-
-  /** Column-mapping state (LOGICAL name → PHYSICAL name) as of version
-    * `v` — Delta's column mapping re-expressed over the commit log: a
-    * [[renameColumn]] changes only the logical name; the physical name —
-    * what the parquet files and partition paths actually carry — is the
-    * column's ORIGINAL name, fixed forever. Writers translate logical →
-    * physical before staging, readers translate back, so files written in
-    * any era read under the current logical schema with no rewrite.
-    * Identity mappings are never stored. Replayed checkpoint + tail
-    * (`colmap=` lines) like [[constraintsAt]]; `rename=old\tnew` replay
-    * moves the binding: physical(new) = physical-or-identity(old).
-    */
-  private def colMapAt(v: Int): Map[String, String] =
-    replayed[Map[String, String]](colmapCache, Map.empty,
-      kvLines(_, "colmap="),
-      (m, e) =>
-        if (e.renames.isEmpty) m
-        else {
-          // one entry's renames apply ATOMICALLY: every old name resolves
-          // against the pre-entry state, so a restore emitting a swap set
-          // (x→y, y→x) lands correctly instead of chaining through itself.
-          // A binding resolving back to identity (a restore undoing a
-          // rename) is DROPPED, keeping the never-store-identity invariant
-          // (and the cm.isEmpty fast paths) true
-          val resolved = e.renames.map { case (o, n) => n -> m.getOrElse(o, o) }
-            .filter { case (n, p) => n != p }
-          (m -- e.renames.map(_._1)) ++ resolved
-        })(v)
-
-  private val droppedCache =
-    scala.collection.mutable.HashMap.empty[Int, Set[String]]
-
-  /** PHYSICAL names of columns dropped (and not since resurrected by a
-    * restore) as of version `v`. A dropped column's data stays in the old
-    * files forever — [[frameFor]] projects it away, and [[toPhysical]]
-    * refuses a NEW column re-using the name (two eras' files would then
-    * disagree on what that physical column holds; Delta prevents the same
-    * with uuid physical names). `dropcol=`/`undropcol=` log lines,
-    * `dropped=` checkpoint lines.
-    */
-  private def droppedAt(v: Int): Set[String] =
-    replayed[Set[String]](droppedCache, Set.empty,
-      ls => prefixed(ls, "dropped=")
-        .map(java.net.URLDecoder.decode(_, "UTF-8")).toSet,
-      (s, e) => s ++ e.drops -- e.undrops)(v)
-
   /** Physical (on-disk) name of logical column `c` at the current version. */
   private def physicalOf(c: String): String = {
-    val cm = colMapAt(currentVersion)
+    val cm = snapshotAt(currentVersion).colMap
     cm.collectFirst { case (l, p) if l.equalsIgnoreCase(c) => p }.getOrElse(c)
   }
 
@@ -1338,7 +1091,7 @@ final case class VersionedTable(
     * read-side translation step between eras).
     */
   private def physicalAt(df: DataFrame, v: Int): DataFrame = {
-    val cm = colMapAt(v)
+    val cm = snapshotAt(v).colMap
     if (cm.isEmpty) return df
     df.select(df.columns.map(c => col(c).as(
       cm.collectFirst { case (l, p) if l.equalsIgnoreCase(c) => p }.getOrElse(c))).toSeq: _*)
@@ -1351,8 +1104,8 @@ final case class VersionedTable(
     * uuid physical names; graft refuses the collision instead).
     */
   private def toPhysical(df: DataFrame): DataFrame = {
-    val cm = colMapAt(currentVersion)
-    val dropped = droppedAt(currentVersion)
+    val cm = snapshotAt(currentVersion).colMap
+    val dropped = snapshotAt(currentVersion).dropped
     if (cm.isEmpty && dropped.isEmpty) return df
     val retired = cm.collect {
       case (l, p) if !l.equalsIgnoreCase(p) => p.toLowerCase
@@ -1372,7 +1125,7 @@ final case class VersionedTable(
     * of renames resolve without intermediate collisions.
     */
   private def toLogical(df: DataFrame, v: Int): DataFrame = {
-    val cm = colMapAt(v)
+    val cm = snapshotAt(v).colMap
     if (cm.isEmpty) return df
     val inv = cm.map(_.swap)
     df.select(df.columns.map(c => col(c).as(
@@ -1398,6 +1151,7 @@ final case class VersionedTable(
   def renameColumn(oldName: String, newName: String): Unit = {
     require(exists, "renameColumn on a table with no commits")
     val v = currentVersion
+    val snap = snapshotAt(v)
     val sch = schemaAt(v)
       .getOrElse(sys.error(s"version $v has no recorded schema"))
     require(sch.fieldNames.exists(_.equalsIgnoreCase(oldName)),
@@ -1410,27 +1164,26 @@ final case class VersionedTable(
     require(!identityCols.contains(oldName.toLowerCase),
       s"cannot rename '$oldName': identity columns keep their name (their " +
         "spec and watermark are keyed by it)")
-    val referencedBy = (constraintsAt(v) ++ generatedColsAt(v)).collect {
+    val referencedBy = (snap.constraints ++ snap.generatedCols).collect {
       case (n, e) if exprRefs(e).exists(_.equalsIgnoreCase(oldName)) => n
     }
     require(referencedBy.isEmpty,
       s"cannot rename '$oldName': referenced by ${referencedBy.mkString(",")}")
-    val cm = colMapAt(v)
+    val cm = snap.colMap
     val physOld = cm.collectFirst {
       case (l, p) if l.equalsIgnoreCase(oldName) => p }.getOrElse(oldName)
     val retired = cm.collect { case (l, p) if !l.equalsIgnoreCase(p) => p }
     require(!retired.exists(p => p.equalsIgnoreCase(newName) && !p.equalsIgnoreCase(physOld)),
       s"'$newName' still names retired on-disk data — pick a different name")
-    require(!droppedAt(v).exists(_.equalsIgnoreCase(newName)),
+    require(!snap.dropped.exists(_.equalsIgnoreCase(newName)),
       s"'$newName' was dropped and still names old data on disk — " +
         "pick a different name")
     val newSchema = org.apache.spark.sql.types.StructType(sch.fields.map(f =>
       if (f.name.equalsIgnoreCase(oldName)) f.copy(name = newName) else f))
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     // default/comment declarations are keyed by LOGICAL name — move them
     // with the rename, atomically (set/unset keys are disjoint, so the
     // replay fold is order-safe)
-    val props = propertiesAt(v)
+    val props = snap.properties
     val moveDefaults = Seq("graft.default.col.", "graft.existdefault.col.",
         "graft.comment.col.", "graft.notnull.col.")
       .flatMap { pre =>
@@ -1462,9 +1215,9 @@ final case class VersionedTable(
       .getOrElse(sys.error(s"version $v has no recorded schema"))
     require(!sch.fieldNames.exists(_.equalsIgnoreCase(name)),
       s"column '$name' already exists")
-    val cm = colMapAt(v)
+    val cm = snapshotAt(v).colMap
     val retired = cm.collect {
-      case (l, p) if !l.equalsIgnoreCase(p) => p } ++ droppedAt(v)
+      case (l, p) if !l.equalsIgnoreCase(p) => p } ++ snapshotAt(v).dropped
     require(!retired.exists(_.equalsIgnoreCase(name)),
       s"'$name' still names retired on-disk data — pick a different name")
     val newField = org.apache.spark.sql.types.StructField(
@@ -1499,7 +1252,6 @@ final case class VersionedTable(
         s"ADD COLUMN DEFAULT expression '$sql' evaluates to NULL — " +
           "declare the column without a default instead")
       val frozen = frozenRow.getString(0)
-      def enc(x: String) = java.net.URLEncoder.encode(x, "UTF-8")
       val lc = name.toLowerCase
       Seq(
         s"setprop=${enc(s"graft.default.col.$lc")}\t${enc(s"$dtCat\t$sql")}",
@@ -1583,7 +1335,7 @@ final case class VersionedTable(
     */
   def columnComments: Map[String, String] =
     if (!exists) Map.empty[String, String]
-    else propertiesAt(currentVersion).collect {
+    else snapshotAt(currentVersion).properties.collect {
       case (k, text) if k.startsWith("graft.comment.col.") =>
         k.stripPrefix("graft.comment.col.") -> text
     }
@@ -1597,7 +1349,6 @@ final case class VersionedTable(
     val v = currentVersion
     require(tableSchema.fieldNames.exists(_.equalsIgnoreCase(name)),
       s"column '$name' does not exist")
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     val key = s"graft.comment.col.${name.toLowerCase}"
     val line = comment match {
       case Some(text) => s"setprop=${enc(key)}\t${enc(text)}"
@@ -1614,7 +1365,7 @@ final case class VersionedTable(
     */
   def notNullCols: Set[String] =
     (if (!exists) Set.empty[String]
-     else propertiesAt(currentVersion).collect {
+     else snapshotAt(currentVersion).properties.collect {
        case (k, _) if k.startsWith("graft.notnull.col.") =>
          k.stripPrefix("graft.notnull.col.")
      }.toSet) ++ pendingNotNull
@@ -1631,7 +1382,6 @@ final case class VersionedTable(
   }
 
   private def pendingNotNullLines: Seq[String] = {
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     pendingNotNull.toSeq.sorted.map(n =>
       s"setprop=${enc(s"graft.notnull.col.$n")}\t1")
   }
@@ -1659,7 +1409,6 @@ final case class VersionedTable(
     if (nulls > 0)
       throw new ConstraintViolationException(
         s"notnull:${name.toLowerCase}", s"$name IS NOT NULL", nulls)
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     commitMetadataOnly("set_not_null", v + 1, readVersion(v).schema.json,
       Seq(s"setprop=${enc(s"graft.notnull.col.${name.toLowerCase}")}\t1"),
       s"setNotNull($name)")
@@ -1676,9 +1425,8 @@ final case class VersionedTable(
         "structural and cannot be dropped")
     val v = currentVersion
     val key = s"graft.notnull.col.${name.toLowerCase}"
-    require(propertiesAt(v).contains(key),
+    require(snapshotAt(v).properties.contains(key),
       s"column '$name' has no NOT NULL constraint")
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     commitMetadataOnly("drop_not_null", v + 1, readVersion(v).schema.json,
       Seq(s"unsetprop=${enc(key)}"), s"dropNotNull($name)")
   }
@@ -1697,6 +1445,7 @@ final case class VersionedTable(
   def dropColumn(name: String): Unit = {
     require(exists, "dropColumn on a table with no commits")
     val v = currentVersion
+    val snap = snapshotAt(v)
     val sch = schemaAt(v)
       .getOrElse(sys.error(s"version $v has no recorded schema"))
     require(sch.fieldNames.exists(_.equalsIgnoreCase(name)),
@@ -1705,20 +1454,19 @@ final case class VersionedTable(
     require(!(pk ++ partitionCols).exists(_.equalsIgnoreCase(name)),
       s"cannot drop '$name': primary-key and partition columns are this " +
         "table handle's identity")
-    require(!generatedColsAt(v).keys.exists(_.equalsIgnoreCase(name)),
+    require(!snap.generatedCols.keys.exists(_.equalsIgnoreCase(name)),
       s"'$name' is a generated column — dropGeneratedColumn first")
     require(!identityCols.contains(name.toLowerCase),
       s"cannot drop '$name': it is an identity column")
-    val referencedBy = (constraintsAt(v) ++ generatedColsAt(v)).collect {
+    val referencedBy = (snap.constraints ++ snap.generatedCols).collect {
       case (n, e) if exprRefs(e).exists(_.equalsIgnoreCase(name)) => n
     }
     require(referencedBy.isEmpty,
       s"cannot drop '$name': referenced by ${referencedBy.mkString(",")}")
-    val binding = colMapAt(v).find(_._1.equalsIgnoreCase(name))
+    val binding = snap.colMap.find(_._1.equalsIgnoreCase(name))
     val phys = binding.map(_._2).getOrElse(name)
     val newSchema = org.apache.spark.sql.types.StructType(
       sch.fields.filterNot(_.name.equalsIgnoreCase(name)))
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     // a renamed column leaves a logical→physical binding behind; clear it
     // (rename L→P resolves to identity and drops out of the map), or a
     // FUTURE column re-using the logical name would silently write onto
@@ -1731,7 +1479,7 @@ final case class VersionedTable(
     // with it
     val clearDefaults = Seq("graft.default.col.", "graft.existdefault.col.",
         "graft.comment.col.", "graft.notnull.col.")
-      .flatMap(pre => propertiesAt(v).get(pre + name.toLowerCase)
+      .flatMap(pre => snap.properties.get(pre + name.toLowerCase)
         .map(_ => s"unsetprop=${enc(pre + name.toLowerCase)}"))
     commitMetadataOnly("drop_column", v + 1, newSchema.json,
       (s"dropcol=${enc(phys)}" +: clearBinding) ++ clearDefaults,
@@ -1811,9 +1559,7 @@ final case class VersionedTable(
 
   /** The table schema at the current version — a metadata read. */
   private def recordedSchema: Option[org.apache.spark.sql.types.StructType] =
-    schemaJsonAt(currentVersion)
-      .map(org.apache.spark.sql.types.DataType.fromJson(_)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    schemaAt(currentVersion)
 
   /** Null-fill table columns the batch omits — merge's
     * allowMissingColumns semantics, so constraint/generated-column
@@ -1833,7 +1579,7 @@ final case class VersionedTable(
     * Delta's write-side rule).
     */
   private def applyGenerated(df: DataFrame): DataFrame = {
-    val gs = generatedColsAt(currentVersion) ++ pendingGeneratedCols
+    val gs = snapshotAt(currentVersion).generatedCols ++ pendingGeneratedCols
     if (gs.isEmpty) return df
     // present/absent partitions case-INSENSITIVELY, matching analysis and
     // widenToTable: a batch supplying the column under different casing is
@@ -1886,7 +1632,7 @@ final case class VersionedTable(
     */
   private def enforceConstraints(df: DataFrame,
                                  commitLines: Seq[String] = Nil): Unit = {
-    val cs = constraintsAt(currentVersion)
+    val cs = snapshotAt(currentVersion).constraints
     // NOT NULL columns verify in the SAME single aggregate pass as CHECK
     // constraints — a batch that OMITS a NOT NULL column widens to NULL
     // and is correctly refused (unlike CHECK, where NULL passes). Runs
@@ -1897,7 +1643,7 @@ final case class VersionedTable(
     // atomic, so the batch lands under the post-replace rule set.
     val dropped = commitLines.collect {
       case l if l.startsWith("unsetprop=") =>
-        java.net.URLDecoder.decode(l.stripPrefix("unsetprop="), "UTF-8")
+        dec(l.stripPrefix("unsetprop="))
     }.filter(_.startsWith("graft.notnull.col."))
       .map(_.stripPrefix("graft.notnull.col.")).toSet
     val nn = notNullCols.diff(dropped).toSeq.sorted
@@ -1948,7 +1694,7 @@ final case class VersionedTable(
   def partitionPaths: Seq[String] = {
     require(partitionCols.nonEmpty, "partitionPaths on an unpartitioned table")
     if (!exists) Seq.empty
-    else liveDirs(currentVersion).map(partOf).distinct.sorted
+    else snapshotAt(currentVersion).liveDirs.map(partOf).distinct.sorted
   }
 
   /** [[partitionPaths]] as of version `v` — commit-log metadata only, no
@@ -1958,7 +1704,7 @@ final case class VersionedTable(
     */
   def partitionPathsAt(v: Int): Seq[String] = {
     require(partitionCols.nonEmpty, "partitionPathsAt on an unpartitioned table")
-    liveDirs(v).map(partOf).distinct.sorted
+    snapshotAt(v).liveDirs.map(partOf).distinct.sorted
   }
 
   /** One-row table-detail frame (Delta's DESCRIBE DETAIL): identity,
@@ -1971,7 +1717,7 @@ final case class VersionedTable(
     val sp = spark
     import sp.implicits._
     val v = currentVersion
-    val dirs = if (v == 0) Seq.empty[String] else liveDirs(v)
+    val dirs = snapshotAt(v).liveDirs
     val files = parquetFilesOf(dirs)
     Seq((path, v, pk.mkString(","), partitionCols.mkString(","),
       dirs.size.toLong, files.size.toLong, files.map(_.getLen).sum,
@@ -2038,8 +1784,8 @@ final case class VersionedTable(
     def rowsOf(dirs: Seq[String]): Option[Long] =
       sumFooterRows(parquetFilesOf(dirs).map(_.getPath))
     for {
-      data <- rowsOf(liveDirs(v))
-      dv <- rowsOf(liveDvDirs(v))
+      data <- rowsOf(snapshotAt(v).liveDirs)
+      dv <- rowsOf(snapshotAt(v).dvDirs)
     } yield data - dv
   }
 
@@ -2059,7 +1805,7 @@ final case class VersionedTable(
     val sp = spark
     import sp.implicits._
     val v = currentVersion
-    val dirs = if (v == 0) Seq.empty[String] else liveDirs(v)
+    val dirs = snapshotAt(v).liveDirs
     val rows = statsCols.map { c =>
       // statsFor maps are keyed by PHYSICAL, file-cased names (exactly
       // what statsLines/analyzeColumns record) — translate and match
@@ -2094,7 +1840,7 @@ final case class VersionedTable(
     val sp = spark
     import sp.implicits._
     val v = currentVersion
-    val dirs = if (v == 0) Seq.empty[String] else liveDirs(v)
+    val dirs = snapshotAt(v).liveDirs
     dirs.groupBy(partOf).toSeq.sortBy(_._1).map { case (p, ds) =>
       val files = parquetFilesOf(ds)
       (p, ds.size.toLong, files.size.toLong, files.map(_.getLen).sum,
@@ -2152,7 +1898,7 @@ final case class VersionedTable(
     */
   def readVersion(v: Int): DataFrame = {
     require(v >= 1 && v <= currentVersion, s"version $v out of range 1..$currentVersion")
-    withTombstones(frameFor(v, liveDirs(v)), v)
+    withTombstones(frameFor(v, snapshotAt(v).liveDirs), v)
   }
 
   // version root → version of the log entry that added it; a root is
@@ -2184,8 +1930,8 @@ final case class VersionedTable(
 
   /** Physical schema of the files under this table's own version root
     * `root`: the schema the adding entry recorded (`schemaAt(a)`), renamed
-    * to the physical names of that era (`colMapAt(a)`) — partition columns
-    * included, with their recorded types. A root is written by ONE
+    * to the physical names of that era (`snapshotAt(a).colMap`) —
+    * partition columns included, with their recorded types. A root is written by ONE
     * commit, so its files are schema-homogeneous and this is exactly what
     * they carry. Not for `ext=` roots: their foreign source may hold files
     * of different schemas, so only they are inferred.
@@ -2195,7 +1941,7 @@ final case class VersionedTable(
       s"table '$path': no log entry adds version root '$root'"))
     val sch = schemaAt(a).getOrElse(throw new IllegalStateException(
       s"table '$path': version $a records no schema"))
-    val cm = colMapAt(a)
+    val cm = snapshotAt(a).colMap
     org.apache.spark.sql.types.StructType(sch.fields.map(f =>
       cm.collectFirst { case (l, p) if l.equalsIgnoreCase(f.name) => p }
         .fold(f)(p => f.copy(name = p))))
@@ -2210,10 +1956,8 @@ final case class VersionedTable(
     if (groups.isEmpty) {
       // an empty commit is legal (e.g. overwrite with zero rows): the log
       // carries the schema, so the version reads as an empty frame
-      val json = schemaJsonAt(v)
+      val schema = schemaAt(v)
         .getOrElse(sys.error(s"version $v has no data and no recorded schema"))
-      val schema = org.apache.spark.sql.types.DataType.fromJson(json)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
@@ -2245,7 +1989,7 @@ final case class VersionedTable(
     val filled =
       if (eds.isEmpty) frames
       else {
-        val cm = colMapAt(v)
+        val cm = snapshotAt(v).colMap
         val physEd = eds.toSeq.map { case (lc, (dt, value)) =>
           (cm.collectFirst { case (l, p) if l.equalsIgnoreCase(lc) => p }
             .getOrElse(lc), dt, value)
@@ -2267,7 +2011,7 @@ final case class VersionedTable(
     // TYPE widen the pre-widen files still hold the narrow type (they
     // read under the widened one — a lossless upcast). Era-correct: time
     // travel reads each version under ITS recorded schema.
-    val diverged = droppedAt(v).nonEmpty || schemaAt(v).exists(sch =>
+    val diverged = snapshotAt(v).dropped.nonEmpty || schemaAt(v).exists(sch =>
       sch.fields.exists(f =>
         !out.columns.exists(_.equalsIgnoreCase(f.name)) ||
           out.schema.fields.exists(o =>
@@ -2332,7 +2076,7 @@ final case class VersionedTable(
   def readWhere(cond: Column): DataFrame = {
     val v = currentVersion
     require(v >= 1, "readWhere on a table with no commits")
-    val dirs = liveDirs(v)
+    val dirs = snapshotAt(v).liveDirs
     val full = withTombstones(frameFor(v, dirs), v)
     val filtered = full.filter(cond)
     // Resolve + fold the predicate against the real schema before matching
@@ -2379,30 +2123,6 @@ final case class VersionedTable(
   private val statsCache =
     scala.collection.mutable.HashMap.empty[String, Map[String, (String, String)]]
 
-  private val analyzeCache = scala.collection.mutable.HashMap
-    .empty[Int, Map[String, Map[String, (String, String)]]]
-
-  /** Stats recorded by ANALYZE commits (the backfill overlay): dir → col
-    * → (min, max), replayed checkpoint (`astat=` lines) + tail like every
-    * derived state — bounded by dirs ever analyzed, O(checkpointInterval)
-    * log reads however long the history. The overlay can never go stale:
-    * dirs are immutable, so stats recorded for one describe it forever.
-    */
-  private def analyzedAt(v: Int): Map[String, Map[String, (String, String)]] = {
-    def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-    replayed[Map[String, Map[String, (String, String)]]](analyzeCache,
-      Map.empty[String, Map[String, (String, String)]],
-      lines => prefixed(lines, "astat=").map(_.split("\t", 4))
-        .collect { case Array(d, c, mn, mx) => (dec(d), dec(c), dec(mn), dec(mx)) }
-        .groupBy(_._1).map { case (d, xs) =>
-          d -> xs.map(x => x._2 -> ((x._3, x._4))).toMap },
-      (s, e) =>
-        if (e.action != "analyze") s
-        else e.stats.foldLeft(s) { case (acc, (d, m)) =>
-          acc + (d -> (acc.getOrElse(d, Map.empty) ++ m))
-        })(v)
-  }
-
   /** Backfill per-dir min/max skipping stats for `colsIn` over the LIVE
     * dirs that lack them — ONE metadata-only commit, no data rewrite
     * (Delta's ANALYZE … FOR COLUMNS reshaped to graft's dir-granular
@@ -2427,7 +2147,7 @@ final case class VersionedTable(
     // prune path and DESCRIBE DETAIL COLUMNS never see it
     def marker(c: String) = "\u0000analyzed:" + physicalOf(c)
     val v = currentVersion
-    val missing = liveDirs(v).filterNot { d =>
+    val missing = snapshotAt(v).liveDirs.filterNot { d =>
       val s = statsFor(d, v)
       cols.forall(c => s.contains(physicalOf(c)) || s.contains(marker(c)))
     }
@@ -2442,7 +2162,6 @@ final case class VersionedTable(
       .groupBy(regexp_replace(col("__f"), "/[^/]*$", "").as("__dir"))
       .agg(aggs.head, aggs.tail: _*)
       .collect() // bounded: one row per analyzed leaf dir
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     val computed: Map[String, Map[String, (String, String)]] =
       rows.toSeq.flatMap { r =>
         byAbs.get(new Path(r.getString(0)).toUri.getPath).map { d =>
@@ -2471,9 +2190,9 @@ final case class VersionedTable(
     commitMetadataOnly("analyze", v + 1, readVersion(v).schema.json, lines,
       s"analyzeColumns(${cols.mkString(",")})")
     // no cache invalidation needed: statsCache holds only the immutable
-    // write-time stats — the backfill lands via the analyzedAt overlay,
-    // which every handle (this one AND concurrent ones) resolves at call
-    // time against the version it reads
+    // write-time stats — the backfill lands via the snapshot's `analyzed`
+    // overlay, which every handle (this one AND concurrent ones) resolves
+    // at call time against the version it reads
     missing.length
   }
 
@@ -2481,13 +2200,13 @@ final case class VersionedTable(
     * recorded by whichever commit ADDED the dir, overlaid with any
     * ANALYZE backfill visible at `v`. Only the write-time part is cached
     * per dir (it is immutable — the dir's adding commit never changes);
-    * the overlay resolves through [[analyzedAt]]'s own per-version memo
+    * the overlay resolves through the per-version [[snapshotAt]] memo
     * on every call, so a SECOND live handle to the same table sees a
     * concurrent handle's ANALYZE commit as soon as it reads a version
     * that includes it — no stale-cache window.
     */
   private def statsFor(d: String, v: Int): Map[String, (String, String)] =
-    writeTimeStats(d) ++ analyzedAt(v).getOrElse(d, Map.empty)
+    writeTimeStats(d) ++ snapshotAt(v).analyzed.getOrElse(d, Map.empty)
 
   /** Stats the entry that added `d` recorded for it ([[addedAt]]). Misses
     * are cached too — a stats-less table pays the lookup once per dir,
@@ -2671,7 +2390,6 @@ final case class VersionedTable(
     * by every mutator's conflict/supersede logic — one definition, so a
     * future fix (e.g. partition-value escaping) lands everywhere at once.
     */
-  private def partOf(dir: String): String = dir.split("/", 2).lift(1).getOrElse("")
 
   /** Static one-predicate-per-touched-tuple filter (p1=v1 AND p2=v2 …) —
     * literal comparisons so the current-version scan partition-prunes.
@@ -2692,7 +2410,7 @@ final case class VersionedTable(
     // so clone-referenced (ext=) dirs — which live outside this table's
     // data/ — round-trip exactly like local ones
     val v = currentVersion
-    val byAbs = liveDirs(v)
+    val byAbs = snapshotAt(v).liveDirs
       .map(d => fs.makeQualified(resolvedPath(d)).toUri.getPath -> d).toMap
     // input_file_name() needs a single source, so it materializes as a
     // column DIRECTLY above the scan; the tombstone anti-join sits above
@@ -2701,7 +2419,7 @@ final case class VersionedTable(
     // would remove it while the restage (built from the DV-aware read,
     // whose `touched` set excludes the partition) stages NO replacement —
     // silently dropping its surviving rows.
-    val raw = frameFor(v, liveDirs(v)).withColumn("__f", input_file_name())
+    val raw = frameFor(v, snapshotAt(v).liveDirs).withColumn("__f", input_file_name())
     withTombstones(raw, v).filter(cond).select(col("__f"))
       .distinct().collect()
       .flatMap(r => byAbs.get(new Path(r.getString(0)).getParent.toUri.getPath))
@@ -2810,7 +2528,7 @@ final case class VersionedTable(
         else None
       val pt = c.getPrimitiveType
       val ann = pt.getLogicalTypeAnnotation
-      def dec(scale: Int, unscaled: Long): String =
+      def decimalText(scale: Int, unscaled: Long): String =
         new java.math.BigDecimal(
           java.math.BigInteger.valueOf(unscaled), scale).toString
       (pt.getPrimitiveTypeName, ann) match {
@@ -2821,7 +2539,7 @@ final case class VersionedTable(
         case (INT64, d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation) =>
           val (mn, mx) = (st.genericGetMin.asInstanceOf[Long],
             st.genericGetMax.asInstanceOf[Long])
-          Some(Some((LV(mn, dec(d.getScale, mn)), LV(mx, dec(d.getScale, mx)))))
+          Some(Some((LV(mn, decimalText(d.getScale, mn)), LV(mx, decimalText(d.getScale, mx)))))
         case (INT64, i: LogicalTypeAnnotation.IntLogicalTypeAnnotation)
             if i.isSigned =>
           val (mn, mx) = (st.genericGetMin.asInstanceOf[Long],
@@ -2839,7 +2557,7 @@ final case class VersionedTable(
         case (INT32, d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation) =>
           val (mn, mx) = (st.genericGetMin.asInstanceOf[Int],
             st.genericGetMax.asInstanceOf[Int])
-          Some(Some((LV(mn, dec(d.getScale, mn)), LV(mx, dec(d.getScale, mx)))))
+          Some(Some((LV(mn, decimalText(d.getScale, mn)), LV(mx, decimalText(d.getScale, mx)))))
         case (INT32, i: LogicalTypeAnnotation.IntLogicalTypeAnnotation)
             if i.isSigned =>
           val (mn, mx) = (st.genericGetMin.asInstanceOf[Int],
@@ -2955,7 +2673,6 @@ final case class VersionedTable(
         }
         d -> (partLines ++ dataLines)
       }
-      def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
       Some(lines.flatMap { case (d, cols) =>
         cols.sortBy(_._1).map { case (c, mn, mx) =>
           s"stats=${enc(d)}\t${enc(c)}\t${enc(mn)}\t${enc(mx)}"
@@ -2992,7 +2709,6 @@ final case class VersionedTable(
         .collect() // bounded: one row per staged leaf dir
       val rootName = root.getName
       val qualifiedRoot = fs.makeQualified(root).toUri.getPath
-      def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
       rows.toSeq.flatMap { r =>
         val dir = rootName +
           new Path(r.getString(0)).toUri.getPath.stripPrefix(qualifiedRoot)
@@ -3141,45 +2857,17 @@ final case class VersionedTable(
       Some((m.getOrElse("pk", Seq.empty), m.getOrElse("partition", Seq.empty)))
     }
 
-  /** Snapshot the live-dir set at `v` into `vNNNNN.checkpoint` so later
-    * replays open O(interval) log files. Written temp-then-rename so a
-    * concurrent reader never sees a torn checkpoint (local rename is an
+  /** Write the replayed [[Snapshot]] at `v` to `vNNNNN.checkpoint` so
+    * later replays open O(interval) log files. Written temp-then-rename so
+    * a concurrent reader never sees a torn checkpoint (local rename is an
     * atomic replace; on HDFS the delete+rename gap just means the reader
-    * falls back to pure log replay — see the guarded read in [[liveDirs]]).
-    * A failed checkpoint write must NOT fail the commit that already
-    * landed — the log alone is still a complete record.
+    * falls back to pure log replay — see [[snapshotAt]]). A failed
+    * checkpoint write must NOT fail the commit that already landed — the
+    * log alone is still a complete record.
     */
   private def writeCheckpoint(v: Int): Unit =
     try {
-      val wm = txnWatermarks(v).toSeq.sortBy(_._1).map { case (a, x) =>
-        s"txnwm=${java.net.URLEncoder.encode(a, "UTF-8")}\t$x"
-      }
-      val cs = constraintsAt(v).toSeq.sortBy(_._1).map { case (n, e) =>
-        s"constr=${java.net.URLEncoder.encode(n, "UTF-8")}\t${java.net.URLEncoder.encode(e, "UTF-8")}"
-      }
-      val dv = liveDvDirs(v).map("livedv=" + _)
-      val gc = generatedColsAt(v).toSeq.sortBy(_._1).map { case (n, e) =>
-        s"genc=${java.net.URLEncoder.encode(n, "UTF-8")}\t${java.net.URLEncoder.encode(e, "UTF-8")}"
-      }
-      val cmap = colMapAt(v).toSeq.sortBy(_._1).map { case (l, p) =>
-        s"colmap=${java.net.URLEncoder.encode(l, "UTF-8")}\t${java.net.URLEncoder.encode(p, "UTF-8")}"
-      }
-      val dropped = droppedAt(v).toSeq.sorted.map(p =>
-        s"dropped=${java.net.URLEncoder.encode(p, "UTF-8")}")
-      val tprops = propertiesAt(v).toSeq.sortBy(_._1).map { case (k, x) =>
-        s"tprop=${java.net.URLEncoder.encode(k, "UTF-8")}\t${java.net.URLEncoder.encode(x, "UTF-8")}"
-      }
-      val copied = copiedFilesAt(v).toSeq.sorted.map(f =>
-        s"copiedf=${java.net.URLEncoder.encode(f, "UTF-8")}")
-      val astats = analyzedAt(v).toSeq.sortBy(_._1).flatMap { case (d, m) =>
-        m.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
-          def e(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-          s"astat=${e(d)}\t${e(c)}\t${e(mn)}\t${e(mx)}"
-        }
-      }
-      val content =
-        (liveDirs(v).map("live=" + _) ++ wm ++ cs ++ dv ++ gc ++ cmap ++
-          dropped ++ tprops ++ copied ++ astats).mkString("\n")
+      val content = snapshotAt(v).checkpointLines.mkString("\n")
       val dest = new Path(logDir, s"${vname(v)}.checkpoint")
       val tmp = new Path(logDir, s".tmpcp_${java.util.UUID.randomUUID().toString.take(8)}")
       val o = fs.create(tmp, true)
@@ -3242,7 +2930,7 @@ final case class VersionedTable(
     enforceConstraints(df, ledger)
     val next = currentVersion + 1
     val (root, adds) = stage(df, next)
-    if (!commit("overwrite", next, adds, liveDirs(next - 1), root, df.schema.json,
+    if (!commit("overwrite", next, adds, snapshotAt(next - 1).liveDirs, root, df.schema.json,
         statsLines(root, adds) ++ identityWmLines(root) ++
           txnLines(txn) ++ ledger)) {
       fs.delete(root, true)
@@ -3324,7 +3012,7 @@ final case class VersionedTable(
         }
       }
     }
-    val removes = liveDirs(next - 1)
+    val removes = snapshotAt(next - 1).liveDirs
       .filter(d => newParts.contains(partOf(d)) || specMatches(d))
     val cdfStaged: Option[(Path, String)] =
       if (recordCdf) {
@@ -3414,7 +3102,7 @@ final case class VersionedTable(
         .join(updates.select(pk.map(col): _*), pk, "left_semi").isEmpty,
       "replaceWhere would duplicate a primary key that survives the " +
         "predicate — use merge to upsert")
-    val live = liveDirs(next - 1)
+    val live = snapshotAt(next - 1).liveDirs
     val (root, adds, removes) =
       if (partitionCols.isEmpty) {
         val (r, a) = stage(current.filter(survives)
@@ -3562,7 +3250,7 @@ final case class VersionedTable(
     // attribute + typed literal) — running a frame through the analyzer
     // just to extract this predicate measured ~0.3-0.6 s of driver time
     // per append.
-    val liveAll = liveDirs(next - 1)
+    val liveAll = snapshotAt(next - 1).liveDirs
     val liveForCollide =
       if (pkBounds.exists(b => b._1 == null || b._2 == null)) liveAll
       else {
@@ -3693,7 +3381,7 @@ final case class VersionedTable(
           .sorted
     }
     val fresh =
-      if (force) all else all.filterNot(copiedFilesAt(currentVersion))
+      if (force) all else all.filterNot(snapshotAt(currentVersion).copiedFiles)
     if (fresh.isEmpty) return 0
     val df = fmt match {
       case "parquet" => spark.read.parquet(fresh: _*)
@@ -3703,7 +3391,6 @@ final case class VersionedTable(
             "— write a first batch, or pass schemaHint"))
         spark.read.option("header", header.toString).schema(sch).csv(fresh: _*)
     }
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     append(df, None, fresh.map(f => s"copied=${enc(f)}"))
     fresh.length
   }
@@ -3789,7 +3476,7 @@ final case class VersionedTable(
       val merged = curT.join(updates.select(pk.map(col): _*), pk, "left_anti")
         .unionByName(updates, allowMissingColumns = true)
       val (r, a) = stage(merged, next)
-      if (partitionCols.isEmpty) (r, a, liveDirs(next - 1), merged.schema.json)
+      if (partitionCols.isEmpty) (r, a, snapshotAt(next - 1).liveDirs, merged.schema.json)
       else {
         // a live dir is superseded iff its partition path matches a restaged
         // leaf's. Migration source partitions can restage EMPTY (their only
@@ -3801,7 +3488,7 @@ final case class VersionedTable(
           if (migrated.isEmpty) Set.empty[String]
           else matchingDirs(partitionPredicate(migrated))
         (r, a,
-          (liveDirs(next - 1).filter(d => newParts.contains(partOf(d))) ++
+          (snapshotAt(next - 1).liveDirs.filter(d => newParts.contains(partOf(d))) ++
             migratedDoomed).distinct,
           merged.schema.json)
       }
@@ -3852,7 +3539,7 @@ final case class VersionedTable(
       // a WINNER may have been another worker applying this same batch —
       // then our write is already durable and this replay must vanish
       if (txn.exists { case (app, ver) =>
-            txnWatermarks(nowCurrent).get(app).exists(_ >= ver) }) {
+            snapshotAt(nowCurrent).txnWatermarks.get(app).exists(_ >= ver) }) {
         rollback()
         return
       }
@@ -3945,7 +3632,7 @@ final case class VersionedTable(
       .filter(k => pk.exists(_.equalsIgnoreCase(k)))
     require(badPk.isEmpty,
       s"merge update clauses must not assign primary-key columns (${badPk.mkString(",")})")
-    val gs = generatedColsAt(currentVersion)
+    val gs = snapshotAt(currentVersion).generatedCols
     val badGen = clauses.flatMap(_.set.keys)
       .filter(k => gs.keys.exists(_.equalsIgnoreCase(k)))
     require(badGen.isEmpty,
@@ -4014,9 +3701,9 @@ final case class VersionedTable(
     newCols.foreach { f =>
       // same retired-name rules as ALTER ADD COLUMN: a recycled physical
       // name would silently surface old on-disk data
-      val cm = colMapAt(currentVersion)
+      val cm = snapshotAt(currentVersion).colMap
       val retired = cm.collect {
-        case (l, ph) if !l.equalsIgnoreCase(ph) => ph } ++ droppedAt(currentVersion)
+        case (l, ph) if !l.equalsIgnoreCase(ph) => ph } ++ snapshotAt(currentVersion).dropped
       require(!retired.exists(_.equalsIgnoreCase(f.name)),
         s"schema evolution: '${f.name}' still names retired on-disk data")
     }
@@ -4164,14 +3851,14 @@ final case class VersionedTable(
     val staged = out.filter(col("__keep")).select(outCols.map(col): _*)
     val (root, adds) = stage(staged, next)
     val removes =
-      if (partitionCols.isEmpty || hasBySource) liveDirs(next - 1)
+      if (partitionCols.isEmpty || hasBySource) snapshotAt(next - 1).liveDirs
       else {
         // every dir with visible rows in a touched partition is superseded
         // (file-accurate, DV-aware), plus dirs sharing a partition with the
         // staged leaves (inserts into previously-empty partitions)
         val doomed = matchingDirs(partitionPredicate(touched))
         val newParts = adds.map(partOf).toSet
-        liveDirs(next - 1).filter(d =>
+        snapshotAt(next - 1).liveDirs.filter(d =>
           doomed.contains(d) || newParts.contains(partOf(d)))
       }
     val cdfStaged: Option[(Path, String)] =
@@ -4238,7 +3925,7 @@ final case class VersionedTable(
     val current = read
     val doomed = matchingDirs(cond)
     if (doomed.isEmpty) return false
-    val live = liveDirs(next - 1)
+    val live = snapshotAt(next - 1).liveDirs
     // a row only matches when cond is TRUE; a NULL cond (e.g. a null value
     // under `price > 100`) is NOT a match and its row must SURVIVE — a bare
     // filter(!cond) would silently drop it (NULL is not true either way)
@@ -4336,7 +4023,7 @@ final case class VersionedTable(
     // generated columns are ALWAYS derived, never assigned (Delta's rule);
     // they re-derive below after the user assignments apply, so updating a
     // source column keeps the derived value consistent automatically
-    val gs = generatedColsAt(currentVersion)
+    val gs = snapshotAt(currentVersion).generatedCols
     val genAssigned = assignments.keySet.intersect(gs.keySet)
     require(genAssigned.isEmpty,
       s"update must not assign generated columns (${genAssigned.mkString(",")}): " +
@@ -4350,7 +4037,7 @@ final case class VersionedTable(
         s"(${identAssigned.mkString(",")})")
     val doomed = matchingDirs(cond)
     if (doomed.isEmpty) return false
-    val live = liveDirs(next - 1)
+    val live = snapshotAt(next - 1).liveDirs
     // apply each assignment only on matching rows (a NULL cond is not a
     // match — when() takes the otherwise branch); untouched columns and
     // non-matching rows pass through unchanged
@@ -4584,11 +4271,9 @@ final case class VersionedTable(
     */
   private def emptyChangeFrame(fromV: Int, toV: Int): DataFrame = {
     import org.apache.spark.sql.types._
-    def structAt(v: Int): StructType = schemaJsonAt(v)
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-      .getOrElse(StructType(Nil))
+    def structAt(v: Int): StructType = schemaAt(v).getOrElse(StructType(Nil))
     // fromV's field names align to toV's logical era, like the diff path
-    val (cmF, cmT) = (colMapAt(fromV), colMapAt(toV))
+    val (cmF, cmT) = (snapshotAt(fromV).colMap, snapshotAt(toV).colMap)
     def atToV(n: String): String = {
       val p = cmF.collectFirst { case (l, pp) if l.equalsIgnoreCase(n) => pp }.getOrElse(n)
       cmT.collectFirst { case (l, pp) if pp.equalsIgnoreCase(p) => l }.getOrElse(p)
@@ -4793,42 +4478,42 @@ final case class VersionedTable(
     val cur = currentVersion
     require(v >= 1 && v <= cur, s"version $v out of range 1..$cur")
     if (v == cur) return
-    val target = liveDirs(v)
-    val live = liveDirs(cur)
-    val adds = target.filterNot(live.contains)
-    val removes = live.filterNot(target.contains)
-    val targetDv = liveDvDirs(v)
-    val (consV, consCur) = (constraintsAt(v), constraintsAt(cur))
-    val (gcV, gcCur) = (generatedColsAt(v), generatedColsAt(cur))
-    val (propsV, propsCur) = (propertiesAt(v), propertiesAt(cur))
-    if (adds.isEmpty && removes.isEmpty && targetDv == liveDvDirs(cur) &&
-        consV == consCur && gcV == gcCur && colMapAt(v) == colMapAt(cur) &&
-        droppedAt(v) == droppedAt(cur) && propsV == propsCur &&
-        schemaJsonAt(v) == schemaJsonAt(cur))
+    val (to, now) = (snapshotAt(v), snapshotAt(cur))
+    val adds = to.liveDirs.filterNot(now.liveDirs.contains)
+    val removes = now.liveDirs.filterNot(to.liveDirs.contains)
+    if (adds.isEmpty && removes.isEmpty && to.dvDirs == now.dvDirs &&
+        to.constraints == now.constraints && to.generatedCols == now.generatedCols &&
+        to.colMap == now.colMap && to.dropped == now.dropped &&
+        to.properties == now.properties && schemaJsonAt(v) == schemaJsonAt(cur))
       return // same live set, metadata, AND schema — nothing to do
       // (the schema term matters: an ALTER COLUMN TYPE widen or a
       // metadata-only ADD COLUMN changes no dirs and no other overlay,
       // and restoring across one must still re-record the old schema)
-    val gone = (adds ++ targetDv).filterNot(d => fs.exists(resolvedPath(d)))
+    val gone = (adds ++ to.dvDirs).filterNot(d => fs.exists(resolvedPath(d)))
     require(gone.isEmpty,
       s"cannot restore to version $v: ${gone.size} of its data dirs were vacuumed")
     val schemaJson = schemaJsonAt(v)
       .getOrElse(sys.error(s"version $v has no recorded schema"))
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     // metadata delta back to v's state. Replay applies adds BEFORE drops
     // ((m ++ added) -- dropped), so a name active in both but redefined
     // since v is reset by its add line alone — dropping it too would
     // delete it outright. Drops are only for names v never had.
     // column mapping resets too: rename current-logical(p) → v-logical(p)
     // for every physical name whose logical differs between the versions
-    val (cmV, cmCur) = (colMapAt(v), colMapAt(cur))
     def logicalOf(cm: Map[String, String], p: String): String =
       cm.collectFirst { case (l, pp) if pp.equalsIgnoreCase(p) => l }.getOrElse(p)
-    val physNames = (cmV.values ++ cmCur.values).toSeq.distinct.sorted
+    val physNames = (to.colMap.values ++ now.colMap.values).toSeq.distinct.sorted
     val renameLines = physNames.flatMap { p =>
-      val (lv, lc) = (logicalOf(cmV, p), logicalOf(cmCur, p))
+      val (lv, lc) = (logicalOf(to.colMap, p), logicalOf(now.colMap, p))
       if (lv == lc) None else Some(s"rename=${enc(lc)}\t${enc(lv)}")
     }
+    // lines taking a name → value overlay from `cur` back to `at`: a drop
+    // for each name `at` lacks, an add for each name `at` holds differently
+    def delta(add: String, drop: String, at: Map[String, String],
+              cur: Map[String, String]): Seq[String] =
+      (cur.keySet -- at.keySet).toSeq.sorted.map(n => s"$drop=${enc(n)}") ++
+        at.filter { case (n, e) => !cur.get(n).contains(e) }
+          .toSeq.sortBy(_._1).map { case (n, e) => s"$add=${enc(n)}\t${enc(e)}" }
     val metaLines =
       renameLines ++
       // the dropped set resets to v's state in BOTH directions: columns
@@ -4837,31 +4522,20 @@ final case class VersionedTable(
       // restore(2) chain must land back on 2's narrowed schema with its
       // physical names retired, or the dropped data would silently
       // resurface and the name lose its re-use protection
-      (droppedAt(cur) -- droppedAt(v)).toSeq.sorted
-        .map(p => s"undropcol=${enc(p)}") ++
-      (droppedAt(v) -- droppedAt(cur)).toSeq.sorted
-        .map(p => s"dropcol=${enc(p)}") ++
-      (consCur.keySet -- consV.keySet).toSeq.sorted
-        .map(n => s"dropconstraint=${enc(n)}") ++
-      consV.filter { case (n, e) => !consCur.get(n).contains(e) }
-        .toSeq.sortBy(_._1).map { case (n, e) => s"constraint=${enc(n)}\t${enc(e)}" } ++
-      (gcCur.keySet -- gcV.keySet).toSeq.sorted
-        .map(n => s"dropgencol=${enc(n)}") ++
-      gcV.filter { case (n, e) => !gcCur.get(n).contains(e) }
-        .toSeq.sortBy(_._1).map { case (n, e) => s"gencol=${enc(n)}\t${enc(e)}" } ++
+      (now.dropped -- to.dropped).toSeq.sorted.map(p => s"undropcol=${enc(p)}") ++
+      (to.dropped -- now.dropped).toSeq.sorted.map(p => s"dropcol=${enc(p)}") ++
+      delta("constraint", "dropconstraint", to.constraints, now.constraints) ++
+      delta("gencol", "dropgencol", to.generatedCols, now.generatedCols) ++
       // table properties reset to v's map (the COPY INTO file ledger does
       // NOT reset: it is an append-only ingest history — re-restoring must
       // not make a re-run of COPY INTO double-load files)
-      (propsCur.keySet -- propsV.keySet).toSeq.sorted
-        .map(k => s"unsetprop=${enc(k)}") ++
-      propsV.filter { case (k, x) => !propsCur.get(k).contains(x) }
-        .toSeq.sortBy(_._1).map { case (k, x) => s"setprop=${enc(k)}\t${enc(x)}" }
+      delta("setprop", "unsetprop", to.properties, now.properties)
     // nothing was staged — hand commit() a path that cannot exist so its
     // failure-path cleanup is a no-op. The restore action RESETS the
     // tombstone set in replay, so the dvadd lines are v's exact DV state.
     val noStaging = new Path(s"$dataDir/.restore_${java.util.UUID.randomUUID().toString.take(8)}")
     if (!commit("restore", cur + 1, adds, removes, noStaging, schemaJson,
-        targetDv.map("dvadd=" + _) ++ metaLines))
+        to.dvDirs.map("dvadd=" + _) ++ metaLines))
       sys.error(s"concurrent writer: version ${cur + 1} was committed by another " +
         "writer; nothing was changed — retry on the new state")
   }
@@ -4884,7 +4558,7 @@ final case class VersionedTable(
       else current.repartition(files)
     val (root, adds) = stage(repacked, next, cluster = false)
     // a compaction rewrites files but changes no rows — change-transparent
-    if (!commit("compact", next, adds, liveDirs(next - 1), root, current.schema.json,
+    if (!commit("compact", next, adds, snapshotAt(next - 1).liveDirs, root, current.schema.json,
         statsLines(root, adds) :+ "cdf=none")) {
       fs.delete(root, true)
       sys.error(s"concurrent writer: version $next was committed by another " +
@@ -4909,7 +4583,7 @@ final case class VersionedTable(
     val doomed = matchingDirs(cond)
     if (doomed.isEmpty) return
     val doomedParts = doomed.map(partOf)
-    val rm = liveDirs(next - 1).filter(d => doomedParts.contains(partOf(d)))
+    val rm = snapshotAt(next - 1).liveDirs.filter(d => doomedParts.contains(partOf(d)))
     // the rewrite input is exactly the doomed partitions' live dirs —
     // assemble the (DV-aware, logically-named) frame from them directly,
     // so the statement pays ONE predicate scan (matchingDirs) plus the
@@ -4952,7 +4626,7 @@ final case class VersionedTable(
     val z = ZOrder.withZBucket(current.drop("zb"), cols, bitsPerCol)
     val ordered = z.select(current.columns.toSeq.map(col): _*)
     val (root, adds) = stage(ordered.repartition(col("zb")), next, cluster = false)
-    if (!commit("compact", next, adds, liveDirs(next - 1), root,
+    if (!commit("compact", next, adds, snapshotAt(next - 1).liveDirs, root,
         current.schema.json, statsLines(root, adds) :+ "cdf=none")) {
       fs.delete(root, true)
       sys.error(s"concurrent writer: version $next was committed by another " +
@@ -4972,9 +4646,9 @@ final case class VersionedTable(
   def reorgPurge(targetFileRows: Long = 1024 * 1024): Unit = {
     require(exists, "REORG on a table with no commits")
     val next = currentVersion + 1
-    val dvParts = liveDvDirs(next - 1).map(partOf).toSet
+    val dvParts = snapshotAt(next - 1).dvDirs.map(partOf).toSet
     if (dvParts.isEmpty) return
-    val rm = liveDirs(next - 1).filter(d => dvParts.contains(partOf(d)))
+    val rm = snapshotAt(next - 1).liveDirs.filter(d => dvParts.contains(partOf(d)))
     val part = withTombstones(frameFor(next - 1, rm), next - 1)
     val rows = part.count()
     val files = math.max(1, math.ceil(rows.toDouble / targetFileRows).toInt)
@@ -5014,7 +4688,6 @@ final case class VersionedTable(
     val dest = VersionedTable(spark, destPath, pk, partitionCols,
       checkpointInterval, statsCols, recordCdf)
     require(!dest.exists, s"clone destination $destPath already holds a table")
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     def extify(d: String): String = {
       val parts = d.split("/", 2)
       val root =
@@ -5023,36 +4696,34 @@ final case class VersionedTable(
           fs.makeQualified(new Path(s"$dataDir/${parts(0)}")).toUri.getPath)
       root + parts.lift(1).map("/" + _).getOrElse("")
     }
-    val src = liveDirs(v)
-    val extDirs = src.map(extify)
+    val snap = snapshotAt(v)
+    val extDirs = snap.liveDirs.map(extify)
     // live tombstones travel with the clone (the clone action resets the
     // dest's DV set to exactly these refs)
-    val extDv = liveDvDirs(v).map(d => "dvadd=" + extify(d))
+    val extDv = snap.dvDirs.map(d => "dvadd=" + extify(d))
     // carry per-dir skipping stats so readWhere prunes on the clone too
-    val stats = src.zip(extDirs).flatMap { case (d, ed) =>
+    val stats = snap.liveDirs.zip(extDirs).flatMap { case (d, ed) =>
       statsFor(d, v).toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
         s"stats=${enc(ed)}\t${enc(c)}\t${enc(mn)}\t${enc(mx)}"
       }
     }
-    val constr = constraintsAt(v).toSeq.sortBy(_._1).map { case (n, e) =>
-      s"constraint=${enc(n)}\t${enc(e)}"
-    } ++ generatedColsAt(v).toSeq.sortBy(_._1).map { case (n, e) =>
-      s"gencol=${enc(n)}\t${enc(e)}"
-    } ++
+    def kv(key: String, m: Map[String, String]) =
+      m.toSeq.sortBy(_._1).map { case (k, x) => s"$key=${enc(k)}\t${enc(x)}" }
+    val constr = kv("constraint", snap.constraints) ++
+      kv("gencol", snap.generatedCols) ++
       // column mapping travels with the clone: a rename=physical→logical
       // line replays to exactly {logical → physical} on the clone's log
-      colMapAt(v).toSeq.sortBy(_._1).map { case (l, p) =>
+      snap.colMap.toSeq.sortBy(_._1).map { case (l, p) =>
         s"rename=${enc(p)}\t${enc(l)}"
       } ++
       // so does the dropped-column set: the clone references the SAME
       // files, whose retired physical columns must stay projected away
-      droppedAt(v).toSeq.sorted.map(p => s"dropcol=${enc(p)}") ++
+      snap.dropped.toSeq.sorted.map(p => s"dropcol=${enc(p)}") ++
       // table properties travel with the clone (Delta's clone carries
       // TBLPROPERTIES); the COPY INTO ledger travels too, so re-running
       // the same COPY against the clone stays idempotent
-      propertiesAt(v).toSeq.sortBy(_._1)
-        .map { case (k, x) => s"setprop=${enc(k)}\t${enc(x)}" } ++
-      copiedFilesAt(v).toSeq.sorted.map(f => s"copied=${enc(f)}")
+      kv("setprop", snap.properties) ++
+      snap.copiedFiles.toSeq.sorted.map(f => s"copied=${enc(f)}")
     val schemaJson = schemaJsonAt(v)
       .getOrElse(sys.error(s"version $v has no recorded schema"))
     val noStaging = new Path(s"$destPath/.clone_${java.util.UUID.randomUUID().toString.take(8)}")
@@ -5106,7 +4777,6 @@ final case class VersionedTable(
     require(df.groupBy(pk.map(col): _*).agg(count(lit(1)).as("__n"))
         .filter(col("__n") > 1).isEmpty,
       "source violates PK uniqueness — deduplicate before converting")
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     val extDirs = leafPaths.map { leaf =>
       val rel = fs.makeQualified(leaf).toUri.getPath
         .stripPrefix(qualifiedRoot).stripPrefix("/")
@@ -5132,10 +4802,10 @@ final case class VersionedTable(
   def writeManifest(): String = {
     val v = currentVersion
     require(v >= 1, "manifest export on a table with no commits")
-    require(liveDvDirs(v).isEmpty,
+    require(snapshotAt(v).dvDirs.isEmpty,
       "manifest export requires materialized deletes (live deletion vectors " +
         "cannot be expressed as a file list) — run compact() first")
-    val files = liveDirs(v).flatMap { d =>
+    val files = snapshotAt(v).liveDirs.flatMap { d =>
       fs.listStatus(resolvedPath(d)).toSeq
         .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
         .map(st => fs.makeQualified(st.getPath).toUri.toString)
@@ -5198,8 +4868,8 @@ final case class VersionedTable(
     // exists() RPC per dir — a serial probe over 10^5-10^6 live dirs is
     // minutes of sequential round-trips on an object store, the listing
     // is bounded by distinct parents
-    val liveData = liveDirs(v)
-    val liveDv = liveDvDirs(v)
+    val liveData = snapshotAt(v).liveDirs
+    val liveDv = snapshotAt(v).dvDirs
     val present: Set[Path] = (liveData ++ liveDv).map(resolvedPath).distinct
       .groupBy(_.getParent).iterator.flatMap { case (parent, kids) =>
         val names =
@@ -5211,7 +4881,7 @@ final case class VersionedTable(
     val missingDv = liveDv.filterNot(d => present.contains(resolvedPath(d)))
     val missing = missingData ++ missingDv
     if (dryRun || missing.isEmpty) return missing
-    val survivorsDv = liveDvDirs(v).filterNot(missingDv.contains)
+    val survivorsDv = snapshotAt(v).dvDirs.filterNot(missingDv.contains)
     val schemaJson = schemaJsonAt(v).getOrElse(
       sys.error(s"version $v has no recorded schema"))
     val noStaging = new Path(
@@ -5237,7 +4907,7 @@ final case class VersionedTable(
     val keepFrom = math.max(1, cur - retain + 1)
     // live tombstone dirs are referenced storage exactly like data dirs
     val referenced = (keepFrom to cur)
-      .flatMap(v => liveDirs(v) ++ liveDvDirs(v)).toSet
+      .flatMap(v => snapshotAt(v).liveDirs ++ snapshotAt(v).dvDirs).toSet
     val referencedRoots = referenced.map(_.split("/")(0))
     // clone-referenced (ext=) dirs are NEVER reclaimed here — the source
     // table's own vacuum owns that storage (and, as in Delta shallow

@@ -1,0 +1,80 @@
+#!/usr/bin/env python3
+"""Unit tests of the pair accounting in tools/perf_pairs.py (no benchmark
+runs). From the root of a checkout:
+
+    python3 -m unittest tools/test_perf_pairs.py
+"""
+import os
+import sys
+import unittest
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import perf_pairs  # noqa: E402
+
+
+def result(**metrics):
+    return {"metrics": {k: {"value": v} for k, v in metrics.items()}}
+
+
+SPEC = {"read_p50_s": {"better": "lower", "bound": 0.25},
+        "ingest_rows_per_s": {"better": "higher", "bound": 0.25}}
+
+
+class ParseSeeds(unittest.TestCase):
+    def test_ranges_lists_and_mixes(self):
+        self.assertEqual(perf_pairs.parse_seeds("1-4"), [1, 2, 3, 4])
+        self.assertEqual(perf_pairs.parse_seeds("1,3,5"), [1, 3, 5])
+        self.assertEqual(perf_pairs.parse_seeds("2-4,9"), [2, 3, 4, 9])
+        self.assertEqual(perf_pairs.parse_seeds("7"), [7])
+
+
+class Quartiles(unittest.TestCase):
+    def test_inclusive_quartiles(self):
+        self.assertEqual(perf_pairs.quartiles([1, 2, 3, 4, 5]), (2, 4))
+        self.assertEqual(perf_pairs.quartiles([4, 1, 3, 2]), (1.75, 3.25))
+
+    def test_single_value_is_its_own_spread(self):
+        self.assertEqual(perf_pairs.quartiles([0.5]), (0.5, 0.5))
+
+
+class Summarize(unittest.TestCase):
+    def row(self, pairs, metric):
+        rows = {r["metric"]: r for r in perf_pairs.summarize(pairs, SPEC)}
+        return rows[metric]
+
+    def test_lower_is_better_wins_and_ties(self):
+        pairs = [(1, result(read_p50_s=1.0), result(read_p50_s=0.5)),
+                 (2, result(read_p50_s=1.0), result(read_p50_s=1.0)),  # tie
+                 (3, result(read_p50_s=1.0), result(read_p50_s=2.0))]
+        r = self.row(pairs, "read_p50_s")
+        self.assertEqual(r["change_wins"], 1)  # the tie counts for no side
+        self.assertEqual(r["pairs"], 3)
+        self.assertEqual(r["parent_median"], 1.0)
+        self.assertEqual(r["change_median"], 1.0)
+        self.assertEqual(r["ratio"], 1.0)
+
+    def test_higher_is_better_wins(self):
+        pairs = [(1, result(ingest_rows_per_s=100), result(ingest_rows_per_s=150)),
+                 (2, result(ingest_rows_per_s=100), result(ingest_rows_per_s=100)),
+                 (3, result(ingest_rows_per_s=100), result(ingest_rows_per_s=90)),
+                 (4, result(ingest_rows_per_s=100), result(ingest_rows_per_s=120))]
+        r = self.row(pairs, "ingest_rows_per_s")
+        self.assertEqual(r["change_wins"], 2)
+        self.assertAlmostEqual(r["ratio"], 110 / 100)
+        self.assertEqual(r["change_iqr"], (97.5, 127.5))
+
+    def test_ratio_is_change_over_parent_and_none_on_zero(self):
+        pairs = [(1, result(read_p50_s=0.4), result(read_p50_s=0.1))]
+        self.assertAlmostEqual(self.row(pairs, "read_p50_s")["ratio"], 0.25)
+        pairs = [(1, result(read_p50_s=0.0), result(read_p50_s=0.1))]
+        self.assertIsNone(self.row(pairs, "read_p50_s")["ratio"])
+
+    def test_metric_missing_from_any_run_is_left_out(self):
+        pairs = [(1, result(read_p50_s=1.0, ingest_rows_per_s=5),
+                  result(read_p50_s=1.0))]
+        metrics = [r["metric"] for r in perf_pairs.summarize(pairs, SPEC)]
+        self.assertEqual(metrics, ["read_p50_s"])
+
+
+if __name__ == "__main__":
+    unittest.main()
