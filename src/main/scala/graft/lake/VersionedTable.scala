@@ -246,7 +246,7 @@ final case class VersionedTable(
     val cur = readVersion(v)
     val bad = cur.filter(expr(exprSql) <=> false).count()
     if (bad > 0) throw new ConstraintViolationException(name, exprSql, bad)
-    commitMetadataOnly("constraint", v + 1, cur.schema.json,
+    commitMetadataOnly("constraint", v + 1, recordedSchemaJson(v),
       Seq(s"constraint=${enc(name)}\t${enc(exprSql)}"),
       s"addConstraint($name)")
   }
@@ -255,7 +255,7 @@ final case class VersionedTable(
   def dropConstraint(name: String): Unit = {
     val v = currentVersion
     require(snapshotAt(v).constraints.contains(name), s"constraint '$name' does not exist")
-    commitMetadataOnly("dropconstraint", v + 1, readVersion(v).schema.json,
+    commitMetadataOnly("dropconstraint", v + 1, recordedSchemaJson(v),
       Seq(s"dropconstraint=${enc(name)}"),
       s"dropConstraint($name)")
   }
@@ -309,7 +309,7 @@ final case class VersionedTable(
       s"TBLPROPERTIES ${internalHit.mkString(",")}: the 'graft.' namespace " +
         "is reserved for engine state and cannot be set directly")
     val v = currentVersion
-    commitMetadataOnly("setproperties", v + 1, readVersion(v).schema.json,
+    commitMetadataOnly("setproperties", v + 1, recordedSchemaJson(v),
       kvs.toSeq.sortBy(_._1).map { case (k, x) => s"setprop=${enc(k)}\t${enc(x)}" },
       s"setProperties(${kvs.keys.toSeq.sorted.mkString(",")})")
   }
@@ -344,7 +344,7 @@ final case class VersionedTable(
       s"table property key(s) do not exist: ${missing.mkString(",")}")
     val drop = keys.filter(have)
     if (drop.isEmpty) return
-    commitMetadataOnly("unsetproperties", v + 1, readVersion(v).schema.json,
+    commitMetadataOnly("unsetproperties", v + 1, recordedSchemaJson(v),
       drop.sorted.map(k => s"unsetprop=${enc(k)}"),
       s"unsetProperties(${drop.sorted.mkString(",")})")
   }
@@ -371,7 +371,7 @@ final case class VersionedTable(
     val bad = cur.filter(!(col(name) <=> expr(exprSql))).count()
     if (bad > 0) throw new ConstraintViolationException(
       s"generated:$name", exprSql, bad)
-    commitMetadataOnly("gencol", v + 1, cur.schema.json,
+    commitMetadataOnly("gencol", v + 1, recordedSchemaJson(v),
       Seq(s"gencol=${enc(name)}\t${enc(exprSql)}"),
       s"addGeneratedColumn($name)")
   }
@@ -437,7 +437,7 @@ final case class VersionedTable(
     val sch = tableSchema
     lcs.keys.foreach(n => require(sch.fieldNames.exists(_.equalsIgnoreCase(n)),
       s"default column '$n' must exist in the table schema"))
-    commitMetadataOnly("defaults", v + 1, readVersion(v).schema.json,
+    commitMetadataOnly("defaults", v + 1, recordedSchemaJson(v),
       lcs.toSeq.sortBy(_._1).map { case (n, (dt, sql)) =>
         s"setprop=${enc(s"graft.default.col.$n")}\t${enc(s"$dt\t$sql")}" },
       s"declareDefaults(${lcs.keys.toSeq.sorted.mkString(",")})")
@@ -491,7 +491,7 @@ final case class VersionedTable(
     val v = currentVersion
     val lc = name.toLowerCase
     require(defaultsAt(v).contains(lc), s"column '$name' has no DEFAULT")
-    commitMetadataOnly("dropdefault", v + 1, readVersion(v).schema.json,
+    commitMetadataOnly("dropdefault", v + 1, recordedSchemaJson(v),
       Seq(s"unsetprop=${enc(s"graft.default.col.$lc")}"),
       s"dropDefault($name)")
   }
@@ -604,7 +604,7 @@ final case class VersionedTable(
         }
       }
     } else Nil
-    commitMetadataOnly("identity", v + 1, readVersion(v).schema.json,
+    commitMetadataOnly("identity", v + 1, recordedSchemaJson(v),
       specs.toSeq.sortBy(_._1).map { case (n, s) =>
         s"setprop=${enc(VersionedTable.identitySpecKey(n))}\t${enc(s.encode)}" } ++
         seedLines,
@@ -768,7 +768,7 @@ final case class VersionedTable(
     // pre-first-allocation base, not past it
     val wm = if (sp.step > 0) math.max(seen, sp.start - sp.step)
              else math.min(seen, sp.start - sp.step)
-    commitMetadataOnly("syncidentity", v + 1, readVersion(v).schema.json,
+    commitMetadataOnly("syncidentity", v + 1, recordedSchemaJson(v),
       Seq(s"setprop=${enc(VersionedTable.identityWmKey(lc))}\t${enc(wm.toString)}"),
       s"syncIdentity($name)")
     wm
@@ -1005,7 +1005,7 @@ final case class VersionedTable(
         clash.keys.mkString(",")} — DROP BLOOMFILTER INDEX first")
     val fresh = specs.filterNot { case (c, s) => existing.get(c).contains(s) }
     if (fresh.nonEmpty) {
-      commitMetadataOnly("bloomindex", v + 1, readVersion(v).schema.json,
+      commitMetadataOnly("bloomindex", v + 1, recordedSchemaJson(v),
         fresh.toSeq.sortBy(_._1).map { case (c, (fpp, ni)) =>
           s"setprop=${enc(s"graft.bloom.col.$c")}\t${
             enc(s"$fpp\t${ni.map(_.toString).getOrElse("")}")}" },
@@ -1038,7 +1038,7 @@ final case class VersionedTable(
         c
       }
     require(targets.nonEmpty, "no bloom index to drop")
-    commitMetadataOnly("dropbloomindex", v + 1, readVersion(v).schema.json,
+    commitMetadataOnly("dropbloomindex", v + 1, recordedSchemaJson(v),
       targets.sorted.map(c => s"unsetprop=${enc(s"graft.bloom.col.$c")}"),
       s"dropBloomIndex(${targets.sorted.mkString(",")})")
   }
@@ -1354,7 +1354,7 @@ final case class VersionedTable(
       case Some(text) => s"setprop=${enc(key)}\t${enc(text)}"
       case None => s"unsetprop=${enc(key)}"
     }
-    commitMetadataOnly("comment_column", v + 1, readVersion(v).schema.json,
+    commitMetadataOnly("comment_column", v + 1, recordedSchemaJson(v),
       Seq(line), s"setColumnComment($name)")
   }
 
@@ -1409,7 +1409,7 @@ final case class VersionedTable(
     if (nulls > 0)
       throw new ConstraintViolationException(
         s"notnull:${name.toLowerCase}", s"$name IS NOT NULL", nulls)
-    commitMetadataOnly("set_not_null", v + 1, readVersion(v).schema.json,
+    commitMetadataOnly("set_not_null", v + 1, recordedSchemaJson(v),
       Seq(s"setprop=${enc(s"graft.notnull.col.${name.toLowerCase}")}\t1"),
       s"setNotNull($name)")
   }
@@ -1427,7 +1427,7 @@ final case class VersionedTable(
     val key = s"graft.notnull.col.${name.toLowerCase}"
     require(snapshotAt(v).properties.contains(key),
       s"column '$name' has no NOT NULL constraint")
-    commitMetadataOnly("drop_not_null", v + 1, readVersion(v).schema.json,
+    commitMetadataOnly("drop_not_null", v + 1, recordedSchemaJson(v),
       Seq(s"unsetprop=${enc(key)}"), s"dropNotNull($name)")
   }
 
@@ -1545,6 +1545,14 @@ final case class VersionedTable(
     */
   private def schemaJsonAt(v: Int): Option[String] =
     (v to 1 by -1).iterator.flatMap(readLog(_).schemaJson).nextOption()
+
+  /** The schema JSON version `v` recorded, verbatim — what a commit that
+    * keeps v's schema (every metadata-only commit, restore, clone, fsck)
+    * records again, so nullability and field metadata carry over byte for
+    * byte and no read frame is built to re-derive it.
+    */
+  private def recordedSchemaJson(v: Int): String =
+    schemaJsonAt(v).getOrElse(sys.error(s"version $v has no recorded schema"))
 
   private val schemaAtCache = scala.collection.mutable.HashMap
     .empty[Int, Option[org.apache.spark.sql.types.StructType]]
@@ -2187,7 +2195,7 @@ final case class VersionedTable(
         }
       }
     }
-    commitMetadataOnly("analyze", v + 1, readVersion(v).schema.json, lines,
+    commitMetadataOnly("analyze", v + 1, recordedSchemaJson(v), lines,
       s"analyzeColumns(${cols.mkString(",")})")
     // no cache invalidation needed: statsCache holds only the immutable
     // write-time stats — the backfill lands via the snapshot's `analyzed`
@@ -2217,6 +2225,36 @@ final case class VersionedTable(
       addedAt(d.split("/")(0)).flatMap(readLog(_).stats.get(d))
         .getOrElse(Map.empty))
 
+  /** A literal's value as [[canMatch]] compares it with recorded stats:
+    * the Scala value's `String.valueOf` (dates render `yyyy-MM-dd`); None
+    * for NULL.
+    */
+  private def literalText(
+      l: org.apache.spark.sql.catalyst.expressions.Literal): Option[String] =
+    Option(org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(l.dataType)(l.value)).map(String.valueOf)
+
+  /** The order [[canMatch]] compares a `ct` column's recorded stats strings
+    * with a `lt` literal's [[literalText]] under; None when the pairing, or
+    * any of `vals`, is not provably order-faithful. Numerics compare as
+    * BigDecimal (which throws on a non-numeric string — callers wrap it),
+    * ASCII strings and canonical dates lexicographically.
+    */
+  private def statsOrder(ct: org.apache.spark.sql.types.DataType,
+      lt: org.apache.spark.sql.types.DataType,
+      vals: Seq[String]): Option[(String, String) => Int] = {
+    import org.apache.spark.sql.types._
+    def ascii = vals.forall(_.forall(_ < 128))
+    def iso = vals.forall(_.matches("""\d{4}-\d{2}-\d{2}"""))
+    (ct, lt) match {
+      case (_: NumericType, _: NumericType) =>
+        Some((a, b) => BigDecimal(a).compare(BigDecimal(b)))
+      case (StringType, StringType) if ascii => Some(_ compareTo _)
+      case (DateType, DateType) if iso => Some(_ compareTo _)
+      case _ => None
+    }
+  }
+
   /** Conservative three-valued stats check over a RESOLVED predicate:
     * false ONLY when the dir's min/max prove no row satisfies `e`. Handles
     * And/Or and binary comparisons between one attribute and one literal;
@@ -2241,26 +2279,15 @@ final case class VersionedTable(
       case _ => None
     }
     def litOf(x: Expression): Option[(String, DataType)] = x match {
-      case l: Literal =>
-        Option(org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .createToScalaConverter(l.dataType)(l.value))
-          .map(v => (String.valueOf(v), l.dataType))
+      case l: Literal => literalText(l).map(v => (v, l.dataType))
       case _ => None
     }
     // (lo, hi) where lo = cmp(min, lit), hi = cmp(max, lit); None when the
     // pairing is not provably order-faithful → no pruning
     def bounds(ct: DataType, c: String, v: String, lt: DataType): Option[(Int, Int)] =
       dirStats.get(c).flatMap { case (mn, mx) =>
-        def ascii = Seq(mn, mx, v).forall(_.forall(_ < 128))
-        def iso = Seq(mn, mx, v).forall(_.matches("""\d{4}-\d{2}-\d{2}"""))
-        val cmp: Option[(String, String) => Int] = (ct, lt) match {
-          case (_: NumericType, _: NumericType) =>
-            Some((a, b) => BigDecimal(a).compare(BigDecimal(b)))
-          case (StringType, StringType) if ascii => Some(_ compareTo _)
-          case (DateType, DateType) if iso => Some(_ compareTo _)
-          case _ => None
-        }
-        cmp.flatMap(f => scala.util.Try((f(mn, v), f(mx, v))).toOption)
+        statsOrder(ct, lt, Seq(mn, mx, v))
+          .flatMap(f => scala.util.Try((f(mn, v), f(mx, v))).toOption)
       }
     // decompose `a op b` into bounds + flipped (literal on the LEFT:
     // `lit op col` ≡ `col op⁻¹ lit`); None → conservative keep
@@ -2401,6 +2428,132 @@ final case class VersionedTable(
         .reduce(_ && _)
     }.reduceOption(_ || _).getOrElse(lit(false))
 
+  /** The batch's distinct partition tuples, each followed by its rows'
+    * (min, max) per pk column — the bounds [[migratedPartitions]] prunes
+    * by, from the same single aggregation (the same Spark jobs) a plain
+    * distinct over the partition columns takes.
+    */
+  private def touchedGroups(batch: DataFrame): Array[org.apache.spark.sql.Row] = {
+    val bounds = pk.flatMap(c => Seq(min(col(c)), max(col(c))))
+    batch.groupBy(partitionCols.map(col): _*).agg(bounds.head, bounds.tail: _*).collect()
+  }
+
+  /** The partition tuple of a [[touchedGroups]] row. */
+  private def partitionTuple(g: org.apache.spark.sql.Row): org.apache.spark.sql.Row =
+    org.apache.spark.sql.Row.fromSeq(g.toSeq.take(partitionCols.length))
+
+  /** Partitions outside the batch's touched set holding a row visible at
+    * `v` whose pk the batch re-delivers — partition MIGRATION (a
+    * re-embedded vector changing cells, a doc changing lang), shared by
+    * [[merge]] and [[executeMergeInto]]. Such a row would survive the
+    * restage, which reads only touched partitions, and duplicate its key,
+    * so callers pull these partitions into the touched set. `groups` are
+    * [[touchedGroups]] of `batch`. The probe is one column-pruned (pk +
+    * partition) semi-join over only the live dirs that can hold such a
+    * row, by two exact rules:
+    *  - a dir provably in a touched partition holds none: its unescaped
+    *    path values equal a touched tuple (string, integral and date
+    *    columns only; any other type keeps the dir);
+    *  - a migrating key lies inside its dir's recorded pk [min, max] and
+    *    inside its batch group's bounds, so a dir whose pk range meets no
+    *    group's bounds ([[canMatch]]) holds none. A dir without pk stats
+    *    is kept.
+    * Each pk column's group bounds merge once into sorted disjoint
+    * intervals, and each dir binary-searches the one interval that can
+    * meet its range, so the driver-side check stays
+    * O((dirs + groups) · log groups). No Spark job runs when no dir
+    * qualifies, nor when every partition column is part of the pk (equal
+    * pk ⇒ equal partition values ⇒ migration impossible).
+    */
+  private def migratedPartitions(v: Int, batch: DataFrame,
+      groups: Array[org.apache.spark.sql.Row]): Array[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.catalyst.expressions.{
+      And => CAnd, AttributeReference, GreaterThanOrEqual, LessThanOrEqual,
+      Literal => CLit}
+    import org.apache.spark.sql.types._
+    val n = partitionCols.length
+    val touched = groups.map(partitionTuple)
+    val live = snapshotAt(v).liveDirs
+    // (batch group's non-null bounds) — a group whose keys are all NULL
+    // joins nothing
+    val keyed = groups.filter(g => (n until g.length).forall(!g.isNullAt(_)))
+    val cand =
+      if (partitionCols.forall(pc => pk.exists(_.equalsIgnoreCase(pc))) ||
+          keyed.isEmpty) Nil
+      else {
+        val sch = schemaAt(v).getOrElse(sys.error(s"version $v records no schema"))
+        def fieldOf(st: StructType, c: String) = st.fields.find(_.name.equalsIgnoreCase(c))
+        def comparable(t: DataType, b: DataType): Boolean = (t, b) match {
+          case (StringType, StringType) | (DateType, DateType) => true
+          case (ByteType | ShortType | IntegerType | LongType,
+                ByteType | ShortType | IntegerType | LongType) => true
+          case _ => false
+        }
+        val inTouched: String => Boolean =
+          if (!partitionCols.forall(c => (fieldOf(sch, c), fieldOf(batch.schema, c)) match {
+              case (Some(t), Some(b)) => comparable(t.dataType, b.dataType)
+              case _ => false
+            })) _ => false
+          else {
+            val paths: Set[Seq[String]] = touched.map(r => (0 until n).map(i =>
+              if (r.isNullAt(i)) "__HIVE_DEFAULT_PARTITION__" else r.get(i).toString)
+              .toSeq).toSet
+            d => paths.contains(partOf(d).split("/").toSeq.map(seg =>
+              org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+                .unescapePathName(seg.split("=", 2).last)))
+          }
+        // per pk column: its attribute, and the groups' bounds merged into
+        // sorted disjoint intervals (None: not order-faithful, no pruning)
+        case class Iv(lo: CLit, hi: CLit, loText: String, hiText: String)
+        val byCol = pk.zipWithIndex.flatMap { case (c, i) =>
+          for {
+            f <- fieldOf(sch, c)
+            b <- fieldOf(batch.schema, c)
+            ivs = keyed.toSeq.map { g =>
+              val (lo, hi) = (CLit.create(g.get(n + 2 * i), b.dataType),
+                CLit.create(g.get(n + 2 * i + 1), b.dataType))
+              Iv(lo, hi, literalText(lo).get, literalText(hi).get)
+            }
+            ord <- statsOrder(f.dataType, b.dataType, ivs.flatMap(x => Seq(x.loText, x.hiText)))
+            merged <- scala.util.Try(ivs.sortWith((x, y) => ord(x.loText, y.loText) < 0)
+              .foldLeft(Vector.empty[Iv]) { (acc, x) =>
+                acc.lastOption match {
+                  case Some(last) if ord(x.loText, last.hiText) <= 0 =>
+                    if (ord(x.hiText, last.hiText) > 0) acc.init :+ last.copy(hi = x.hi, hiText = x.hiText)
+                    else acc
+                  case _ => acc :+ x
+                }
+              }).toOption
+          } yield (AttributeReference(physicalOf(f.name), f.dataType)(), ord, merged)
+        }
+        def mayHoldKey(d: String): Boolean = {
+          val st = statsFor(d, v)
+          byCol.forall { case (attr, ord, ivs) =>
+            st.get(attr.name).forall { case (mn, _) =>
+              // the first interval ending at or above the dir's min is the
+              // only one that can meet [min, max]; canMatch decides
+              var (lo, hi) = (0, ivs.size - 1)
+              scala.util.Try {
+                while (lo < hi) {
+                  val mid = (lo + hi) >>> 1
+                  if (ord(ivs(mid).hiText, mn) >= 0) hi = mid else lo = mid + 1
+                }
+              }
+              canMatch(CAnd(GreaterThanOrEqual(attr, ivs(lo).lo),
+                LessThanOrEqual(attr, ivs(lo).hi)), st)
+            }
+          }
+        }
+        live.filterNot(inTouched).filter(mayHoldKey)
+      }
+    Phases.timed(s"migrate-probe $path dirs=${cand.size}/${live.size}") {
+      if (cand.isEmpty) Array.empty[org.apache.spark.sql.Row]
+      else withTombstones(frameFor(v, cand), v).filter(!partitionPredicate(touched))
+        .join(batch.select(pk.map(col): _*).distinct(), pk, "left_semi")
+        .select(partitionCols.map(col): _*).distinct().collect()
+    }
+  }
+
   /** Live dirs holding at least one row matching `cond` — file-accurate
     * (via input_file_name on the matching scan), so the removes list never
     * depends on rendering partition values back into paths.
@@ -2426,54 +2579,104 @@ final case class VersionedTable(
       .toSet
   }
 
-  /** Per-leaf-dir min/max stats for `statsCols`, one log line per
-    * (dir, column): `stats=<dir>\t<col>\t<min>\t<max>`, fields URL-encoded.
-    * Computed with ONE aggregate scan over the freshly staged files — the
-    * Delta pattern of collecting file stats at write time, so the cost is
-    * bounded by the staged batch, never the table. Values render through
-    * Spark's string cast (dates → `yyyy-MM-dd`), making lexicographic
-    * comparison order-correct for strings/dates at prune time; numerics
-    * compare as BigDecimal there. An all-null column in a dir emits no
-    * line (no pruning claim). Stats failures only WARN: skipping is an
-    * optimization, the commit must not depend on it.
+  /** The commit's ONE pass over the parquet FOOTERS of the dirs it staged
+    * (`rel`: leaf dirs under the staging root `root`; `ext=` dirs are not
+    * the commit's own and are skipped). It returns the entry's operation
+    * metrics line, `metrics=<numFiles>\t<numOutputRows>` (Delta's
+    * numFiles/numOutputRows), and its per-leaf-dir min/max skipping stats,
+    * one line per (dir, column): `stats=<dir>\t<col>\t<min>\t<max>`,
+    * fields URL-encoded. Stats cover the declared `statsCols` and every pk
+    * column ([[statsPkExtra]]). Each staged file's footer is opened once —
+    * metadata the write already produced, so the cost is bounded by the
+    * staged batch, never the table, and no Spark job runs (Delta's
+    * collect-stats-at-write-time pattern). Values render like Spark's
+    * string cast ([[footerStatsLines]]); an all-null column in a dir emits
+    * no line (no pruning claim). Best-effort, the commit never depends on
+    * it: an unreadable footer drops the metrics line (never a wrong
+    * count), declared columns the footers cannot render faithfully fall
+    * back to one [[scanStatsLines]] pass, and pk columns without faithful
+    * footer stats are skipped per dir.
     */
   private def statsLines(root: Path, rel: Seq[String]): Seq[String] = {
-    if (statsCols.isEmpty || rel.isEmpty) return Nil
-    Phases.timed(s"stats-pass $path") {
-      footerStatsLines(root, rel).getOrElse(scanStatsLines(root, rel))
+    val own = rel.filterNot(_.startsWith(ExtPrefix))
+    if (own.isEmpty) return Nil
+    Phases.timed(s"commit-footers $path") {
+      val footers = try Some(stagedFooters(own)) catch { case _: Exception => None }
+      val metrics = footers.filterNot(_.exists(_._2.contains(None))).map { fs =>
+        val files = fs.flatMap(_._2.flatten)
+        s"metrics=${files.size}\t${files.map(_._1).sum}"
+      }
+      metrics.toSeq ++ footers.flatMap(footerStatsLines).getOrElse(
+        if (statsCols.isEmpty) Nil else scanStatsLines(root, own))
     }
   }
 
-  /** Primary-key columns PIGGYBACK on the write-time stats pass in
-    * addition to the DECLARED `statsCols` (which alone feed DESCRIBE
-    * DETAIL COLUMNS): per-dir pk min/max is what lets [[append]]'s
-    * PK-collision check prune its table scan to the dirs whose key range
-    * overlaps the batch — min/max pruning is EXACT for membership (a
-    * colliding key must lie inside some dir's [min, max]), and the common
-    * monotone-id ingest appends a key range beyond every existing dir,
-    * reducing the per-add collision scan from O(table) to zero dirs.
-    * Strictly piggyback: a pk extra that is a PARTITION column derives
-    * from the dir path for free; a data-column extra is read only from
-    * footers the DECLARED stats columns already force open — a table
-    * whose declared stats are all partition-derived (the cell-partitioned
-    * ANN indexes, dozens of tiny per-cell files) keeps its no-footer-read
-    * shortcut, measured +0.3 s/commit when this was unconditional.
-    * Unsupported pk footer stats are silently skipped per dir (they are
-    * an optimization, unlike the declared columns whose absence forces
-    * the scan fallback).
+  /** Primary-key columns recorded in the write-time stats IN ADDITION to
+    * the declared `statsCols` (which alone feed DESCRIBE DETAIL COLUMNS),
+    * on every table. Per-dir pk min/max is what prunes [[append]]'s
+    * collision scan and [[merge]]'s migration probe
+    * ([[migratedPartitions]]) to the dirs whose key range can overlap the
+    * batch. Min/max pruning is EXACT for membership — a colliding or
+    * migrating key lies inside some dir's [min, max] — and fresh keys
+    * (monotone ids, per-drop reject ids) prune both probes to zero dirs,
+    * so neither starts a Spark job. [[statsLines]] opens every staged
+    * footer for the metrics line anyway, so a pk column costs only its
+    * chunk statistics; a pk column that is a partition column derives
+    * from the dir path. Unsupported or absent pk footer stats are skipped
+    * per dir (an optimization, unlike the declared columns whose absence
+    * forces the scan fallback).
     */
   private lazy val statsPkExtra: Seq[String] =
     pk.map(physicalOf).filterNot(p =>
       statsCols.exists(c => physicalOf(c).equalsIgnoreCase(p)))
 
-  /** [[statsLines]] from the staged files' parquet FOOTERS — metadata the
-    * write already produced — instead of a second Spark scan of the staged
-    * data (an extra job per commit, measured 0.1–0.6 s each on the
-    * maintenance flows; at scale it is a second full read of the batch).
-    * Returns None whenever any requested column cannot be derived
-    * faithfully — absent/untrusted chunk statistics, an unsupported
-    * physical/logical type — and the caller falls back to the scan pass,
-    * so this is strictly an optimization.
+  /** A staged file's footer as [[statsLines]] needs it: the row count and
+    * the top-level column chunks (file-cased name, row-group rows, chunk)
+    * of the stats columns that are not partition columns.
+    */
+  private type Footer =
+    (Long, Seq[(String, Long, org.apache.parquet.hadoop.metadata.ColumnChunkMetaData)])
+
+  /** The [[Footer]] of every parquet file under each of `dirs`, grouped per
+    * dir in `dirs` order; None for a file whose footer cannot be read.
+    * Footer opens are ~10 ms of independent local IO each, so every file
+    * of the commit reads concurrently (the [[footerRowsAll]] discipline).
+    */
+  private def stagedFooters(dirs: Seq[String]): Seq[(String, Seq[Option[Footer]])] = {
+    import scala.jdk.CollectionConverters._
+    val dataCols = (statsCols.map(physicalOf) ++ statsPkExtra).filterNot(c =>
+      partitionCols.exists(p => physicalOf(p).equalsIgnoreCase(c)))
+    val files = dirs.map(d => d -> parquetFilesOf(Seq(d)).map(_.getPath))
+    val read = files.flatMap(_._2).asJava.parallelStream()
+      .map[Option[Footer]] { f =>
+        try {
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile
+              .fromPath(f, spark.sparkContext.hadoopConfiguration))
+          try Some((r.getRecordCount, r.getFooter.getBlocks.asScala.toSeq.flatMap { b =>
+            b.getColumns.asScala.toSeq.collect {
+              case cc if cc.getPath.toArray.length == 1 &&
+                  dataCols.exists(_.equalsIgnoreCase(cc.getPath.toArray.apply(0))) =>
+                (cc.getPath.toArray.apply(0), b.getRowCount, cc)
+            }
+          }))
+          finally r.close()
+        } catch { case _: Exception => None }
+      }
+      .collect(java.util.stream.Collectors.toList[Option[Footer]])
+      .asScala.iterator
+    files.map { case (d, ps) => d -> ps.map(_ => read.next()) }
+  }
+
+  /** [[statsLines]]' stats from the staged files' [[Footer]]s instead of a
+    * second Spark scan of the staged data (an extra job per commit,
+    * measured 0.1–0.6 s each on the maintenance flows; at scale a second
+    * full read of the batch). Returns None whenever a DECLARED column
+    * cannot be derived faithfully — an unreadable footer, absent/untrusted
+    * chunk statistics, an unsupported physical/logical type — and the
+    * caller falls back to the scan pass, so this is strictly an
+    * optimization. A pk column ([[statsPkExtra]]) in that state makes no
+    * claim for the dir instead.
     *
     * Rendering parity with the scan path is LOAD-BEARING (the strings are
     * surfaced verbatim by DESCRIBE DETAIL COLUMNS and compared by the
@@ -2490,10 +2693,10 @@ final case class VersionedTable(
     * after its partition-discovery round-trip. All-null chunks (stats
     * present, no non-null value) emit no line, like the scan path.
     */
-  private def footerStatsLines(root: Path, rel: Seq[String]): Option[Seq[String]] = {
+  private def footerStatsLines(
+      footers: Seq[(String, Seq[Option[Footer]])]): Option[Seq[String]] = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    import scala.jdk.CollectionConverters._
     val hiveDefault = "__HIVE_DEFAULT_PARTITION__"
     // (orderable key, rendered string); orderable key mirrors the footer
     // comparator so cross-file folding picks the true bounds
@@ -2583,11 +2786,7 @@ final case class VersionedTable(
     try {
       val strict = statsCols.map(physicalOf)
       val wanted = strict ++ statsPkExtra
-      // pk-extra columns with unsupported/absent footer stats are dropped
-      // silently per dir instead of failing the whole footer pass over to
-      // the scan fallback — their lines are purely the collision-prune
-      // optimization, never a coverage contract
-      val lines = rel.map { d =>
+      val lines = footers.map { case (d, files) =>
         // per dir: a column skipped in one dir still gets stats in another
         val poisoned = scala.collection.mutable.HashSet.empty[String]
         // partition columns: one value per leaf dir, straight from the path
@@ -2603,71 +2802,34 @@ final case class VersionedTable(
           }
         }
         val partKeys = segs.map(_._1.toLowerCase).toSet
-        // piggyback rule (see statsPkExtra): pk-extra DATA columns are
-        // read only when a DECLARED data column already forces the
-        // footers open for this dir
-        val strictData = strict.filterNot(c => partKeys(c.toLowerCase))
-        val dataCols =
-          if (strictData.isEmpty) strictData
-          else wanted.filterNot(c => partKeys(c.toLowerCase))
-        // fold (column → bounds) across every file and row group of the
-        // dir; when every stats column is a partition column there is
-        // nothing to read — the dominant case for cell-partitioned ANN
-        // indexes, whose dozens of tiny per-cell files would otherwise
-        // each pay a footer open
+        // fold (column → bounds) across every file and row group of the dir
         val acc = scala.collection.mutable.HashMap
           .empty[String, Option[(V, V)]] // fileCasedName → running bounds
-        if (dataCols.nonEmpty) {
-          // per-file footer reads are ~10 ms of independent local IO —
-          // read concurrently (the footerRowsAll discipline), then fold
-          // deterministically on this thread
-          type FileCols =
-            Seq[(String, Long, org.apache.parquet.hadoop.metadata.ColumnChunkMetaData)]
-          val perFile: Seq[Option[FileCols]] = parquetFilesOf(Seq(d))
-            .asJava.parallelStream()
-            .map[Option[FileCols]] { f =>
-              try {
-                val in = org.apache.parquet.hadoop.util.HadoopInputFile
-                  .fromPath(f.getPath, spark.sparkContext.hadoopConfiguration)
-                val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-                try {
-                  Some(r.getFooter.getBlocks.asScala.toSeq.flatMap { b =>
-                    b.getColumns.asScala.toSeq.collect {
-                      case cc if cc.getPath.toArray.length == 1 &&
-                          dataCols.exists(_.equalsIgnoreCase(
-                            cc.getPath.toArray.apply(0))) =>
-                        (cc.getPath.toArray.apply(0), b.getRowCount, cc)
-                    }
-                  })
-                } finally r.close()
-              } catch { case _: Exception => None }
-            }
-            .collect(java.util.stream.Collectors.toList[Option[FileCols]])
-            .asScala.toSeq
-          if (perFile.exists(_.isEmpty)) return None // unreadable footer
-          perFile.flatten.flatten.foreach { case (name, rows, cc) =>
-            chunkStats(cc, rows) match {
-              case None =>
-                // absent/unsupported stats: fatal for DECLARED columns
-                // (fall back to the scan pass), a silent skip for the
-                // pk-extra ones
-                if (strict.exists(_.equalsIgnoreCase(name))) return None
-                poisoned += name
-                acc.remove(name)
-              case _ if poisoned(name) => ()
-              case Some(None) =>
-                if (!acc.contains(name)) acc(name) = None
-              case Some(Some((mn, mx))) =>
-                acc(name) = acc.get(name).flatten match {
-                  case Some((m0, x0)) => Some((lower(m0, mn), upper(x0, mx)))
-                  case None => Some((mn, mx))
-                }
-            }
+        if (files.contains(None)) {
+          // an unreadable footer hides its file's bounds: a declared data
+          // column falls back to the scan, a pk column claims nothing here
+          if (strict.exists(c => !partKeys(c.toLowerCase))) return None
+        } else files.flatten.flatMap(_._2).foreach { case (name, rows, cc) =>
+          chunkStats(cc, rows) match {
+            case None =>
+              // absent/unsupported stats: fatal for DECLARED columns
+              // (fall back to the scan pass), a silent skip for the
+              // pk-extra ones
+              if (strict.exists(_.equalsIgnoreCase(name))) return None
+              poisoned += name
+              acc.remove(name)
+            case _ if poisoned(name) => ()
+            case Some(None) =>
+              if (!acc.contains(name)) acc(name) = None
+            case Some(Some((mn, mx))) =>
+              acc(name) = acc.get(name).flatten match {
+                case Some((m0, x0)) => Some((lower(m0, mn), upper(x0, mx)))
+                case None => Some((mn, mx))
+              }
           }
-          // a requested data column missing from a file's schema is fine
-          // (schema evolution: no claim); nested columns are
-          // top-level-only here
         }
+        // a requested data column missing from a file's schema is fine
+        // (schema evolution: no claim); nested columns are top-level-only
         val dataLines = acc.toSeq.collect {
           case (name, Some((mn, mx))) => (name, mn.render, mx.render)
         }
@@ -2780,25 +2942,11 @@ final case class VersionedTable(
     val ts = math.max(
       if (next > 1) readLog(next - 1).ts.getOrElse(0L) + 1 else 0L,
       System.currentTimeMillis())
-    // operation metrics (Delta's numFiles/numOutputRows), recorded IN the
-    // entry from the parquet footers of the dirs THIS commit staged —
-    // bounded by the commit's own output, never table size, and footer
-    // reads are O(1) metadata IO on files just written. Best-effort: a
-    // failed footer read must never fail a commit whose data is staged.
-    val metricsLine = Phases.timed(s"commit-footers $path") {
-      val own = adds.filterNot(_.startsWith(ExtPrefix))
-      if (own.isEmpty) Nil
-      else try {
-        val files = parquetFilesOf(own)
-        // concurrent footer reads (footerRowsAll) — measured serial cost
-        // on q118's micro-batch commits was +6.7 s
-        sumFooterRows(files.map(_.getPath))
-          .map(n => s"metrics=${files.size}\t$n").toSeq
-      } catch { case _: Exception => Nil }
-    }
+    // operation metrics (the `metrics=` line) ride `extraLines`: the
+    // caller's [[statsLines]] reads them from the staged footers in the
+    // same pass as the skipping stats
     val content =
       (Seq(s"action=$action", s"schema=$schemaJson", s"ts=$ts") ++
-        metricsLine ++
         adds.map("add=" + _) ++ removes.map("remove=" + _) ++ extraLines ++
         // CREATE-declared identity/generated specs buffered before any
         // commit existed ride the first commit that lands (atomic with
@@ -3240,7 +3388,7 @@ final case class VersionedTable(
     // clears the tombstone, so it remains the upsert path.
     //
     // Dir pruning by pk skipping stats (recorded at write time for every
-    // pk column — see statsPkExtra): a colliding key must lie inside some
+    // pk column on every table — see statsPkExtra): a colliding key must lie inside some
     // live dir's [min, max], so dropping dirs whose recorded pk range
     // cannot overlap the batch's bounds is EXACT, never a missed
     // collision. Dirs without pk stats are conservatively kept (canMatch's
@@ -3273,7 +3421,7 @@ final case class VersionedTable(
     // must scan the whole table or it admits a duplicate PK.
     val pkAligned = partitionCols.nonEmpty &&
       partitionCols.forall(pc => pk.exists(_.equalsIgnoreCase(pc)))
-    Phases.timed(s"append-collide $path") {
+    Phases.timed(s"append-collide $path dirs=${liveForCollide.size}/${liveAll.size}") {
       if (liveForCollide.nonEmpty) {
         val raw = frameFor(next - 1, liveForCollide)
         val rawT =
@@ -3442,27 +3590,15 @@ final case class VersionedTable(
     // recording is on) the change-image join (identity columns cannot be
     // partition columns, so deriving it BEFORE identity assignment is
     // sound)
-    val touched = Phases.timed(s"touched-set $path") {
+    val groups = Phases.timed(s"touched-set $path") {
       if (partitionCols.isEmpty) Array.empty[org.apache.spark.sql.Row]
-      else updates0.select(partitionCols.map(col): _*).distinct().collect()
+      else touchedGroups(updates0)
     }
+    val touched = groups.map(partitionTuple)
     // partition MIGRATION: a matched pk whose current row lives in a
-    // partition the batch's new values don't name (a re-embedded vector
-    // changing cells, a doc changing lang) would survive the anti-join —
-    // the restage never reads its partition — and duplicate the key. Probe
-    // the untouched partitions for matched pks and pull their partitions
-    // into the touched set. The probe is one column-pruned (pk +
-    // partition) semi-join over the untouched partitions, and is skipped
-    // entirely when every partition column is part of the pk (equal pk ⇒
-    // equal partition values ⇒ migration impossible).
-    val migrated = Phases.timed(s"migrate-probe $path") {
-      if (partitionCols.isEmpty ||
-          partitionCols.forall(pc => pk.exists(_.equalsIgnoreCase(pc))))
-        Array.empty[org.apache.spark.sql.Row]
-      else current.filter(!partitionPredicate(touched))
-        .join(updates0.select(pk.map(col): _*).distinct(), pk, "left_semi")
-        .select(partitionCols.map(col): _*).distinct().collect()
-    }
+    // partition the batch's new values don't name would survive the
+    // anti-join and duplicate the key — pull those partitions in too
+    val migrated = migratedPartitions(next - 1, updates0, groups)
     val touchedAll = touched ++ migrated
     val curT =
       if (partitionCols.isEmpty) current
@@ -3886,24 +4022,18 @@ final case class VersionedTable(
       (adds ++ removes).map(partOf).toSet, None, cdfStaged, maxAttempts)
     } finally out.unpersist(false)
     }
-    val touched0 =
+    val groups0 =
       if (partitionCols.isEmpty || hasBySource) Array.empty[org.apache.spark.sql.Row]
-      else source.select(partitionCols.map(col): _*).distinct().collect()
-    // partition MIGRATION (merge()'s probe, mirrored): a matched pk whose
-    // live row sits in a partition the source doesn't name would fall out
-    // of curT and join as SOURCE-ONLY — an insert clause would duplicate
-    // the key, a matched clause would silently not fire. Probe the
-    // unnamed partitions for matched pks and widen the touched set;
-    // skipped when the join is already table-wide or when partition
-    // columns are part of the pk (equal keys ⇒ equal partitions).
+      else touchedGroups(source)
+    // partition MIGRATION (as merge): a matched pk whose live row sits in a
+    // partition the source doesn't name would fall out of curT and join as
+    // SOURCE-ONLY — an insert clause would duplicate the key, a matched
+    // clause would silently not fire. Widen the touched set by the
+    // partitions holding one; no probe when the join is already table-wide
     val migrated0 =
-      if (partitionCols.isEmpty || hasBySource ||
-          partitionCols.forall(pc => pk.exists(_.equalsIgnoreCase(pc))))
-        Array.empty[org.apache.spark.sql.Row]
-      else current.filter(!partitionPredicate(touched0))
-        .join(source.select(pk.map(col): _*).distinct(), pk, "left_semi")
-        .select(partitionCols.map(col): _*).distinct().collect()
-    attempt(touched0 ++ migrated0, widened = false)
+      if (hasBySource) Array.empty[org.apache.spark.sql.Row]
+      else migratedPartitions(next - 1, source, groups0)
+    attempt(groups0.map(partitionTuple) ++ migrated0, widened = false)
     } finally if (ownSourceCache) sourceP.unpersist(false)
   }
 
@@ -4492,8 +4622,7 @@ final case class VersionedTable(
     val gone = (adds ++ to.dvDirs).filterNot(d => fs.exists(resolvedPath(d)))
     require(gone.isEmpty,
       s"cannot restore to version $v: ${gone.size} of its data dirs were vacuumed")
-    val schemaJson = schemaJsonAt(v)
-      .getOrElse(sys.error(s"version $v has no recorded schema"))
+    val schemaJson = recordedSchemaJson(v)
     // metadata delta back to v's state. Replay applies adds BEFORE drops
     // ((m ++ added) -- dropped), so a name active in both but redefined
     // since v is reset by its add line alone — dropping it too would
@@ -4534,8 +4663,15 @@ final case class VersionedTable(
     // failure-path cleanup is a no-op. The restore action RESETS the
     // tombstone set in replay, so the dvadd lines are v's exact DV state.
     val noStaging = new Path(s"$dataDir/.restore_${java.util.UUID.randomUUID().toString.take(8)}")
+    // operation metrics over the re-added dirs, from their footers (their
+    // skipping stats stay with the entries that first added them)
+    val own = adds.filterNot(_.startsWith(ExtPrefix))
+    val metrics =
+      if (own.isEmpty) None
+      else scala.util.Try(parquetFilesOf(own)).toOption.flatMap(files =>
+        sumFooterRows(files.map(_.getPath)).map(n => s"metrics=${files.size}\t$n"))
     if (!commit("restore", cur + 1, adds, removes, noStaging, schemaJson,
-        to.dvDirs.map("dvadd=" + _) ++ metaLines))
+        metrics.toSeq ++ to.dvDirs.map("dvadd=" + _) ++ metaLines))
       sys.error(s"concurrent writer: version ${cur + 1} was committed by another " +
         "writer; nothing was changed — retry on the new state")
   }
@@ -4724,8 +4860,7 @@ final case class VersionedTable(
       // the same COPY against the clone stays idempotent
       kv("setprop", snap.properties) ++
       snap.copiedFiles.toSeq.sorted.map(f => s"copied=${enc(f)}")
-    val schemaJson = schemaJsonAt(v)
-      .getOrElse(sys.error(s"version $v has no recorded schema"))
+    val schemaJson = recordedSchemaJson(v)
     val noStaging = new Path(s"$destPath/.clone_${java.util.UUID.randomUUID().toString.take(8)}")
     if (!dest.commit("clone", 1, extDirs, Nil, noStaging, schemaJson,
         stats ++ constr ++ extDv))
@@ -4882,8 +5017,7 @@ final case class VersionedTable(
     val missing = missingData ++ missingDv
     if (dryRun || missing.isEmpty) return missing
     val survivorsDv = snapshotAt(v).dvDirs.filterNot(missingDv.contains)
-    val schemaJson = schemaJsonAt(v).getOrElse(
-      sys.error(s"version $v has no recorded schema"))
+    val schemaJson = recordedSchemaJson(v)
     val noStaging = new Path(
       s"$dataDir/.fsck_${java.util.UUID.randomUUID().toString.take(8)}")
     if (!commit("fsck", v + 1, Nil, missingData, noStaging, schemaJson,

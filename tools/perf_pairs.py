@@ -3,7 +3,7 @@
 
 Usage:
   python3 tools/perf_pairs.py --parent DIR --change DIR \\
-      --workload daily_drops --seeds 1-8 [--seconds 16]
+      --workload daily_drops --seeds 1-8 [--seconds 16] [--phases]
 
 For each seed it runs `python3 perfbench/run.py --workload W --seed S
 --seconds N --trace 0` once in each checkout, alternating which side runs
@@ -14,10 +14,19 @@ change/parent ratio of the medians and the pairs the change won, with the
 direction and bound taken from the change checkout's BENCHMARK.json. The
 last line is the same summary as one JSON object. Exits 1 when any run
 reports failed > 0, is not correct, or prints no result.
+
+--phases: with SPARK_GRAFT_TIMING=1 set in the environment (the runs
+inherit it), the engine prints `[timing] <sec> s  <label>` lines; after
+each run they are read from the checkout's
+.bench_build/last/<workload>/jvm.log, and each label's per-run total is
+summarized per side (median over runs), so a gain can be named by the
+phase that moved. A label's table path is cut to its last two components
+(silver/orders) and its `dirs=<read>/<live>` token is summed separately.
 """
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -76,6 +85,71 @@ def summarize(pairs, spec):
     return rows
 
 
+TIMING = re.compile(r"^\[timing\]\s+([0-9.]+) s\s+(.+)$")
+DIRS = re.compile(r"^dirs=(\d+)/(\d+)$")
+
+
+def phase_key(label):
+    """'migrate-probe /w/runs/x/silver/orders dirs=0/7' ->
+    ('migrate-probe silver/orders', (0, 7)); dirs is None without a token."""
+    words, dirs = [], None
+    for w in label.split():
+        m = DIRS.match(w)
+        if m:
+            dirs = (int(m.group(1)), int(m.group(2)))
+        else:
+            words.append("/".join(w.rstrip("/").split("/")[-2:]) if "/" in w else w)
+    return " ".join(words), dirs
+
+
+def read_phases(text):
+    """One run's log text -> {key: {"s", "n", "read", "live"}}: seconds and
+    lines per phase key, plus the summed dirs tokens (None when absent)."""
+    out = {}
+    for line in text.splitlines():
+        m = TIMING.match(line.strip())
+        if not m:
+            continue
+        key, dirs = phase_key(m.group(2))
+        e = out.setdefault(key, {"s": 0.0, "n": 0, "read": None, "live": None})
+        e["s"] += float(m.group(1))
+        e["n"] += 1
+        if dirs:
+            e["read"] = (e["read"] or 0) + dirs[0]
+            e["live"] = (e["live"] or 0) + dirs[1]
+    return out
+
+
+def summarize_phases(runs):
+    """runs: [(parent_phases, change_phases)] from read_phases. Returns one
+    row per key seen in any run; a key a run lacks counts as 0 s there."""
+    keys = sorted({k for pair in runs for side in pair for k in side})
+    rows = []
+    for k in keys:
+        row = {"phase": k}
+        for i, side in enumerate(("parent", "change")):
+            es = [pair[i].get(k, {"s": 0.0, "n": 0, "read": None, "live": None})
+                  for pair in runs]
+            row[side + "_s"] = statistics.median(e["s"] for e in es)
+            row[side + "_n"] = statistics.median(e["n"] for e in es)
+            reads = [e["read"] for e in es if e["read"] is not None]
+            row[side + "_dirs"] = (
+                (statistics.median(reads),
+                 statistics.median(e["live"] for e in es if e["live"] is not None))
+                if reads else None)
+        rows.append(row)
+    return rows
+
+
+def last_log(checkout, workload):
+    p = os.path.join(checkout, ".bench_build", "last", workload, "jvm.log")
+    try:
+        with open(p) as f:
+            return f.read()
+    except OSError:
+        return ""
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--parent", required=True, help="checkout of the parent commit")
@@ -83,19 +157,23 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 1-8 or 1,3,5")
     ap.add_argument("--seconds", type=float, default=16)
+    ap.add_argument("--phases", action="store_true",
+                    help="summarize [timing] phases (runs need SPARK_GRAFT_TIMING=1)")
     a = ap.parse_args()
 
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
         spec = {m["name"]: m for m in json.load(f)["end_to_end"]}
-    pairs, bad = [], []
+    pairs, bad, phases = [], [], []
     for i, seed in enumerate(parse_seeds(a.seeds)):
         order = [("parent", a.parent), ("change", a.change)]
         if i % 2:
             order.reverse()
-        got = {}
+        got, timed = {}, {}
         for side, checkout in order:
             r = run_once(checkout, a.workload, seed, a.seconds)
             got[side] = r
+            if a.phases:
+                timed[side] = read_phases(last_log(checkout, a.workload))
             if r is None or r.get("failed", 1) > 0 or not r.get("correct"):
                 bad.append(f"{side} seed={seed}")
             vals = " ".join(f"{k}={v['value']:.4g}"
@@ -104,6 +182,8 @@ def main():
                   f"failed={(r or {}).get('failed')} {vals}", flush=True)
         if got["parent"] and got["change"]:
             pairs.append((seed, got["parent"], got["change"]))
+            if a.phases:
+                phases.append((timed["parent"], timed["change"]))
 
     rows = summarize(pairs, spec) if pairs else []
     print(f"{a.workload}: {len(pairs)} pairs, parent -> change "
@@ -115,10 +195,28 @@ def main():
               f"[{r['change_iqr'][0]:.4g}-{r['change_iqr'][1]:.4g}]  "
               f"ratio {r['ratio']:.3f}  wins {r['change_wins']}/{r['pairs']}  "
               f"({r['better']} is better, bound {r['bound']})")
+    prows = summarize_phases(phases) if phases else []
+    if a.phases:
+        if not prows:
+            print("phases: no [timing] lines in the runs' jvm.log — "
+                  "set SPARK_GRAFT_TIMING=1")
+        else:
+            print("phases: per-run total s, median over runs, parent -> change "
+                  "(lines per run; dirs = summed read/live)")
+
+        def dirs(d):
+            return f" dirs {d[0]:g}/{d[1]:g}" if d else ""
+        for r in prows:
+            print(f"  {r['phase']:<40} {r['parent_s']:.3f} (n={r['parent_n']:g}"
+                  f"{dirs(r['parent_dirs'])}) -> {r['change_s']:.3f} "
+                  f"(n={r['change_n']:g}{dirs(r['change_dirs'])})")
     if bad:
         print("failed runs: " + ", ".join(bad))
-    print(json.dumps({"workload": a.workload, "pairs": len(pairs),
-                      "failed_runs": bad, "metrics": rows}))
+    out = {"workload": a.workload, "pairs": len(pairs),
+           "failed_runs": bad, "metrics": rows}
+    if a.phases:
+        out["phases"] = prows
+    print(json.dumps(out))
     return 1 if bad else 0
 
 

@@ -76,5 +76,51 @@ class Summarize(unittest.TestCase):
         self.assertEqual(metrics, ["read_p50_s"])
 
 
+LOG = """\
+25/05/01 INFO SparkContext: Running Spark version 4.1.2
+[timing]   0.270 s  migrate-probe /w/runs/daily_drops-1-9/silver/orders dirs=2/7
+[timing]   0.030 s  migrate-probe /w/runs/daily_drops-1-9/silver/orders dirs=0/9
+[timing]   0.450 s  append-collide /w/runs/daily_drops-1-9/rejected/orders dirs=5/5
+[timing]   1.000 s  stage-write /w/runs/daily_drops-1-9/silver/orders
+"""
+
+
+class Phases(unittest.TestCase):
+    def test_key_cuts_the_path_and_splits_off_dirs(self):
+        self.assertEqual(
+            perf_pairs.phase_key("migrate-probe /a/b/silver/orders dirs=0/7"),
+            ("migrate-probe silver/orders", (0, 7)))
+        self.assertEqual(perf_pairs.phase_key("stage-write /a/b/silver/orders"),
+                         ("stage-write silver/orders", None))
+        self.assertEqual(perf_pairs.phase_key("ivfpq-fixture-k1"),
+                         ("ivfpq-fixture-k1", None))
+
+    def test_one_run_sums_seconds_lines_and_dirs_per_key(self):
+        got = perf_pairs.read_phases(LOG)
+        probe = got["migrate-probe silver/orders"]
+        self.assertAlmostEqual(probe["s"], 0.30)
+        self.assertEqual((probe["n"], probe["read"], probe["live"]), (2, 2, 16))
+        self.assertEqual(got["stage-write silver/orders"]["read"], None)
+        self.assertEqual(len(got), 3)  # the Spark chatter is no phase
+
+    def test_medians_per_side_and_absent_keys_count_zero(self):
+        run = perf_pairs.read_phases(LOG)
+        gone = {k: v for k, v in run.items() if not k.startswith("append-collide")}
+        rows = {r["phase"]: r for r in perf_pairs.summarize_phases(
+            [(run, gone), (run, gone), (run, run)])}
+        collide = rows["append-collide rejected/orders"]
+        self.assertAlmostEqual(collide["parent_s"], 0.45)
+        self.assertEqual(collide["change_s"], 0.0)
+        self.assertEqual(collide["parent_dirs"], (5, 5))
+        self.assertEqual(collide["change_dirs"], (5, 5))  # from the one run that had it
+        self.assertEqual(collide["change_n"], 0)
+        self.assertAlmostEqual(rows["stage-write silver/orders"]["change_s"], 1.0)
+        self.assertIsNone(rows["stage-write silver/orders"]["change_dirs"])
+
+    def test_empty_log_has_no_phases(self):
+        self.assertEqual(perf_pairs.read_phases(""), {})
+        self.assertEqual(perf_pairs.summarize_phases([({}, {})]), [])
+
+
 if __name__ == "__main__":
     unittest.main()
