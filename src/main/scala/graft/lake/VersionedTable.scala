@@ -1622,16 +1622,11 @@ final case class VersionedTable(
     * between fails the claim. Fails fast on the lost race.
     */
   private def commitMetadataOnly(action: String, next: Int, schemaJson: String,
-                                 extraLines: Seq[String], what: String): Unit = {
-    // nothing staged — hand commit() a path that cannot exist
-    val noStaging = new Path(s"$dataDir/.meta_${java.util.UUID.randomUUID().toString.take(8)}")
+                                 extraLines: Seq[String], what: String): Unit =
     // metadata commits change no rows: mark them change-transparent so a
     // feed spanning them can still take the recorded-changes path
-    if (!commit(action, next, Nil, Nil, noStaging, schemaJson,
-        extraLines :+ "cdf=none"))
-      sys.error(s"concurrent writer: version $next was committed by another " +
-        s"writer; $what changed nothing — retry on the new state")
-  }
+    commitStaged(action, next, Nil, Nil, None, schemaJson,
+      extraLines :+ "cdf=none", what)
 
   /** Verify a write batch against the active constraints in ONE aggregate
     * pass; throws [[ConstraintViolationException]] naming the first
@@ -2922,17 +2917,14 @@ final case class VersionedTable(
     } finally fs.delete(tmp, false)
   }
 
-  /** Atomic commit attempt: linking the fully-written log file into place
-    * claims version `next` (see [[atomicClaim]]). Returns true on success,
-    * false when the race was lost — the staged dirs are left in place so
-    * the CALLER decides whether to retry the claim at a later version or
-    * roll the staging back. An I/O failure before the claim (disk full
-    * writing the temp log) removes the staging and rethrows — no phantom
-    * version, no stranded data.
+  /** The claim step of [[commitStaged]], its only caller: linking the
+    * fully-written log file into place claims version `next` (see
+    * [[atomicClaim]]). Returns true on success, false when the race was
+    * lost; the caller owns the staging either way.
     */
   private def commit(action: String, next: Int, adds: Seq[String],
-                     removes: Seq[String], staged: Path, schemaJson: String,
-                     extraLines: Seq[String] = Nil): Boolean = {
+                     removes: Seq[String], schemaJson: String,
+                     extraLines: Seq[String]): Boolean = {
     beforeCommitHook()
     // in-commit timestamp (Delta's ICT): monotonic per table via
     // max(prev + 1, now), recorded IN the entry — [[versionAsOf]] must
@@ -2953,9 +2945,7 @@ final case class VersionedTable(
         // the data they govern)
         pendingIdentityLines ++ pendingGeneratedLines ++
         pendingDefaultLines ++ pendingNotNullLines).mkString("\n")
-    val claimed =
-      try atomicClaim(new Path(logDir, s"${vname(next)}.log"), content)
-      catch { case e: Throwable => fs.delete(staged, true); throw e }
+    val claimed = atomicClaim(new Path(logDir, s"${vname(next)}.log"), content)
     if (claimed) { pendingIdentitySpecs = Map.empty
       pendingGeneratedCols = Map.empty
       pendingDefaults = Map.empty
@@ -3078,13 +3068,27 @@ final case class VersionedTable(
     enforceConstraints(df, ledger)
     val next = currentVersion + 1
     val (root, adds) = stage(df, next)
-    if (!commit("overwrite", next, adds, snapshotAt(next - 1).liveDirs, root, df.schema.json,
-        statsLines(root, adds) ++ identityWmLines(root) ++
-          txnLines(txn) ++ ledger)) {
-      fs.delete(root, true)
-      sys.error(s"concurrent writer: version $next was committed by another " +
-        "writer; this overwrite's staging has been rolled back — retry on the new state")
-    }
+    commitStaged("overwrite", next, adds, snapshotAt(next - 1).liveDirs, Some(root),
+      df.schema.json, statsLines(root, adds) ++ identityWmLines(root) ++
+        txnLines(txn) ++ ledger, txn = txn)
+  }
+
+  /** `incoming` conformed to the recorded schema `sch` for a writer that
+    * cannot evolve it: a column outside `sch` is refused, a present one is
+    * cast to its recorded type, an omitted one is null-filled, in `sch`'s
+    * column order.
+    */
+  private def conformed(incoming: DataFrame, sch: org.apache.spark.sql.types.StructType,
+                        op: String): DataFrame = {
+    val extraCols = incoming.columns
+      .filterNot(c => sch.fieldNames.exists(_.equalsIgnoreCase(c)))
+    require(extraCols.isEmpty,
+      s"$op columns not in the table schema: ${extraCols.mkString(",")}")
+    incoming.select(sch.fields.toSeq.map { f =>
+      if (incoming.columns.exists(_.equalsIgnoreCase(f.name)))
+        col(f.name).cast(f.dataType).as(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
+    }: _*)
   }
 
   /** Partition-scoped overwrite (Spark's dynamic partition-overwrite,
@@ -3099,7 +3103,7 @@ final case class VersionedTable(
     * with the superseded dirs). Columns align to the table schema as in
     * [[append]]. Concurrency: optimistic retry when every winner touched
     * only OTHER partitions; overlapping, metadata-changing, or
-    * schema-changing winners fail fast ([[commitMergeStaged]]).
+    * schema-changing winners fail fast ([[commitStaged]]).
     */
   def overwritePartitions(dfIn: DataFrame, txn: Option[(String, Long)] = None): Unit =
     overwritePartitions(dfIn, txn, Seq.empty)
@@ -3127,17 +3131,9 @@ final case class VersionedTable(
       s"static partition spec names ${staticSpec.length} column(s) but the " +
         s"table partitions by only ${partitionCols.length}")
     if (!exists) { overwrite(dfIn, txn); return }
-    val incoming = applyGenerated(applyDefaults(applyIdentity(dfIn)))
     val sch = tableSchema
-    val extraCols = incoming.columns
-      .filterNot(c => sch.fieldNames.exists(_.equalsIgnoreCase(c)))
-    require(extraCols.isEmpty,
-      s"overwritePartitions columns not in the table schema: ${extraCols.mkString(",")}")
-    val df = incoming.select(sch.fields.toSeq.map { f =>
-      if (incoming.columns.exists(_.equalsIgnoreCase(f.name)))
-        col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
+    val df = conformed(applyGenerated(applyDefaults(applyIdentity(dfIn))), sch,
+      "overwritePartitions")
     enforceConstraints(df)
     val next = currentVersion + 1
     // the DV-aware read frame is only needed for the CDF pre-image; its
@@ -3162,7 +3158,7 @@ final case class VersionedTable(
     }
     val removes = snapshotAt(next - 1).liveDirs
       .filter(d => newParts.contains(partOf(d)) || specMatches(d))
-    val cdfStaged: Option[(Path, String)] =
+    val cdfStaged: Option[Path] =
       if (recordCdf) {
         assertCdfNamesFree(df.columns.toSeq)
         val touched = df.select(partitionCols.map(col): _*).distinct().collect()
@@ -3182,11 +3178,10 @@ final case class VersionedTable(
     // EXACTLY the replaced partitions' tombstones (an "overwrite" action
     // would reset every partition's; "insert" would preserve them).
     // Optimistic retry on disjoint-partition winners, as merge/append.
-    commitMergeStaged(next, adds, removes, root, sch.json,
-      statsLines(root, adds) ++ identityWmLines(root) ++ txnLines(txn) ++
-        cdfStaged.map(_._2).toSeq,
-      (adds ++ removes).map(partOf).toSet, txn, cdfStaged, maxAttempts = 5,
-      action = "replace")
+    commitStaged("replace", next, adds, removes, Some(root), sch.json,
+      statsLines(root, adds) ++ identityWmLines(root) ++ txnLines(txn),
+      txn = txn, cdfStaged = cdfStaged, maxAttempts = 5,
+      ourParts = (adds ++ removes).map(partOf).toSet)
   }
 
   /** Predicate-scoped atomic overwrite (Delta's GENERAL replaceWhere —
@@ -3213,17 +3208,8 @@ final case class VersionedTable(
     require(pk.nonEmpty, "replaceWhere needs primary-key columns")
     val next = currentVersion + 1
     val current = read
-    val incoming = applyGenerated(applyDefaults(applyIdentity(dfIn)))
-    val sch = tableSchema
-    val extraCols = incoming.columns
-      .filterNot(c => sch.fieldNames.exists(_.equalsIgnoreCase(c)))
-    require(extraCols.isEmpty,
-      s"replaceWhere columns not in the table schema: ${extraCols.mkString(",")}")
-    val updates = incoming.select(sch.fields.toSeq.map { f =>
-      if (incoming.columns.exists(_.equalsIgnoreCase(f.name)))
-        col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
+    val updates = conformed(applyGenerated(applyDefaults(applyIdentity(dfIn))),
+      tableSchema, "replaceWhere")
     enforceConstraints(updates)
     // predicate-containment, null-PK, and duplicate-PK checks folded into
     // ONE aggregate job over the batch (they were three separate actions —
@@ -3274,7 +3260,7 @@ final case class VersionedTable(
         (r, a, live.filter(d =>
           newParts.contains(partOf(d)) || doomedDirs.contains(partOf(d))))
       }
-    val cdfStaged: Option[(Path, String)] =
+    val cdfStaged: Option[Path] =
       if (recordCdf) {
         assertCdfNamesFree(updates.columns.toSeq)
         Some(stageChanges(
@@ -3284,15 +3270,9 @@ final case class VersionedTable(
       } else None
     // action "replace": tombstone replay clears exactly the restaged
     // partitions' tombstones, as overwritePartitions
-    if (!commit("replace", next, adds, removes, root, current.schema.json,
-        statsLines(root, adds) ++ identityWmLines(root) ++ txnLines(txn) ++
-          cdfStaged.map(_._2).toSeq)) {
-      fs.delete(root, true)
-      cdfStaged.foreach { case (p, _) => fs.delete(p, true) }
-      sys.error(s"concurrent writer: version $next was committed by another " +
-        "writer; this replaceWhere's staging has been rolled back — retry " +
-        "on the new state")
-    }
+    commitStaged("replace", next, adds, removes, Some(root), recordedSchemaJson(next - 1),
+      statsLines(root, adds) ++ identityWmLines(root) ++ txnLines(txn),
+      "replaceWhere", txn, cdfStaged)
   }
 
   /** INSERT-INTO semantics: append `dfIn` as a new version WITHOUT
@@ -3314,7 +3294,7 @@ final case class VersionedTable(
     * against the winners' added dirs — a disjoint-partition winner could
     * have landed this key under another partition value. Overlapping,
     * metadata-changing, or schema-changing winners roll the staging back
-    * and fail fast ([[commitMergeStaged]]).
+    * and fail fast ([[commitStaged]]).
     */
   def append(dfIn: DataFrame, txn: Option[(String, Long)] = None): Unit =
     append(dfIn, txn, Nil)
@@ -3346,17 +3326,8 @@ final case class VersionedTable(
         skipDefaults = false)
       return
     }
-    val incoming = applyGenerated(applyDefaults(dfIn))
     val sch = tableSchema
-    val extraCols = incoming.columns
-      .filterNot(c => sch.fieldNames.exists(_.equalsIgnoreCase(c)))
-    require(extraCols.isEmpty,
-      s"append columns not in the table schema: ${extraCols.mkString(",")}")
-    val updates = incoming.select(sch.fields.toSeq.map { f =>
-      if (incoming.columns.exists(_.equalsIgnoreCase(f.name)))
-        col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
+    val updates = conformed(applyGenerated(applyDefaults(dfIn)), sch, "append")
     enforceConstraints(updates)
     // ONE aggregation job answers both batch-shape verdicts (null pks,
     // repeated pks) instead of two separate scans+shuffles of the batch —
@@ -3435,7 +3406,7 @@ final case class VersionedTable(
       }
     }
     val (root, adds) = stage(updates, next)
-    val cdfStaged: Option[(Path, String)] =
+    val cdfStaged: Option[Path] =
       if (recordCdf) {
         assertCdfNamesFree(updates.columns.toSeq)
         Some(stageChanges(updates.withColumn("change_type", lit("insert")), next))
@@ -3453,11 +3424,10 @@ final case class VersionedTable(
     // aligned to it above and append never evolves the schema, so it is
     // rendered from the log, not from a DV-aware `read` frame (whose
     // per-root file listing would only re-derive the same json)
-    commitMergeStaged(next, adds, Seq.empty, root, sch.json,
-      statsLines(root, adds) ++ identityWmLines(root) ++ txnLines(txn) ++
-        cdfStaged.map(_._2).toSeq ++ ledger,
-      adds.map(partOf).toSet, txn, cdfStaged, maxAttempts = 5,
-      action = "insert",
+    commitStaged("insert", next, adds, Seq.empty, Some(root), sch.json,
+      statsLines(root, adds) ++ identityWmLines(root) ++ txnLines(txn) ++ ledger,
+      txn = txn, cdfStaged = cdfStaged, maxAttempts = 5,
+      ourParts = adds.map(partOf).toSet,
       retrySafe = (winTop, winnerAdds) =>
         pkAligned || partitionCols.isEmpty || winnerAdds.isEmpty ||
           frameFor(winTop, winnerAdds)
@@ -3629,99 +3599,119 @@ final case class VersionedTable(
           merged.schema.json)
       }
     }
-    val cdfStaged: Option[(Path, String)] = Phases.timed(s"cdf-stage $path") {
+    val cdfStaged: Option[Path] = Phases.timed(s"cdf-stage $path") {
       if (recordCdf) Some(stageChanges(mergeChanges(curT, updates), next)) else None
     }
-    // once — retries re-commit the same staging
-    val sl = statsLines(root, adds) ++ identityWmLines(root) ++
-      txnLines(txn) ++ cdfStaged.map(_._2).toSeq
-    commitMergeStaged(next, adds, removes, root, schemaJson, sl,
-      (adds ++ removes).map(partOf).toSet, txn, cdfStaged, maxAttempts)
+    commitStaged("merge", next, adds, removes, Some(root), schemaJson,
+      statsLines(root, adds) ++ identityWmLines(root) ++ txnLines(txn),
+      txn = txn, cdfStaged = cdfStaged, maxAttempts = maxAttempts,
+      ourParts = (adds ++ removes).map(partOf).toSet)
     } finally if (ownCache) updates0.unpersist(false)
   }
 
-  /** Optimistic-retry commit shared by [[merge]], [[executeMergeInto]],
-    * [[append]] and [[overwritePartitions]] (the `action` names the commit):
-    * claim version `first`; on a lost race, re-read the winning entries
-    * and — when every winner touched only partitions DISJOINT from
-    * `ourParts` — re-commit the SAME staging at the next version (its
-    * inputs, the touched partitions, are untouched by the winners; for
-    * append, the PK-collision check rides on the same PK→partition
-    * alignment assumption the merge pruning uses). True partition
-    * overlap, unpartitioned tables (every commit conflicts), tombstone
-    * commits over our partitions, metadata commits (the batch was never
-    * validated against the new rules), and restore (its replay resets
-    * the DV set) all roll the staging back and fail fast — exactly
-    * Delta's concurrent-modification semantics.
+  /** The one commit path: every writer claims its version here, through
+    * its claim step [[commit]]. `staged` is the writer's staging root (None
+    * for metadata-only commits, restore, fsck, clone and convert) and
+    * `cdfStaged` its recorded-change files; both are removed unless the
+    * commit lands. On a lost race, a winner that already applied this
+    * `txn` makes the write a durable replay: roll back, return quietly.
+    * Otherwise the writer's retry policy decides:
+    *
+    *  - `maxAttempts = 1` fails fast: overwrite, replaceWhere, delete,
+    *    deleteMor, update, compact, compactWhere, zorderBy, reorgPurge and
+    *    every unstaged commit. What they read (the rows a predicate
+    *    matched, the dirs a rewrite repacks, the state a metadata change
+    *    validated) may be invalidated by any winner; only a re-read is sound.
+    *  - [[merge]], [[append]], [[overwritePartitions]] and
+    *    [[executeMergeInto]] retry up to `maxAttempts`: when every winner
+    *    touched only partitions DISJOINT from `ourParts`, their inputs are
+    *    untouched, so the SAME staging re-commits at the next version.
+    *    Overlap, an unpartitioned table, a metadata, schema or restore
+    *    winner, or a false `retrySafe(winners' top version, their added
+    *    dirs)` (append's PK check across partitions) rolls back and fails —
+    *    Delta's concurrent-modification semantics.
     */
-  private def commitMergeStaged(first: Int, adds: Seq[String],
-      removes: Seq[String], root: Path, schemaJson: String, sl: Seq[String],
-      ourParts: Set[String], txn: Option[(String, Long)],
-      cdfStaged: Option[(Path, String)], maxAttempts: Int,
-      action: String = "merge",
-      // invoked before re-committing over disjoint-partition winners with
-      // (their top version, their added dirs); returning false rolls the
-      // staging back — the hook for invariants (append's PK uniqueness)
-      // that partition disjointness alone cannot preserve
+  private def commitStaged(action: String, first: Int, adds: Seq[String],
+      removes: Seq[String], staged: Option[Path], schemaJson: String,
+      lines: Seq[String], what: String = "",
+      txn: Option[(String, Long)] = None,
+      cdfStaged: Option[Path] = None, maxAttempts: Int = 1,
+      ourParts: Set[String] = Set.empty,
       retrySafe: (Int, Seq[String]) => Boolean = (_, _) => true): Unit = {
+    val op = if (what.isEmpty) action else what
     var next = first
-    def rollback(): Unit = {
-      fs.delete(root, true)
-      cdfStaged.foreach { case (p, _) => fs.delete(p, true) }
-    }
     var attempt = 1
-    while (!commit(action, next, adds, removes, root, schemaJson, sl)) {
-      val nowCurrent = currentVersion
-      // a WINNER may have been another worker applying this same batch —
-      // then our write is already durable and this replay must vanish
-      if (txn.exists { case (app, ver) =>
-            snapshotAt(nowCurrent).txnWatermarks.get(app).exists(_ >= ver) }) {
-        rollback()
-        return
+    def rollback(): Unit = {
+      staged.foreach(fs.delete(_, true))
+      cdfStaged.foreach(fs.delete(_, true))
+    }
+    def fail(why: String): Nothing = {
+      rollback()
+      sys.error(s"concurrent writer: version $next was committed by another " +
+        s"writer$why; " + staged.fold(s"$op changed nothing")(_ =>
+          s"this $op's staging has been rolled back") + " — retry on the new state")
+    }
+    // an I/O failure before the claim (disk full writing the temp log)
+    // removes the staging and rethrows — no phantom version, no stranded data
+    def claim(): Boolean =
+      try commit(action, next, adds, removes, schemaJson,
+        lines ++ cdfStaged.map(p => s"cdf=${p.getName}"))
+      catch { case e: Throwable => rollback(); throw e }
+    Phases.timed(s"commit-log $path v=$next attempts=$attempt") {
+      var done = claim()
+      while (!done) {
+        val nowCurrent = currentVersion
+        // a WINNER may have been another worker applying this same batch —
+        // then our write is already durable and this replay must vanish
+        val replayed = txnAlreadyApplied(txn)
+        if (replayed) rollback()
+        else {
+          if (attempt >= maxAttempts)
+            fail(if (maxAttempts > 1) s" and $maxAttempts attempts were exhausted" else "")
+          val winners = (next to nowCurrent).map(readLog)
+          // tombstone commits (delete_mor) carry their footprint in dvAdds —
+          // adds/removes alone would make them invisible here, and re-committing
+          // our staging (built from the pre-delete read) over a same-partition
+          // tombstone would RESURRECT the concurrently deleted rows when our
+          // adds kill the tombstone in replay. Metadata winners (constraints /
+          // generated columns) conflict with everything: this batch was never
+          // validated against the new rules, so it must restage.
+          val winnerDirs = winners.flatMap(e => e.adds ++ e.removes ++ e.dvAdds)
+          // restore conflicts unconditionally: its replay RESETS the tombstone
+          // set (possibly to fewer tombstones than our staging assumed), and
+          // its dir footprint alone cannot express that
+          val metaConflict = winners.exists(e =>
+            e.constraintsAdded.nonEmpty || e.constraintsDropped.nonEmpty ||
+              e.gencolsAdded.nonEmpty || e.gencolsDropped.nonEmpty ||
+              e.renames.nonEmpty || e.drops.nonEmpty || e.action == "restore" ||
+              // property winners conflict conservatively: a property can be a
+              // pipeline-behavior hint, and this batch was built before it
+              e.propsSet.nonEmpty || e.propsUnset.nonEmpty ||
+              // a winner that changed the SCHEMA (an evolving merge): blindly
+              // re-committing our pre-race schemaJson at the new top version
+              // would silently revert the evolution for every later reader
+              e.schemaJson.exists(w => nullableJson(w) != nullableJson(schemaJson)))
+          if (partitionCols.isEmpty || metaConflict ||
+              winnerDirs.exists(d => ourParts.contains(partOf(d))))
+            fail(" touching overlapping partitions")
+          if (!retrySafe(nowCurrent, winners.flatMap(_.adds)))
+            fail(s" whose rows invalidate this $op's checks (e.g. a primary key " +
+              "landed under another partition)")
+          attempt += 1
+          next = nowCurrent + 1
+        }
+        done = replayed || claim()
       }
-      val winners = (next to nowCurrent).map(readLog)
-      // tombstone commits (delete_mor) carry their footprint in dvAdds —
-      // adds/removes alone would make them invisible here, and re-committing
-      // our staging (built from the pre-delete read) over a same-partition
-      // tombstone would RESURRECT the concurrently deleted rows when our
-      // adds kill the tombstone in replay. Metadata winners (constraints /
-      // generated columns) conflict with everything: this batch was never
-      // validated against the new rules, so it must restage.
-      val winnerDirs = winners.flatMap(e => e.adds ++ e.removes ++ e.dvAdds)
-      // restore conflicts unconditionally: its replay RESETS the tombstone
-      // set (possibly to fewer tombstones than our staging assumed), and
-      // its dir footprint alone cannot express that
-      val metaConflict = winners.exists(e =>
-        e.constraintsAdded.nonEmpty || e.constraintsDropped.nonEmpty ||
-          e.gencolsAdded.nonEmpty || e.gencolsDropped.nonEmpty ||
-          e.renames.nonEmpty || e.drops.nonEmpty || e.action == "restore" ||
-          // property winners conflict conservatively: a property can be a
-          // pipeline-behavior hint, and this batch was built before it
-          e.propsSet.nonEmpty || e.propsUnset.nonEmpty ||
-          // a winner that changed the SCHEMA (an evolving merge): blindly
-          // re-committing our pre-race schemaJson at the new top version
-          // would silently revert the evolution for every later reader
-          e.schemaJson.exists(_ != schemaJson))
-      val overlap = partitionCols.isEmpty || metaConflict ||
-        winnerDirs.exists(d => ourParts.contains(partOf(d)))
-      if (overlap || attempt >= maxAttempts) {
-        rollback()
-        sys.error(s"concurrent writer: version $next was committed by another writer" +
-          (if (overlap) " touching overlapping partitions"
-           else s" and $maxAttempts attempts were exhausted") +
-          s"; this $action's staging has been rolled back — retry on the new state")
-      }
-      if (!retrySafe(nowCurrent, winners.flatMap(_.adds))) {
-        rollback()
-        sys.error(s"concurrent writer: version $next was committed by " +
-          s"another writer whose rows invalidate this $action's checks " +
-          "(e.g. a primary key landed under another partition); staging " +
-          "rolled back — retry on the new state")
-      }
-      attempt += 1
-      next = nowCurrent + 1
     }
   }
+
+  /** `json` with every nullability flag set: merge records its
+    * all-nullable read frame's schema, so a flag flip alone is no schema
+    * change. Exact on Spark's compact JSON, whose names and metadata
+    * strings escape every quote.
+    */
+  private def nullableJson(json: String): String =
+    json.replaceAll("\"(nullable|containsNull|valueContainsNull)\":false", "\"$1\":true")
 
   /** Conditional-clause MERGE (Delta's full builder surface): see
     * [[MergeIntoBuilder]]. `targetAlias`/`sourceAlias` name the two sides
@@ -3997,7 +3987,7 @@ final case class VersionedTable(
         snapshotAt(next - 1).liveDirs.filter(d =>
           doomed.contains(d) || newParts.contains(partOf(d)))
       }
-    val cdfStaged: Option[(Path, String)] =
+    val cdfStaged: Option[Path] =
       if (!recordCdf) None
       else {
         val upd = out.filter(col("__mod") && col("__keep") && !col("__ins"))
@@ -4013,13 +4003,13 @@ final case class VersionedTable(
         Some(stageChanges(pre.unionByName(post).unionByName(del).unionByName(ins), next))
       }
     val commitSchemaJson =
-      if (newCols.isEmpty) current.schema.json
+      if (newCols.isEmpty) recordedSchemaJson(next - 1)
       else org.apache.spark.sql.types.StructType(
         current.schema.fields ++ newCols.map(_.copy(nullable = true))).json
-    commitMergeStaged(next, adds, removes, root, commitSchemaJson,
-      statsLines(root, adds) ++ identityWmLines(root) ++
-        cdfStaged.map(_._2).toSeq,
-      (adds ++ removes).map(partOf).toSet, None, cdfStaged, maxAttempts)
+    commitStaged("merge", next, adds, removes, Some(root), commitSchemaJson,
+      statsLines(root, adds) ++ identityWmLines(root),
+      cdfStaged = cdfStaged, maxAttempts = maxAttempts,
+      ourParts = (adds ++ removes).map(partOf).toSet)
     } finally out.unpersist(false)
     }
     val groups0 =
@@ -4055,37 +4045,39 @@ final case class VersionedTable(
     val current = read
     val doomed = matchingDirs(cond)
     if (doomed.isEmpty) return false
-    val live = snapshotAt(next - 1).liveDirs
     // a row only matches when cond is TRUE; a NULL cond (e.g. a null value
     // under `price > 100`) is NOT a match and its row must SURVIVE — a bare
     // filter(!cond) would silently drop it (NULL is not true either way)
     val survives = !coalesce(cond, lit(false))
     val (root, adds, removes) =
-      if (partitionCols.isEmpty) {
-        val (r, a) = stage(current.filter(survives), next)
-        (r, a, live)
-      } else {
-        // every live dir sharing a partition path with a doomed dir must be
-        // restaged (survivors) and removed (superseded)
-        val doomedParts = doomed.map(partOf)
-        val rm = live.filter(d => doomedParts.contains(partOf(d)))
-        val touched = current.filter(cond)
-          .select(partitionCols.map(col): _*).distinct().collect()
-        val (r, a) = stage(
-          current.filter(partitionPredicate(touched)).filter(survives), next)
-        (r, a, rm)
-      }
-    val cdfStaged: Option[(Path, String)] =
+      restageMatching(current, cond, doomed, next)(_.filter(survives))
+    val cdfStaged: Option[Path] =
       if (recordCdf) Some(stageChanges(deleteChanges(current.filter(cond)), next))
       else None
-    if (!commit("delete", next, adds, removes, root, current.schema.json,
-        statsLines(root, adds) ++ cdfStaged.map(_._2).toSeq)) {
-      fs.delete(root, true)
-      cdfStaged.foreach { case (p, _) => fs.delete(p, true) }
-      sys.error(s"concurrent writer: version $next was committed by another " +
-        "writer; this delete's staging has been rolled back — retry on the new state")
-    }
+    commitStaged("delete", next, adds, removes, Some(root), recordedSchemaJson(next - 1),
+      statsLines(root, adds), cdfStaged = cdfStaged)
     true
+  }
+
+  /** Stage `rewrite` of the partitions of `current` that hold `doomed`
+    * (the dirs with rows matching `cond`; the whole table when
+    * unpartitioned) at `next`. Returns the staging root, its added dirs and
+    * the live dirs they supersede: every one sharing a partition path with
+    * a doomed dir.
+    */
+  private def restageMatching(current: DataFrame, cond: Column, doomed: Set[String],
+      next: Int)(rewrite: DataFrame => DataFrame): (Path, Seq[String], Seq[String]) = {
+    val live = snapshotAt(next - 1).liveDirs
+    if (partitionCols.isEmpty) {
+      val (r, a) = stage(rewrite(current), next)
+      (r, a, live)
+    } else {
+      val doomedParts = doomed.map(partOf)
+      val touched = current.filter(cond)
+        .select(partitionCols.map(col): _*).distinct().collect()
+      val (r, a) = stage(rewrite(current.filter(partitionPredicate(touched))), next)
+      (r, a, live.filter(d => doomedParts.contains(partOf(d))))
+    }
   }
 
   /** Merge-on-read DELETE (Delta's deletion vectors, keyed by PK instead
@@ -4115,15 +4107,10 @@ final case class VersionedTable(
     // change images carry the FULL doomed rows (the tombstones above are a
     // key projection) — a CDC consumer sees identical delete records
     // whether the delete was copy-on-write or merge-on-read
-    val cdfStaged: Option[(Path, String)] =
+    val cdfStaged: Option[Path] =
       if (recordCdf) Some(stageChanges(deleteChanges(matched), next)) else None
-    if (!commit("delete_mor", next, Nil, Nil, root, read.schema.json,
-        leaves.map("dvadd=" + _) ++ cdfStaged.map(_._2).toSeq)) {
-      fs.delete(root, true)
-      cdfStaged.foreach { case (p, _) => fs.delete(p, true) }
-      sys.error(s"concurrent writer: version $next was committed by another " +
-        "writer; this delete's staging has been rolled back — retry on the new state")
-    }
+    commitStaged("delete_mor", next, Nil, Nil, Some(root), recordedSchemaJson(next - 1),
+      leaves.map("dvadd=" + _), "deleteMor", cdfStaged = cdfStaged)
     true
   }
 
@@ -4167,13 +4154,15 @@ final case class VersionedTable(
         s"(${identAssigned.mkString(",")})")
     val doomed = matchingDirs(cond)
     if (doomed.isEmpty) return false
-    val live = snapshotAt(next - 1).liveDirs
     // apply each assignment only on matching rows (a NULL cond is not a
     // match — when() takes the otherwise branch); untouched columns and
-    // non-matching rows pass through unchanged
+    // non-matching rows pass through unchanged. An assigned value is cast
+    // to its column's recorded type (as MERGE INTO's clause values are):
+    // the restaged files are read back under the recorded schema
+    val recorded = tableSchema
     def appliedUser(df: DataFrame): DataFrame = df.select(df.columns.toSeq.map { c =>
       assignments.get(c) match {
-        case Some(a) => when(cond, a).otherwise(col(c)).as(c)
+        case Some(a) => when(cond, a).otherwise(col(c)).cast(recorded(c).dataType).as(c)
         case None => col(c)
       }
     }: _*)
@@ -4206,30 +4195,13 @@ final case class VersionedTable(
     // only the rewritten rows can newly violate — verify those, not the
     // untouched pass-through rows the restage carries along
     enforceConstraints(applied(current.filter(cond)))
-    val (root, adds, removes) =
-      if (partitionCols.isEmpty) {
-        val (r, a) = stage(applied(current), next)
-        (r, a, live)
-      } else {
-        val doomedParts = doomed.map(partOf)
-        val rm = live.filter(d => doomedParts.contains(partOf(d)))
-        val touched = current.filter(cond)
-          .select(partitionCols.map(col): _*).distinct().collect()
-        val (r, a) = stage(applied(current.filter(partitionPredicate(touched))), next)
-        (r, a, rm)
-      }
-    val cdfStaged: Option[(Path, String)] =
+    val (root, adds, removes) = restageMatching(current, cond, doomed, next)(applied)
+    val cdfStaged: Option[Path] =
       if (recordCdf)
         Some(stageChanges(updateChanges(current.filter(cond), applied), next))
       else None
-    if (!commit("update", next, adds, removes, root, current.schema.json,
-        statsLines(root, adds) ++ identityWmLines(root) ++
-          cdfStaged.map(_._2).toSeq)) {
-      fs.delete(root, true)
-      cdfStaged.foreach { case (p, _) => fs.delete(p, true) }
-      sys.error(s"concurrent writer: version $next was committed by another " +
-        "writer; this update's staging has been rolled back — retry on the new state")
-    }
+    commitStaged("update", next, adds, removes, Some(root), recordedSchemaJson(next - 1),
+      statsLines(root, adds) ++ identityWmLines(root), cdfStaged = cdfStaged)
     true
   }
 
@@ -4261,13 +4233,13 @@ final case class VersionedTable(
     * images stay valid verbatim: their inputs are the touched partitions
     * the winners didn't touch).
     */
-  private def stageChanges(changes: DataFrame, next: Int): (Path, String) = {
+  private def stageChanges(changes: DataFrame, next: Int): Path = {
     val name = s"${vname(next)}_${java.util.UUID.randomUUID().toString.take(8)}"
     val p = new Path(s"$changesDir/$name")
     // change files carry physical names like data files, so images from
     // every rename era union cleanly at read time
     toPhysical(changes).write.mode("overwrite").parquet(p.toString)
-    (p, s"cdf=$name")
+    p
   }
 
   /** Change recording reserves the CDF metadata names; a table column
@@ -4659,10 +4631,6 @@ final case class VersionedTable(
       // NOT reset: it is an append-only ingest history — re-restoring must
       // not make a re-run of COPY INTO double-load files)
       delta("setprop", "unsetprop", to.properties, now.properties)
-    // nothing was staged — hand commit() a path that cannot exist so its
-    // failure-path cleanup is a no-op. The restore action RESETS the
-    // tombstone set in replay, so the dvadd lines are v's exact DV state.
-    val noStaging = new Path(s"$dataDir/.restore_${java.util.UUID.randomUUID().toString.take(8)}")
     // operation metrics over the re-added dirs, from their footers (their
     // skipping stats stay with the entries that first added them)
     val own = adds.filterNot(_.startsWith(ExtPrefix))
@@ -4670,10 +4638,10 @@ final case class VersionedTable(
       if (own.isEmpty) None
       else scala.util.Try(parquetFilesOf(own)).toOption.flatMap(files =>
         sumFooterRows(files.map(_.getPath)).map(n => s"metrics=${files.size}\t$n"))
-    if (!commit("restore", cur + 1, adds, removes, noStaging, schemaJson,
-        metrics.toSeq ++ to.dvDirs.map("dvadd=" + _) ++ metaLines))
-      sys.error(s"concurrent writer: version ${cur + 1} was committed by another " +
-        "writer; nothing was changed — retry on the new state")
+    // the restore action RESETS the tombstone set in replay, so the dvadd
+    // lines are v's exact DV state
+    commitStaged("restore", cur + 1, adds, removes, None, schemaJson,
+      metrics.toSeq ++ to.dvDirs.map("dvadd=" + _) ++ metaLines, s"restore($v)")
   }
 
   /** Rewrite the live file set into one fresh version root with ~
@@ -4686,20 +4654,26 @@ final case class VersionedTable(
   def compact(targetFileRows: Long = 1024 * 1024): Unit = {
     require(exists, "compact on a table with no commits")
     val next = currentVersion + 1
-    val current = read
-    val rows = current.count()
-    val files = math.max(1, math.ceil(rows.toDouble / targetFileRows).toInt)
+    repack("compact", next, snapshotAt(next - 1).liveDirs, targetFileRows)
+  }
+
+  /** Rewrite the live `dirs` of version `next - 1` (tombstones folded in)
+    * into ~`targetFileRows`-row files under one fresh root, committed at
+    * `next` as `action` with the schema unchanged. A repack changes no
+    * rows, so it is change-transparent (`cdf=none`). "compact" resets the
+    * whole tombstone set in replay (a full rewrite); "compact_part" clears
+    * exactly the restaged partitions' tombstones.
+    */
+  private def repack(action: String, next: Int, dirs: Seq[String],
+                     targetFileRows: Long): Unit = {
+    val live = withTombstones(frameFor(next - 1, dirs), next - 1)
+    val files = math.max(1, math.ceil(live.count().toDouble / targetFileRows).toInt)
     val repacked =
-      if (partitionCols.nonEmpty) current.repartition(files, partitionCols.map(col): _*)
-      else current.repartition(files)
+      if (partitionCols.nonEmpty) live.repartition(files, partitionCols.map(col): _*)
+      else live.repartition(files)
     val (root, adds) = stage(repacked, next, cluster = false)
-    // a compaction rewrites files but changes no rows — change-transparent
-    if (!commit("compact", next, adds, snapshotAt(next - 1).liveDirs, root, current.schema.json,
-        statsLines(root, adds) :+ "cdf=none")) {
-      fs.delete(root, true)
-      sys.error(s"concurrent writer: version $next was committed by another " +
-        "writer; this compact's staging has been rolled back — retry on the new state")
-    }
+    commitStaged(action, next, adds, dirs, Some(root), recordedSchemaJson(next - 1),
+      statsLines(root, adds) :+ "cdf=none")
   }
 
   /** Partition-scoped compaction (Delta's `OPTIMIZE … WHERE`): rewrite
@@ -4719,26 +4693,12 @@ final case class VersionedTable(
     val doomed = matchingDirs(cond)
     if (doomed.isEmpty) return
     val doomedParts = doomed.map(partOf)
-    val rm = snapshotAt(next - 1).liveDirs.filter(d => doomedParts.contains(partOf(d)))
-    // the rewrite input is exactly the doomed partitions' live dirs —
-    // assemble the (DV-aware, logically-named) frame from them directly,
-    // so the statement pays ONE predicate scan (matchingDirs) plus the
+    // the rewrite input is exactly the doomed partitions' live dirs, so
+    // the statement pays ONE predicate scan (matchingDirs) plus the
     // bounded partition read, never a second full-table pass
-    val part = withTombstones(frameFor(next - 1, rm), next - 1)
-    val rows = part.count()
-    val files = math.max(1, math.ceil(rows.toDouble / targetFileRows).toInt)
-    val repacked = part.repartition(files, partitionCols.map(col): _*)
-    val (root, adds) = stage(repacked, next, cluster = false)
-    // action "compact_part", NOT "compact": the tombstone replay resets
-    // the whole DV set on "compact" (a full rewrite); the generic case
-    // clears exactly the restaged partitions' — what this commit is
-    if (!commit("compact_part", next, adds, rm, root,
-        schemaJsonAt(next - 1).getOrElse(part.schema.json),
-        statsLines(root, adds) :+ "cdf=none")) {
-      fs.delete(root, true)
-      sys.error(s"concurrent writer: version $next was committed by another " +
-        "writer; this compact's staging has been rolled back — retry on the new state")
-    }
+    repack("compact_part", next,
+      snapshotAt(next - 1).liveDirs.filter(d => doomedParts.contains(partOf(d))),
+      targetFileRows)
   }
 
   /** `OPTIMIZE … ZORDER BY (c1, c2)`: recompute the z-bucket layout over
@@ -4762,12 +4722,8 @@ final case class VersionedTable(
     val z = ZOrder.withZBucket(current.drop("zb"), cols, bitsPerCol)
     val ordered = z.select(current.columns.toSeq.map(col): _*)
     val (root, adds) = stage(ordered.repartition(col("zb")), next, cluster = false)
-    if (!commit("compact", next, adds, snapshotAt(next - 1).liveDirs, root,
-        current.schema.json, statsLines(root, adds) :+ "cdf=none")) {
-      fs.delete(root, true)
-      sys.error(s"concurrent writer: version $next was committed by another " +
-        "writer; this zorder's staging has been rolled back — retry on the new state")
-    }
+    commitStaged("compact", next, adds, snapshotAt(next - 1).liveDirs, Some(root),
+      recordedSchemaJson(next - 1), statsLines(root, adds) :+ "cdf=none", "zorderBy")
   }
 
   /** `REORG TABLE … APPLY (PURGE)` (Delta's DV purge): rewrite ONLY the
@@ -4784,23 +4740,11 @@ final case class VersionedTable(
     val next = currentVersion + 1
     val dvParts = snapshotAt(next - 1).dvDirs.map(partOf).toSet
     if (dvParts.isEmpty) return
-    val rm = snapshotAt(next - 1).liveDirs.filter(d => dvParts.contains(partOf(d)))
-    val part = withTombstones(frameFor(next - 1, rm), next - 1)
-    val rows = part.count()
-    val files = math.max(1, math.ceil(rows.toDouble / targetFileRows).toInt)
-    val repacked =
-      if (partitionCols.nonEmpty) part.repartition(files, partitionCols.map(col): _*)
-      else part.repartition(files)
-    val (root, adds) = stage(repacked, next, cluster = false)
-    // action "compact_part": replay clears exactly the restaged
-    // partitions' tombstones — which, by construction, is ALL of them
-    if (!commit("compact_part", next, adds, rm, root,
-        schemaJsonAt(next - 1).getOrElse(part.schema.json),
-        statsLines(root, adds) :+ "cdf=none")) {
-      fs.delete(root, true)
-      sys.error(s"concurrent writer: version $next was committed by another " +
-        "writer; this reorg's staging has been rolled back — retry on the new state")
-    }
+    // "compact_part": replay clears exactly the restaged partitions'
+    // tombstones — which, by construction, is ALL of them
+    repack("compact_part", next,
+      snapshotAt(next - 1).liveDirs.filter(d => dvParts.contains(partOf(d))),
+      targetFileRows)
   }
 
   /** Shallow clone (Delta's CLONE): create a NEW table at `destPath` whose
@@ -4861,10 +4805,8 @@ final case class VersionedTable(
       kv("setprop", snap.properties) ++
       snap.copiedFiles.toSeq.sorted.map(f => s"copied=${enc(f)}")
     val schemaJson = recordedSchemaJson(v)
-    val noStaging = new Path(s"$destPath/.clone_${java.util.UUID.randomUUID().toString.take(8)}")
-    if (!dest.commit("clone", 1, extDirs, Nil, noStaging, schemaJson,
-        stats ++ constr ++ extDv))
-      sys.error(s"clone destination $destPath is being written concurrently")
+    dest.commitStaged("clone", 1, extDirs, Nil, None, schemaJson,
+      stats ++ constr ++ extDv, s"clone to $destPath")
     dest
   }
 
@@ -4917,10 +4859,8 @@ final case class VersionedTable(
         .stripPrefix(qualifiedRoot).stripPrefix("/")
       ExtPrefix + enc(qualifiedRoot) + (if (rel.isEmpty) "" else "/" + rel)
     }
-    val noStaging = new Path(
-      s"$dataDir/.convert_${java.util.UUID.randomUUID().toString.take(8)}")
-    if (!commit("convert", 1, extDirs, Nil, noStaging, df.schema.json))
-      sys.error(s"$path is being written concurrently — convert lost the race")
+    commitStaged("convert", 1, extDirs, Nil, None, df.schema.json, Nil,
+      s"convert of $sourceDir")
   }
 
   /** Export a manifest of the current version's live data files — one
@@ -5018,12 +4958,8 @@ final case class VersionedTable(
     if (dryRun || missing.isEmpty) return missing
     val survivorsDv = snapshotAt(v).dvDirs.filterNot(missingDv.contains)
     val schemaJson = recordedSchemaJson(v)
-    val noStaging = new Path(
-      s"$dataDir/.fsck_${java.util.UUID.randomUUID().toString.take(8)}")
-    if (!commit("fsck", v + 1, Nil, missingData, noStaging, schemaJson,
-        survivorsDv.map("dvadd=" + _)))
-      sys.error(s"concurrent writer: version ${v + 1} was committed by " +
-        "another writer; fsck changed nothing — retry on the new state")
+    commitStaged("fsck", v + 1, Nil, missingData, None, schemaJson,
+      survivorsDv.map("dvadd=" + _))
     missing
   }
 

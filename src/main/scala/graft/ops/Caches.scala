@@ -39,7 +39,8 @@ object Phases {
   private val timing: Boolean =
     sys.env.get("SPARK_GRAFT_TIMING").contains("1")
 
-  def timed[A](label: String)(f: => A): A =
+  /** `label` is rendered after `f` runs, so it may carry what `f` found. */
+  def timed[A](label: => String)(f: => A): A =
     if (!timing) f
     else {
       val t0 = System.nanoTime()

@@ -21,7 +21,9 @@ each run they are read from the checkout's
 .bench_build/last/<workload>/jvm.log, and each label's per-run total is
 summarized per side (median over runs), so a gain can be named by the
 phase that moved. A label's table path is cut to its last two components
-(silver/orders) and its `dirs=<read>/<live>` token is summed separately.
+(silver/orders) and its `dirs=<read>/<live>` token is summed separately;
+a `v=<n>` token (the version a commit claimed) is dropped, so every
+commit of a table shares one key per `attempts=<k>` (retries show as k > 1).
 """
 import argparse
 import json
@@ -87,6 +89,7 @@ def summarize(pairs, spec):
 
 TIMING = re.compile(r"^\[timing\]\s+([0-9.]+) s\s+(.+)$")
 DIRS = re.compile(r"^dirs=(\d+)/(\d+)$")
+VERSION = re.compile(r"^v=\d+$")
 
 
 def phase_key(label):
@@ -95,6 +98,8 @@ def phase_key(label):
     words, dirs = [], None
     for w in label.split():
         m = DIRS.match(w)
+        if VERSION.match(w):
+            continue
         if m:
             dirs = (int(m.group(1)), int(m.group(2)))
         else:

@@ -95,6 +95,14 @@ class Phases(unittest.TestCase):
         self.assertEqual(perf_pairs.phase_key("ivfpq-fixture-k1"),
                          ("ivfpq-fixture-k1", None))
 
+    def test_commit_log_key_drops_the_version_and_keeps_attempts(self):
+        self.assertEqual(
+            perf_pairs.phase_key("commit-log /a/b/silver/orders v=12 attempts=1"),
+            ("commit-log silver/orders attempts=1", None))
+        self.assertEqual(
+            perf_pairs.phase_key("commit-log /a/b/silver/orders v=13 attempts=2"),
+            ("commit-log silver/orders attempts=2", None))
+
     def test_one_run_sums_seconds_lines_and_dirs_per_key(self):
         got = perf_pairs.read_phases(LOG)
         probe = got["migrate-probe silver/orders"]
