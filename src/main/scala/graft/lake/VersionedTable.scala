@@ -195,17 +195,8 @@ final case class VersionedTable(
     val dvs = snapshotAt(v).dvDirs
     if (dvs.isEmpty) return df
     val keys = (partitionCols ++ pk).distinct
-    val groups = dvs.groupBy(_.split("/")(0))
-    // a tombstone root holds exactly (partition cols + PK) — read under
-    // those fields of its recorded schema, so no footer is opened (a
-    // shallow clone's ext= tombstones are inferred)
-    val dvFrame = toLogical(groups.toSeq.sortBy(_._1).map { case (root, ds) =>
-      val reader = spark.read.option("basePath", resolveRoot(root))
-      (if (root.startsWith(ExtPrefix)) reader
-       else reader.schema(org.apache.spark.sql.types.StructType(
-         rootSchema(root).fields.filter(f => keys.exists(_.equalsIgnoreCase(f.name))))))
-        .parquet(ds.map(d => resolvedPath(d).toString): _*)
-    }.reduce(_.unionByName(_)), v)
+    // a tombstone dir holds exactly (partition cols + PK)
+    val dvFrame = frameFor(v, dvs, n => keys.exists(_.equalsIgnoreCase(n)))
     val l = df.as("__dvl")
     val r = dvFrame.as("__dvr")
     val cond = keys.map(k => col(s"__dvl.$k") <=> col(s"__dvr.$k")).reduce(_ && _)
@@ -879,24 +870,22 @@ final case class VersionedTable(
 
   private def writeBloomSidecars(targets: Seq[String],
       idx: Map[String, (Double, Option[Long])],
-      schemaOf: String => org.apache.spark.sql.types.StructType)
+      schema: org.apache.spark.sql.types.StructType)
       : (Int, Seq[BloomClamp]) = {
     val clamps = scala.collection.mutable.ArrayBuffer.empty[BloomClamp]
     val own = targets.filterNot(_.startsWith(ExtPrefix))
       // an empty leaf (TRUNCATE / zero-row partition) holds no rows to
       // index
-      .filter(d => hasParquetFiles(resolvedPath(d)))
+      .filter(d => dataFiles(d).nonEmpty)
     if (own.isEmpty || idx.isEmpty) return (0, Nil)
     graft.expr.GraftFunctions.register(spark)
     val byAbs = own
       .map(d => fs.makeQualified(resolvedPath(d)).toUri.getPath -> d).toMap
-    // leaf dirs are read WITHOUT basePath (no partition columns), each
-    // root under its known physical schema — no footer-inference job
-    val raw = own.groupBy(_.split("/")(0)).toSeq.sortBy(_._1).map { case (root, ds) =>
-      spark.read.schema(org.apache.spark.sql.types.StructType(schemaOf(root).fields
+    // leaf dirs are read WITHOUT basePath (no partition columns) under
+    // the known physical schema — no footer-inference job
+    val raw = spark.read.schema(org.apache.spark.sql.types.StructType(schema.fields
         .filterNot(f => partitionCols.exists(_.equalsIgnoreCase(f.name)))))
-        .parquet(ds.map(d => resolvedPath(d).toString): _*)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+      .parquet(own.map(d => resolvedPath(d).toString): _*)
     val present = idx.toSeq.sortBy(_._1).flatMap { case (lc, (fpp, ni)) =>
       for {
         c <- raw.columns.find(_.equalsIgnoreCase(lc))
@@ -1017,7 +1006,7 @@ final case class VersionedTable(
       !d.startsWith(ExtPrefix) &&
         all.keys.exists(c => bloomTypeOf(c).exists(dt =>
           !fs.exists(bloomSidecarPath(d, c, bloomTag(dt))))))
-    writeBloomSidecars(missing, all, rootSchema)
+    writeBloomSidecars(missing, all, physicalSchemaAt(currentVersion)._2)
   }
 
   /** Drop the bloom index on `cols` (empty = every indexed column): one
@@ -1047,7 +1036,7 @@ final case class VersionedTable(
     * Mirrors [[canMatch]]'s conservative shape: only equality/IN against
     * an indexed column with a readable sidecar can prune; everything
     * else keeps the dir. The resolved predicate carries PHYSICAL
-    * attribute names (see [[readWhere]]), matching the index keying.
+    * attribute names (see [[frameFor]]), matching the index keying.
     */
   private def bloomCanMatch(
       e: org.apache.spark.sql.catalyst.expressions.Expression,
@@ -1264,10 +1253,9 @@ final case class VersionedTable(
   /** Add a nullable field INSIDE an existing struct column (Delta's
     * nested ADD COLUMN, e.g. `ADD COLUMN s.newf INT`): metadata-only —
     * the recorded struct type widens, files written before the add lack
-    * the field and read it as NULL ([[frameFor]]'s struct conformance),
-    * files written after carry it (each root reads under the struct type
-    * its commit recorded). `parent` is the field path to the enclosing struct
-    * (arbitrary depth).
+    * the field and read it as NULL (every file reads under the version's
+    * struct type, [[frameFor]]), files written after carry it. `parent` is
+    * the field path to the enclosing struct (arbitrary depth).
     */
   def addNestedColumn(parent: Seq[String], name: String,
                       dataType: org.apache.spark.sql.types.DataType): Unit = {
@@ -1505,8 +1493,8 @@ final case class VersionedTable(
   /** Widen a column's type as a metadata-only commit (Delta's ALTER
     * TABLE … ALTER COLUMN … TYPE under type widening): no data file is
     * touched — the recorded schema changes, pre-widen files keep the
-    * narrow physical type and every read upcasts them ([[frameFor]]'s
-    * schema-divergence alignment), writes after the widen carry the wide
+    * narrow physical type and the parquet reader upcasts them under the
+    * recorded type ([[frameFor]]), writes after the widen carry the wide
     * type. Era-correct: time travel to pre-widen versions reads the
     * narrow type, and [[restore]] to one resurrects it (the restore
     * commit re-records that version's schema). Only lossless numeric
@@ -1721,7 +1709,7 @@ final case class VersionedTable(
     import sp.implicits._
     val v = currentVersion
     val dirs = snapshotAt(v).liveDirs
-    val files = parquetFilesOf(dirs)
+    val files = dirs.flatMap(dataFiles)
     Seq((path, v, pk.mkString(","), partitionCols.mkString(","),
       dirs.size.toLong, files.size.toLong, files.map(_.getLen).sum,
       sumFooterRows(files.map(_.getPath)),
@@ -1742,11 +1730,6 @@ final case class VersionedTable(
       try Some(r.getRecordCount) finally r.close()
     } catch { case _: Exception => None }
 
-  /** Total footer row count, or NULL when any footer is unreadable — a
-    * corrupt file must surface as "unknown", never fold into the sum as
-    * zero (DESCRIBE DETAIL is exactly what an operator runs to
-    * investigate such a file).
-    */
   /** Footer opens are ~10 ms each of independent local IO — read them
     * concurrently, or a many-file sum pays the serial total on the driver.
     */
@@ -1756,16 +1739,11 @@ final case class VersionedTable(
       .collect(java.util.stream.Collectors.toList[Option[Long]]).asScala.toSeq
   }
 
-  /** Parquet data files directly under each staged dir — THE single
-    * definition of "a dir's data files", shared by DESCRIBE DETAIL,
-    * fastCount, and commit metrics so they can never disagree on what
-    * counts as data.
+  /** Total footer row count, or None when any footer is unreadable — a
+    * corrupt file must surface as "unknown", never fold into the sum as
+    * zero (DESCRIBE DETAIL is exactly what an operator runs to
+    * investigate such a file).
     */
-  private def parquetFilesOf(
-      dirs: Seq[String]): Seq[org.apache.hadoop.fs.FileStatus] =
-    dirs.flatMap(d => fs.listStatus(resolvedPath(d)).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet")))
-
   private def sumFooterRows(ps: Seq[Path]): Option[Long] = {
     val counts = footerRowsAll(ps)
     if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
@@ -1785,7 +1763,7 @@ final case class VersionedTable(
     val v = currentVersion
     if (v == 0) return Some(0L)
     def rowsOf(dirs: Seq[String]): Option[Long] =
-      sumFooterRows(parquetFilesOf(dirs).map(_.getPath))
+      sumFooterRows(dirs.flatMap(dataFiles).map(_.getPath))
     for {
       data <- rowsOf(snapshotAt(v).liveDirs)
       dv <- rowsOf(snapshotAt(v).dvDirs)
@@ -1845,7 +1823,7 @@ final case class VersionedTable(
     val v = currentVersion
     val dirs = snapshotAt(v).liveDirs
     dirs.groupBy(partOf).toSeq.sortBy(_._1).map { case (p, ds) =>
-      val files = parquetFilesOf(ds)
+      val files = ds.flatMap(dataFiles)
       (p, ds.size.toLong, files.size.toLong, files.map(_.getLen).sum,
         sumFooterRows(files.map(_.getPath)))
     }.toDF("partition", "num_dirs", "num_files", "size_bytes", "num_rows")
@@ -1891,17 +1869,15 @@ final case class VersionedTable(
   /** The table as of wall-clock time `tsMillis` (see [[versionAsOf]]). */
   def readAsOf(tsMillis: Long): DataFrame = readVersion(versionAsOf(tsMillis))
 
-  /** The table exactly as of commit `v` — dirs are grouped by the version
-    * root that wrote them, each group read under the schema the log
-    * recorded for that root ([[rootSchema]]: no footer is opened and no
-    * Spark job runs to build the frame), then unioned by name
-    * (null-filling columns added by later schema evolution). Only `ext=`
-    * roots (CONVERT TO GRAFT / shallow clone) infer their schema from
-    * the files.
+  /** The table exactly as of commit `v`: one parquet relation over v's
+    * live dirs under the schema v recorded ([[frameFor]]), minus v's
+    * tombstones. Building it opens no file and starts no Spark job; the
+    * dirs are listed, and pruned by the query's filters, when a query over
+    * the frame is planned.
     */
   def readVersion(v: Int): DataFrame = {
     require(v >= 1 && v <= currentVersion, s"version $v out of range 1..$currentVersion")
-    withTombstones(frameFor(v, snapshotAt(v).liveDirs), v)
+    withTombstones(frameFor(v, snapshotAt(v).liveDirs, tracked = true), v)
   }
 
   // version root → version of the log entry that added it; a root is
@@ -1931,194 +1907,116 @@ final case class VersionedTable(
       found
     }
 
-  /** Physical schema of the files under this table's own version root
-    * `root`: the schema the adding entry recorded (`schemaAt(a)`), renamed
-    * to the physical names of that era (`snapshotAt(a).colMap`) —
-    * partition columns included, with their recorded types. A root is written by ONE
-    * commit, so its files are schema-homogeneous and this is exactly what
-    * they carry. Not for `ext=` roots: their foreign source may hold files
-    * of different schemas, so only they are inferred.
+  /** Version `v`'s recorded fields that `keep` names, and the schema the
+    * files carry them under: physical names (`colMap` at v), nullable,
+    * and `EXISTS_DEFAULT` metadata on each column added with a default,
+    * which the parquet reader returns for files that predate the column.
     */
-  private def rootSchema(root: String): org.apache.spark.sql.types.StructType = {
-    val a = addedAt(root).getOrElse(throw new IllegalStateException(
-      s"table '$path': no log entry adds version root '$root'"))
-    val sch = schemaAt(a).getOrElse(throw new IllegalStateException(
-      s"table '$path': version $a records no schema"))
-    val cm = snapshotAt(a).colMap
-    org.apache.spark.sql.types.StructType(sch.fields.map(f =>
-      cm.collectFirst { case (l, p) if l.equalsIgnoreCase(f.name) => p }
-        .fold(f)(p => f.copy(name = p))))
-  }
-
-  /** Assemble a frame over `dirs` (a subset of version `v`'s live set),
-    * each root read under its [[rootSchema]]; falls back to the
-    * log-recorded schema when the subset is empty.
-    */
-  private def frameFor(v: Int, dirs: Seq[String]): DataFrame = {
-    val groups = dirs.groupBy(_.split("/")(0))
-    if (groups.isEmpty) {
-      // an empty commit is legal (e.g. overwrite with zero rows): the log
-      // carries the schema, so the version reads as an empty frame
-      val schema = schemaAt(v)
-        .getOrElse(sys.error(s"version $v has no data and no recorded schema"))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
-    val frames = groups.toSeq.sortBy(_._1).map { case (root, dirs) =>
-      val reader = spark.read.option("basePath", resolveRoot(root))
-      val paths = dirs.map(d => resolvedPath(d).toString)
-      if (!root.startsWith(ExtPrefix)) reader.schema(rootSchema(root)).parquet(paths: _*)
-      // an ext= root (CONVERT TO GRAFT / shallow clone) references the
-      // SOURCE's absolute location and never copies the files — if the
-      // source moved or was deleted, name the contract instead of
-      // surfacing a bare PATH_NOT_FOUND
-      else try reader.option("mergeSchema", "true").parquet(paths: _*)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalStateException(
-            s"external source '${resolveRoot(root)}' referenced by table " +
-              s"'$path' is missing or moved — CONVERT TO GRAFT and shallow " +
-              "clones record the source location absolutely and do not copy " +
-              "its files; restore the source, or re-CONVERT/clone from its " +
-              "new location", e)
-      }
-    }
-    // exists-defaults (ALTER ADD COLUMN … DEFAULT): a root group written
-    // BEFORE the column existed reads the frozen default, not NULL — per
-    // group, before the union (each root is one write, so its files are
-    // schema-homogeneous; after the union a null-from-missing-file would
-    // be indistinguishable from genuine null data)
+  private def physicalSchemaAt(v: Int, keep: String => Boolean = _ => true)
+      : (Seq[org.apache.spark.sql.types.StructField], org.apache.spark.sql.types.StructType) = {
+    import org.apache.spark.sql.types.{Metadata, MetadataBuilder, StructType}
+    val fields = schemaAt(v).getOrElse(sys.error(s"version $v records no schema"))
+      .fields.toSeq.filter(f => keep(f.name))
+    val cm = snapshotAt(v).colMap
     val eds = existDefaultsAt(v)
-    val filled =
-      if (eds.isEmpty) frames
-      else {
-        val cm = snapshotAt(v).colMap
-        val physEd = eds.toSeq.map { case (lc, (dt, value)) =>
-          (cm.collectFirst { case (l, p) if l.equalsIgnoreCase(lc) => p }
-            .getOrElse(lc), dt, value)
-        }
-        frames.map(f => physEd.foldLeft(f) { case (d, (phys, dt, value)) =>
-          if (d.columns.exists(_.equalsIgnoreCase(phys))) d
-          else if (dt == "timestamp")
-            // frozen as epoch micros — zone-independent reconstruction
-            d.withColumn(phys, timestamp_micros(lit(value.toLong)))
-          else d.withColumn(phys, lit(value).cast(dt))
-        })
+    (fields, StructType(fields.map { f =>
+      val md = eds.get(f.name.toLowerCase).fold(Metadata.empty) { case (dt, x) =>
+        new MetadataBuilder().putString("EXISTS_DEFAULT",
+          // a timestamp default is frozen as epoch micros (zone-independent)
+          if (dt == "timestamp") s"TIMESTAMP_MICROS($x)"
+          else s"CAST(${org.apache.spark.sql.catalyst.expressions.Literal(x).sql} AS $dt)")
+          .build()
       }
-    val out = toLogical(filled.reduce(_.unionByName(_, allowMissingColumns = true)), v)
-    // When the version's RECORDED schema diverges from what the files
-    // carry, the schema is the read contract: after a DROP COLUMN the old
-    // files still hold the dropped column's physical data (surfacing it
-    // would un-drop it), after a metadata-only ADD COLUMN no file carries
-    // the new column yet (it reads as NULL), and after an ALTER COLUMN …
-    // TYPE widen the pre-widen files still hold the narrow type (they
-    // read under the widened one — a lossless upcast). Era-correct: time
-    // travel reads each version under ITS recorded schema.
-    val diverged = snapshotAt(v).dropped.nonEmpty || schemaAt(v).exists(sch =>
-      sch.fields.exists(f =>
-        !out.columns.exists(_.equalsIgnoreCase(f.name)) ||
-          out.schema.fields.exists(o =>
-            o.name.equalsIgnoreCase(f.name) && o.dataType != f.dataType)) ||
-        // field ORDER is part of the read contract too (ALTER COLUMN …
-        // FIRST/AFTER is a metadata-only reorder of the recorded schema)
-        sch.fieldNames.map(_.toLowerCase).toSeq !=
-          out.columns.map(_.toLowerCase).toSeq)
-    if (!diverged) out
-    else schemaAt(v).map { sch =>
-      out.select(sch.fields.toSeq.map { f =>
-        out.schema.fields.find(_.name.equalsIgnoreCase(f.name)) match {
-          case Some(o) => conform(col(o.name), o.dataType, f.dataType).as(f.name)
-          case None => lit(null).cast(f.dataType).as(f.name)
-        }
-      }: _*)
-    }.getOrElse(out)
+      f.copy(name = cm.collectFirst { case (l, p) if l.equalsIgnoreCase(f.name) => p }
+        .getOrElse(f.name), nullable = true, metadata = md)
+    }))
   }
 
-  /** Align a read column onto the recorded type. Plain `cast` covers the
-    * scalar widenings, but a nested ADD COLUMN leaves old files' structs
-    * MISSING the new field — struct-to-struct cast cannot add fields, so
-    * structs conform field-by-field, null-filling recorded fields the
-    * files lack (recursively; a NULL struct stays NULL).
+  /** One parquet relation over `dirs` (a subset of version `v`'s live or
+    * tombstone dirs, `ext=` roots included) under v's recorded schema,
+    * restricted to the fields `keep` names, with v's column names. Every
+    * file reads under that one schema ([[physicalSchemaAt]]): a renamed
+    * column under its physical name, a column or nested struct field the
+    * file lacks as its exists-default or NULL, a narrower numeric type
+    * (ALTER COLUMN … TYPE) widened by the reader, a dropped column not at
+    * all. Its [[LogFileIndex]] prunes the dirs when a query is planned, by
+    * partition value, recorded min/max stats ([[canMatch]]) and bloom
+    * sidecars ([[bloomCanMatch]]); a `tracked` relation reports the dirs
+    * it kept in [[lastScanDirs]].
     */
-  private def conform(c: Column,
-      from: org.apache.spark.sql.types.DataType,
-      to: org.apache.spark.sql.types.DataType): Column = {
-    import org.apache.spark.sql.types.StructType
-    (from, to) match {
-      case (f, t) if f == t => c
-      case (f: StructType, t: StructType) =>
-        val built = struct(t.fields.toSeq.map { tf =>
-          f.fields.find(_.name.equalsIgnoreCase(tf.name)) match {
-            case Some(sf) =>
-              conform(c.getField(sf.name), sf.dataType, tf.dataType).as(tf.name)
-            case None => lit(null).cast(tf.dataType).as(tf.name)
-          }
-        }: _*)
-        when(c.isNull, lit(null).cast(t)).otherwise(built)
-      case (_, t) => c.cast(t)
+  private def frameFor(v: Int, dirs: Seq[String], keep: String => Boolean = _ => true,
+      tracked: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val (fields, dataSchema) = physicalSchemaAt(v, keep)
+    val partSchema = org.apache.spark.sql.types.StructType(
+      partitionCols.flatMap(c => dataSchema.find(_.name.equalsIgnoreCase(c))))
+    val bloomIdx = bloomIndexAt(v)
+    val index = new LogFileIndex(dirs.map(d => d -> resolvedPath(d)), partSchema,
+      spark.sessionState.conf.sessionLocalTimeZone, dataFiles,
+      (e, d) => canMatch(e, statsFor(d, v)) &&
+        (bloomIdx.isEmpty || bloomCanMatch(e, d, bloomIdx)),
+      n => if (tracked) lastScanDirs = n)
+    val rel = HadoopFsRelation(index, partSchema, dataSchema, None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      Map.empty)(spark)
+    // the relation's columns are the data schema's, in order (a partition
+    // column keeps its recorded position)
+    val df = org.apache.spark.sql.GraftSqlBridge.ofRows(spark, LogicalRelation(rel))
+    df.select(df.columns.toSeq.zip(fields).map { case (c, f) =>
+      col(s"`${c.replace("`", "``")}`").as(f.name, f.metadata)
+    }: _*)
+  }
+
+  /** The data files directly under dir entry `d` — THE single definition
+    * of "a dir's data files", shared by reads, DESCRIBE DETAIL, fastCount,
+    * manifests and commit metrics, so they never disagree on what counts
+    * as data: `_`/`.`-prefixed names (bloom sidecars, committer markers,
+    * checksums) are not. An `ext=` root that is gone fails with the
+    * external-source contract named.
+    */
+  private def dataFiles(d: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val all = try fs.listStatus(resolvedPath(d)).toSeq catch {
+      case e: java.io.FileNotFoundException if d.startsWith(ExtPrefix) =>
+        // an ext= root (CONVERT TO GRAFT / shallow clone) references the
+        // SOURCE's absolute location and never copies the files
+        throw new IllegalStateException(
+          s"external source '${resolveRoot(d.split("/")(0))}' referenced by table " +
+            s"'$path' is missing or moved — CONVERT TO GRAFT and shallow " +
+            "clones record the source location absolutely and do not copy " +
+            "its files; restore the source, or re-CONVERT/clone from its " +
+            "new location", e)
+    }
+    all.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
   }
 
-  /** Dirs actually scanned by the last [[readWhere]] — test instrumentation
-    * for the skipping contract. −1 until readWhere has run.
+  /** Dirs kept by the last planned scan of a [[readVersion]] frame (and
+    * so of [[read]] and [[readWhere]]) — test instrumentation for the
+    * skipping contract. −1 until one is planned.
     */
   private[graft] var lastScanDirs: Int = -1
 
-  /** Current-version read with Delta-style data skipping: live dirs whose
-    * recorded min/max stats PROVE no row can satisfy `cond` are pruned
-    * before the scan, then `cond` applies as a normal filter — pruning is
-    * strictly an optimization, so unknown predicates, missing stats, or
-    * type mismatches all conservatively keep the dir. This is the stats
-    * layer partition pruning can't give: the predicate column need not be
-    * a partition column, it only needs write-order correlation (the
-    * time-correlated layout 100 TB event tables naturally have). The
-    * writer version of a dir is parsed from its root name, so stats
-    * lookups stay O(1) memoized log reads even when live-dir replay came
-    * from a checkpoint.
+  /** Current-version read of the rows matching `cond`: `read.filter(cond)`,
+    * planned at once so [[lastScanDirs]] describes it. Pruning happens in
+    * the relation at planning time ([[frameFor]]): live dirs whose
+    * partition values, recorded min/max stats or bloom sidecars PROVE no
+    * row can satisfy `cond` are not scanned — strictly an optimization, so
+    * unknown predicates, missing stats or type mismatches keep the dir.
+    * The predicate column need not be a partition column; it only needs
+    * write-order correlation (the time-correlated layout 100 TB event
+    * tables naturally have). Any query over a read frame (GraftSql views,
+    * catalog scans) prunes the same way.
     */
   def readWhere(cond: Column): DataFrame = {
-    val v = currentVersion
-    require(v >= 1, "readWhere on a table with no commits")
-    val dirs = snapshotAt(v).liveDirs
-    val full = withTombstones(frameFor(v, dirs), v)
-    val filtered = full.filter(cond)
-    // Resolve + fold the predicate against the real schema before matching
-    // it to stats: analysis inserts the implicit casts (so a string-vs-int
-    // comparison can never slip through as a lexicographic prune — the
-    // cast wraps the attribute and the matcher conservatively keeps the
-    // dir), and constant folding turns cast('1997-06-01' as date) into the
-    // typed literal the bounds check can read.
-    val pred = filtered.queryExecution.optimizedPlan.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+    require(currentVersion >= 1, "readWhere on a table with no commits")
+    val df = read.filter(cond)
+    df.queryExecution.sparkPlan.foreach {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.selectedPartitions
+      case _ =>
     }
-    // stats are keyed by PHYSICAL column names — and so is the resolved
-    // predicate: the optimizer pushes the filter below the rename
-    // projection frameFor adds, rewriting logical attributes back to
-    // physical via alias substitution. If a predicate ever fails to push
-    // (logical attrs survive), the keying mismatch conservatively keeps
-    // the dir — pruning is an optimization, never a correctness input.
-    val kept = pred match {
-      case None => dirs // predicate folded away (trivially true/false)
-      case Some(p) =>
-        val bloomIdx = bloomIndexAt(v)
-        dirs.filter(d => canMatch(p, statsFor(d, v)) &&
-          (bloomIdx.isEmpty || bloomCanMatch(p, d, bloomIdx)))
-    }
-    lastScanDirs = kept.length
-    if (kept.length == dirs.length) return filtered
-    // fully pruned: keep the UNPRUNED read's exact schema (limit 0
-    // collapses to an empty relation — no scan)
-    if (kept.isEmpty) return full.limit(0).filter(cond)
-    // Align the pruned frame to the unpruned schema: under schema
-    // evolution a pruned-away dir may be the only holder of a column, and
-    // the result's shape must never depend on which dirs the stats
-    // happened to prune (a predicate over the missing column must
-    // null-evaluate, exactly as in the unpruned read).
-    val pruned = withTombstones(frameFor(v, kept), v)
-    val missing = full.schema.fields.filterNot(f => pruned.columns.contains(f.name))
-    missing.foldLeft(pruned)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-      .select(full.columns.map(col).toSeq: _*)
-      .filter(cond)
+    df
   }
 
   // dir → stats lookup cache; a miss at the version the dir name suggests
@@ -2402,7 +2300,7 @@ final case class VersionedTable(
       val idx = bloomIndexAt(currentVersion)
       // stage-time clamps still warn on stderr inside the build; the
       // machine-readable report belongs to explicit index builds
-      if (idx.nonEmpty) { val _ = writeBloomSidecars(rel, idx, _ => physical.schema) }
+      if (idx.nonEmpty) { val _ = writeBloomSidecars(rel, idx, physical.schema) }
     }
     (root, rel)
   }
@@ -2641,7 +2539,7 @@ final case class VersionedTable(
     import scala.jdk.CollectionConverters._
     val dataCols = (statsCols.map(physicalOf) ++ statsPkExtra).filterNot(c =>
       partitionCols.exists(p => physicalOf(p).equalsIgnoreCase(c)))
-    val files = dirs.map(d => d -> parquetFilesOf(Seq(d)).map(_.getPath))
+    val files = dirs.map(d => d -> dataFiles(d).map(_.getPath))
     val read = files.flatMap(_._2).asJava.parallelStream()
       .map[Option[Footer]] { f =>
         try {
@@ -3581,8 +3479,14 @@ final case class VersionedTable(
     val (root, adds, removes, schemaJson) = {
       val merged = curT.join(updates.select(pk.map(col): _*), pk, "left_anti")
         .unionByName(updates, allowMissingColumns = true)
+      // the recorded schema stays, byte for byte, unless the batch brings a
+      // new column or a wider type: then the merged frame's is the new one
+      val schemaJson =
+        if (schemaAt(next - 1).exists(org.apache.spark.sql.catalyst.types.DataTypeUtils
+            .sameType(_, merged.schema))) recordedSchemaJson(next - 1)
+        else merged.schema.json
       val (r, a) = stage(merged, next)
-      if (partitionCols.isEmpty) (r, a, snapshotAt(next - 1).liveDirs, merged.schema.json)
+      if (partitionCols.isEmpty) (r, a, snapshotAt(next - 1).liveDirs, schemaJson)
       else {
         // a live dir is superseded iff its partition path matches a restaged
         // leaf's. Migration source partitions can restage EMPTY (their only
@@ -3596,7 +3500,7 @@ final case class VersionedTable(
         (r, a,
           (snapshotAt(next - 1).liveDirs.filter(d => newParts.contains(partOf(d))) ++
             migratedDoomed).distinct,
-          merged.schema.json)
+          schemaJson)
       }
     }
     val cdfStaged: Option[Path] = Phases.timed(s"cdf-stage $path") {
@@ -3690,7 +3594,7 @@ final case class VersionedTable(
               // a winner that changed the SCHEMA (an evolving merge): blindly
               // re-committing our pre-race schemaJson at the new top version
               // would silently revert the evolution for every later reader
-              e.schemaJson.exists(w => nullableJson(w) != nullableJson(schemaJson)))
+              e.schemaJson.exists(_ != schemaJson))
           if (partitionCols.isEmpty || metaConflict ||
               winnerDirs.exists(d => ourParts.contains(partOf(d))))
             fail(" touching overlapping partitions")
@@ -3704,14 +3608,6 @@ final case class VersionedTable(
       }
     }
   }
-
-  /** `json` with every nullability flag set: merge records its
-    * all-nullable read frame's schema, so a flag flip alone is no schema
-    * change. Exact on Spark's compact JSON, whose names and metadata
-    * strings escape every quote.
-    */
-  private def nullableJson(json: String): String =
-    json.replaceAll("\"(nullable|containsNull|valueContainsNull)\":false", "\"$1\":true")
 
   /** Conditional-clause MERGE (Delta's full builder surface): see
     * [[MergeIntoBuilder]]. `targetAlias`/`sourceAlias` name the two sides
@@ -3889,7 +3785,7 @@ final case class VersionedTable(
           case (acc, (cl, i)) =>
             acc.when(nIdx === (i + 1), assigned(cl, cn, sCol(cn)))
         }.otherwise(sCol(cn))
-        when(isS, ins).otherwise(tCol(cn)).cast(outType(cn))
+        assignCast(when(isS, ins).otherwise(tCol(cn)), outType(cn), cn)
       }
       else {
         val tgt = matchedCs.zipWithIndex.foldLeft(when(lit(false), lit(null))) {
@@ -3907,7 +3803,7 @@ final case class VersionedTable(
               if (identSpecs.contains(cn.toLowerCase)) sCol(cn)
               else lit(null).cast(outType(cn))))
         }
-        full.otherwise(tCol(cn)).cast(outType(cn))
+        assignCast(full.otherwise(tCol(cn)), outType(cn), cn)
       }
     val mDel = deleteIdxs(matchedCs)
     val bDel = deleteIdxs(bySourceCs)
@@ -4157,12 +4053,13 @@ final case class VersionedTable(
     // apply each assignment only on matching rows (a NULL cond is not a
     // match — when() takes the otherwise branch); untouched columns and
     // non-matching rows pass through unchanged. An assigned value is cast
-    // to its column's recorded type (as MERGE INTO's clause values are):
-    // the restaged files are read back under the recorded schema
+    // to its column's recorded type (as MERGE INTO's clause values are),
+    // and refused when out of range ([[assignCast]]): the restaged files
+    // are read back under the recorded schema
     val recorded = tableSchema
     def appliedUser(df: DataFrame): DataFrame = df.select(df.columns.toSeq.map { c =>
       assignments.get(c) match {
-        case Some(a) => when(cond, a).otherwise(col(c)).cast(recorded(c).dataType).as(c)
+        case Some(a) => assignCast(when(cond, a).otherwise(col(c)), recorded(c).dataType, c).as(c)
         case None => col(c)
       }
     }: _*)
@@ -4203,6 +4100,18 @@ final case class VersionedTable(
     commitStaged("update", next, adds, removes, Some(root), recordedSchemaJson(next - 1),
       statsLines(root, adds) ++ identityWmLines(root), cdfStaged = cdfStaged)
     true
+  }
+
+  /** `value` cast to column `name`'s type `dt` for an UPDATE or MERGE INTO
+    * assignment. A value the type cannot hold is refused with the column
+    * named, where the session's non-ANSI cast would wrap or null it
+    * silently. Ingest keeps its own permissive cast + reject.
+    */
+  private def assignCast(value: Column, dt: org.apache.spark.sql.types.DataType,
+      name: String): Column = {
+    val cast = value.try_cast(dt)
+    when(value.isNotNull && cast.isNull, raise_error(lit(
+      s"value out of range for column '$name' (${dt.simpleString})"))).otherwise(cast)
   }
 
   /** Directory holding recorded change files (one subdir per recording
@@ -4636,7 +4545,7 @@ final case class VersionedTable(
     val own = adds.filterNot(_.startsWith(ExtPrefix))
     val metrics =
       if (own.isEmpty) None
-      else scala.util.Try(parquetFilesOf(own)).toOption.flatMap(files =>
+      else scala.util.Try(own.flatMap(dataFiles)).toOption.flatMap(files =>
         sumFooterRows(files.map(_.getPath)).map(n => s"metrics=${files.size}\t$n"))
     // the restore action RESETS the tombstone set in replay, so the dvadd
     // lines are v's exact DV state
@@ -4847,7 +4756,9 @@ final case class VersionedTable(
         s"leaf $rel does not match the declared partitioning " +
           s"[${partitionCols.mkString(",")}]")
     }
-    val df = spark.read.parquet(sourceDir)
+    // every file reads under the schema recorded here, so it merges the
+    // footers of all of them
+    val df = spark.read.option("mergeSchema", "true").parquet(sourceDir)
     (pk ++ partitionCols).foreach(c =>
       require(df.columns.exists(_.equalsIgnoreCase(c)),
         s"source lacks declared column '$c'"))
@@ -4880,11 +4791,8 @@ final case class VersionedTable(
     require(snapshotAt(v).dvDirs.isEmpty,
       "manifest export requires materialized deletes (live deletion vectors " +
         "cannot be expressed as a file list) — run compact() first")
-    val files = snapshotAt(v).liveDirs.flatMap { d =>
-      fs.listStatus(resolvedPath(d)).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(st => fs.makeQualified(st.getPath).toUri.toString)
-    }.sorted
+    val files = snapshotAt(v).liveDirs.flatMap(dataFiles)
+      .map(st => fs.makeQualified(st.getPath).toUri.toString).sorted
     val mdir = new Path(s"$path/_manifest")
     fs.mkdirs(mdir)
     val dest = new Path(mdir, s"manifest-${vname(v)}.txt")

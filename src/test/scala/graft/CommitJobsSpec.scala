@@ -144,6 +144,21 @@ class CommitJobsSpec extends SparkSpec {
       .count() == 9)
   }
 
+  test("a merge's job count stays flat as an uncompacted table's live " +
+      "roots grow: the table reads through one relation, not a union") {
+    val path = tmpDir("cj_flat") + "/t"
+    val t = VersionedTable(spark, path, Seq("id"), Seq("date"))
+    // merge d writes day d with ids ≡ d (mod 7): every dir's pk range
+    // meets every batch's, so each merge runs its migration probe over
+    // all the live roots, and its restage reads one relation over them
+    def day(d: Int) = orders((0 until 50).map(j => (7 * j + d, d, s"v$d")))
+    t.merge(day(0))                                              // v1
+    val jobs = (1 to 6).map(d => jobsDuring(path)(t.merge(day(d)))._2)
+    assert(jobs.forall(_ == jobs.head),
+      s"jobs per merge over 2..7 live roots: ${jobs.mkString(", ")}")
+    assert(t.read.count() == 350 && t.snapshotAt(t.currentVersion).liveDirs.size == 7)
+  }
+
   test("∀ merge batches over a pk≠partition table, int and ASCII-string " +
       "pks, with and without migrations: the table equals the latest-value " +
       "model with no duplicate pk") {

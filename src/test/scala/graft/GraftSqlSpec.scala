@@ -866,4 +866,23 @@ class GraftSqlSpec extends SparkSpec {
       org.apache.spark.scheduler.SparkListenerApplicationEnd(0L))
     assert(GraftSql.registered(spark, "gsql20_tb").isEmpty)
   }
+
+  test("a SELECT … WHERE on a stats column scans only the dirs that can " +
+      "match and returns the rows of an unpruned read") {
+    val t = VersionedTable(spark, tmpDir("gsql_skip") + "/t", Seq("id"),
+      statsCols = Seq("x"))
+    // four appends, each its own dir with a disjoint x range
+    (0 until 4).foreach { k =>
+      t.append((100 * k until 100 * k + 100).map(i => (i.toLong, i * 3L)).toDF("id", "x"))
+    }
+    GraftSql.register(spark, "gsql_skip_t", t)
+    val got = GraftSql.run(spark,
+      "SELECT id, x FROM gsql_skip_t WHERE x >= 630 AND x < 660")
+      .as[(Long, Long)].collect().toSet
+    assert(t.lastScanDirs == 1, s"scanned ${t.lastScanDirs} of 4 dirs")
+    val all = t.read.as[(Long, Long)].collect()
+    assert(t.lastScanDirs == 4)
+    assert(got.nonEmpty && got == all.filter(r => r._2 >= 630 && r._2 < 660).toSet)
+    GraftSql.run(spark, "DROP TABLE gsql_skip_t")
+  }
 }

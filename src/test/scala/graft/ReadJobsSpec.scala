@@ -9,11 +9,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.lake.VersionedTable
 
-/** Building a read frame is metadata work: each write root is read under
-  * the schema its commit recorded, so `read`, `readVersion` and
-  * `readWhere` start no Spark job until an action runs — however many
-  * uncompacted commits the table holds. Only `ext=` roots (CONVERT TO
-  * GRAFT / shallow clone) still infer their schema, one job per root.
+/** Building a read frame is metadata work: every file of a version is
+  * read under the schema that version recorded, so `read`, `readVersion`
+  * and `readWhere` start no Spark job until an action runs — however many
+  * uncompacted commits the table holds, and `ext=` roots (CONVERT TO
+  * GRAFT / shallow clone) included.
   */
 class ReadJobsSpec extends SparkSpec {
   import spark.implicits._
@@ -89,8 +89,8 @@ class ReadJobsSpec extends SparkSpec {
     assert(cur.filter(col("id") === 5).count() == 0)
   }
 
-  test("a CONVERTed table still infers its ext= root: exactly one job " +
-      "per ext root, none for the table's own roots") {
+  test("a CONVERTed table reads its ext= root under the schema convert " +
+      "recorded: no job for it, none for the table's own roots") {
     val work = tmpDir("rj_cv")
     Seq((1, 10, "p1"), (2, 20, "p1"), (3, 30, "p2"))
       .toDF("id", "amount", "part")
@@ -100,8 +100,8 @@ class ReadJobsSpec extends SparkSpec {
     // restages p1 under the table's own root; p2 stays in the ext= root
     t.merge(Seq((1, 99, "p1")).toDF("id", "amount", "part"))
     val r = VersionedTable(spark, s"$work/t", Seq("id"), Seq("part"))
-    assert(jobsDuring { r.readVersion(1); () } == 1, "readVersion(1)")
-    assert(jobsDuring { r.read; () } == 1, "read")
+    assert(jobsDuring { r.readVersion(1); () } == 0, "readVersion(1)")
+    assert(jobsDuring { r.read; () } == 0, "read")
     assert(r.read.select("id", "amount").as[(Int, Int)].collect().toSet ==
       Set((1, 99), (2, 20), (3, 30)))
   }

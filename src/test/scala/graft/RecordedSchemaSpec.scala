@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 
 import graft.lake.{VersionedTable, ZOrder}
 
-/** Every write root is read back under the schema its commit recorded, so
-  * a writer must stage exactly the recorded types, and a writer that keeps
+/** Every version is read back under the schema it recorded, so a writer
+  * must stage exactly the recorded types, and a writer that keeps
   * the schema must record it unchanged: the same bytes, not a re-render
   * of a read frame (read frames are all-nullable).
   */
@@ -26,14 +26,22 @@ class RecordedSchemaSpec extends SparkSpec {
     t.overwrite(Seq((1, "a", 7, "10.00"), (2, "a", 8, "20.50"), (3, "b", 9, "1.25"))
       .toDF("id", "p", "qty", "amt")
       .withColumn("amt", col("amt").cast("decimal(10,2)")))                 // v1
-    // a bigint literal into an int column, a double product into a decimal
-    assert(t.update(col("id") === 1, Map("qty" -> lit(5000000000L))))       // v2
-    assert(t.update(col("p") === "a", Map("amt" -> col("amt") * 1.1)))     // v3
+    // a bigint literal too large for an int column is refused, by UPDATE
+    // and by MERGE INTO alike, naming the column (no silent wrap)
+    val e = intercept[Exception](
+      t.update(col("id") === 1, Map("qty" -> lit(5000000000L))))
+    assert(e.getMessage.contains("'qty'"))
+    val e2 = intercept[Exception](
+      t.mergeInto(Seq((1, "a", 5000000000L)).toDF("id", "p", "qty"))
+        .whenMatched().updateAll().execute())
+    assert(e2.getMessage.contains("'qty'"))
+    assert(t.currentVersion == 1)
+    // a double product into a decimal
+    assert(t.update(col("p") === "a", Map("amt" -> col("amt") * 1.1)))     // v2
     val types = t.read.schema.fields.map(f => f.name -> f.dataType.simpleString).toMap
     assert(types("qty") == "int" && types("amt") == "decimal(10,2)")
     val expected = t.readVersion(1)
-      .select(col("id"),
-        when(col("id") === 1, lit(5000000000L)).otherwise(col("qty")).cast("int"),
+      .select(col("id"), col("qty"),
         when(col("p") === "a", col("amt") * 1.1).otherwise(col("amt"))
           .cast("decimal(10,2)"))
       .as[(Int, Int, java.math.BigDecimal)].collect().toSet
@@ -41,7 +49,7 @@ class RecordedSchemaSpec extends SparkSpec {
       .as[(Int, Int, java.math.BigDecimal)].collect().toSet
     assert(got == expected)
     assert(got.exists(_._3.compareTo(new java.math.BigDecimal("11.00")) == 0))
-    assert(schemaLine(t, 3) == schemaLine(t, 1))
+    assert(schemaLine(t, 2) == schemaLine(t, 1))
   }
 
   test("writers that keep the schema record v1's schema line byte for byte") {
@@ -66,10 +74,11 @@ class RecordedSchemaSpec extends SparkSpec {
     t.mergeInto(Seq((4, "b", 44)).toDF("id", "p", "x"))
       .whenMatched().updateAll().execute()
     kept("MERGE INTO")
+    t.merge(Seq((4, "b", 45)).toDF("id", "p", "x")); kept("merge")
     t.compactWhere(col("p") === "a"); kept("compactWhere")
     t.compact(); kept("compact")
     assert(t.read.select("id", "p", "x").as[(Int, String, Int)].collect().toSet ==
-      Set((1, "a", 11), (4, "b", 44), (5, "c", 55)))
+      Set((1, "a", 11), (4, "b", 45), (5, "c", 55)))
 
     val grid = (0 until 16).map(i => (i, i % 4, i / 4)).toDF("id", "x", "y")
     val z = VersionedTable(spark, tmpDir("rs_z") + "/t", Seq("id"), Seq("zb"))
