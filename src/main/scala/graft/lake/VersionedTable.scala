@@ -1,8 +1,12 @@
 package graft.lake
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.ops.Phases
 
@@ -262,16 +266,14 @@ final case class VersionedTable(
     * (comments, pipeline tags, retention hints); the layout keys CREATE
     * consumes ('pk', 'partition', …) live in the layout sidecar instead.
     */
-  def properties: Map[String, String] =
-    snapshotAt(currentVersion).properties
-      // case-INSENSITIVE, matching the set/unset guards: a key like
-      // 'GRAFT.x' must be internal everywhere or nowhere — visible here
-      // but refused by unsetProperties would be a permanently stuck key
-      .filterNot(_._1.toLowerCase.startsWith(VersionedTable.InternalPropPrefix))
+  def properties: Map[String, String] = propertiesAsOfVersion(currentVersion)
 
   /** Table properties as of version `v` (time-travel read of metadata). */
   def propertiesAsOfVersion(v: Int): Map[String, String] =
     snapshotAt(v).properties
+      // case-INSENSITIVE, matching the set/unset guards: a key like
+      // 'GRAFT.x' must be internal everywhere or nowhere — visible here
+      // but refused by unsetProperties would be a permanently stuck key
       .filterNot(_._1.toLowerCase.startsWith(VersionedTable.InternalPropPrefix))
 
   /** Set (upsert) table properties as one metadata-only commit — Delta's
@@ -555,7 +557,7 @@ final case class VersionedTable(
     specs.keys.foreach { n =>
       val f = sch.fields.find(_.name.equalsIgnoreCase(n)).getOrElse(
         sys.error(s"identity column '$n' must exist in the table schema"))
-      require(f.dataType == org.apache.spark.sql.types.LongType,
+      require(f.dataType == LongType,
         s"identity column '$n' must be BIGINT; got ${f.dataType.simpleString}")
     }
     val existing = identitySpecsAt(v)
@@ -577,8 +579,7 @@ final case class VersionedTable(
         .filterNot { case (n, _) => existing.contains(n.toLowerCase) }
       val cur = readVersion(v)
       val aggs = declared.map { case (n, sp) =>
-        (if (sp.step > 0) max(col(n)) else min(col(n)))
-          .cast(org.apache.spark.sql.types.LongType).as(s"__wm_$n")
+        (if (sp.step > 0) max(col(n)) else min(col(n))).cast(LongType).as(s"__wm_$n")
       }
       val row = cur.agg(aggs.head, aggs.tail: _*).head()
       declared.zipWithIndex.flatMap { case ((n, sp), i) =>
@@ -638,8 +639,7 @@ final case class VersionedTable(
         assigned = true
         val base = identityWatermark(lc).getOrElse(sp.start - sp.step)
         d.withColumn(lc,
-          (lit(base) + lit(sp.step) * (monotonically_increasing_id() + lit(1L)))
-            .cast(org.apache.spark.sql.types.LongType))
+          (lit(base) + lit(sp.step) * (monotonically_increasing_id() + lit(1L))).cast(LongType))
       }
     }
     // PIN the assigned values: monotonically_increasing_id depends on the
@@ -674,16 +674,14 @@ final case class VersionedTable(
     }
     if (absent.isEmpty) return src
     val names = absent.keys.toSeq.sorted
-    val existCols = names.map(n =>
-      col(n).cast(org.apache.spark.sql.types.LongType).as(s"__graft_ident_$n"))
+    val existCols = names.map(n => col(n).cast(LongType).as(s"__graft_ident_$n"))
     val existing = targetScope.select(pk.map(col) ++ existCols: _*)
     val joined = src.join(existing, pk, "left")
     names.foldLeft(joined) { (d, n) =>
       val sp = absent(n)
       val base = identityWatermark(n).getOrElse(sp.start - sp.step)
       d.withColumn(n, coalesce(col(s"__graft_ident_$n"),
-          (lit(base) + lit(sp.step) * (monotonically_increasing_id() + lit(1L)))
-            .cast(org.apache.spark.sql.types.LongType)))
+          (lit(base) + lit(sp.step) * (monotonically_increasing_id() + lit(1L))).cast(LongType)))
         .drop(s"__graft_ident_$n")
     }.select(
       (src.columns.toSeq ++ names.filterNot(n =>
@@ -715,8 +713,7 @@ final case class VersionedTable(
       }
       if (present.isEmpty) return Nil
       val aggs = present.map { case (lc, c, sp) =>
-        (if (sp.step > 0) max(col(c)) else min(col(c)))
-          .cast(org.apache.spark.sql.types.LongType).as(s"__wm_$lc")
+        (if (sp.step > 0) max(col(c)) else min(col(c))).cast(LongType).as(s"__wm_$lc")
       }
       val row = staged.agg(aggs.head, aggs.tail: _*).head()
       present.zipWithIndex.flatMap { case ((lc, _, sp), i) =>
@@ -752,8 +749,7 @@ final case class VersionedTable(
       sys.error(s"'$name' is not an identity column"))
     val v = currentVersion
     val row = readVersion(v).agg(
-      (if (sp.step > 0) max(col(name)) else min(col(name)))
-        .cast(org.apache.spark.sql.types.LongType)).head()
+      (if (sp.step > 0) max(col(name)) else min(col(name))).cast(LongType)).head()
     val seen = if (row.isNullAt(0)) sp.start - sp.step else row.getLong(0)
     // never sync BELOW the declared start: an empty table resets to the
     // pre-first-allocation base, not past it
@@ -823,16 +819,13 @@ final case class VersionedTable(
     * a re-run of createBloomIndex rebuilds them under the new type —
     * build casts to the same logical type the probe sees.
     */
-  private def bloomTag(dt: org.apache.spark.sql.types.DataType): String =
-    dt.simpleString.replaceAll("[^A-Za-z0-9]", "")
+  private def bloomTag(dt: DataType): String = dt.simpleString.replaceAll("[^A-Za-z0-9]", "")
 
   /** The current logical type of the bloom-index key `physLc`, if the
     * column still exists.
     */
-  private def bloomTypeOf(physLc: String)
-      : Option[org.apache.spark.sql.types.DataType] =
-    tableSchema.fields
-      .find(f => physicalOf(f.name).toLowerCase == physLc).map(_.dataType)
+  private def bloomTypeOf(physLc: String): Option[DataType] =
+    tableSchema.fields.find(f => physicalOf(f.name).toLowerCase == physLc).map(_.dataType)
 
   private def bloomSidecarPath(d: String, phys: String, tag: String): Path =
     new Path(resolvedPath(d), s"_bloom_${phys}_$tag")
@@ -870,8 +863,7 @@ final case class VersionedTable(
 
   private def writeBloomSidecars(targets: Seq[String],
       idx: Map[String, (Double, Option[Long])],
-      schema: org.apache.spark.sql.types.StructType)
-      : (Int, Seq[BloomClamp]) = {
+      schema: StructType): (Int, Seq[BloomClamp]) = {
     val clamps = scala.collection.mutable.ArrayBuffer.empty[BloomClamp]
     val own = targets.filterNot(_.startsWith(ExtPrefix))
       // an empty leaf (TRUNCATE / zero-row partition) holds no rows to
@@ -883,7 +875,7 @@ final case class VersionedTable(
       .map(d => fs.makeQualified(resolvedPath(d)).toUri.getPath -> d).toMap
     // leaf dirs are read WITHOUT basePath (no partition columns) under
     // the known physical schema — no footer-inference job
-    val raw = spark.read.schema(org.apache.spark.sql.types.StructType(schema.fields
+    val raw = spark.read.schema(StructType(schema.fields
         .filterNot(f => partitionCols.exists(_.equalsIgnoreCase(f.name)))))
       .parquet(own.map(d => resolvedPath(d).toString): _*)
     val present = idx.toSeq.sortBy(_._1).flatMap { case (lc, (fpp, ni)) =>
@@ -1167,7 +1159,7 @@ final case class VersionedTable(
     require(!snap.dropped.exists(_.equalsIgnoreCase(newName)),
       s"'$newName' was dropped and still names old data on disk — " +
         "pick a different name")
-    val newSchema = org.apache.spark.sql.types.StructType(sch.fields.map(f =>
+    val newSchema = StructType(sch.fields.map(f =>
       if (f.name.equalsIgnoreCase(oldName)) f.copy(name = newName) else f))
     // default/comment declarations are keyed by LOGICAL name — move them
     // with the rename, atomically (set/unset keys are disjoint, so the
@@ -1194,8 +1186,7 @@ final case class VersionedTable(
     * physical names (a rename's old name or a dropped column — the new
     * column would silently surface the OLD on-disk data for old rows).
     */
-  def addColumn(name: String,
-                dataType: org.apache.spark.sql.types.DataType,
+  def addColumn(name: String, dataType: DataType,
                 default: Option[String] = None,
                 position: Option[VersionedTable.ColumnPlacement] = None): Unit = {
     require(exists, "addColumn on a table with no commits")
@@ -1209,7 +1200,7 @@ final case class VersionedTable(
       case (l, p) if !l.equalsIgnoreCase(p) => p } ++ snapshotAt(v).dropped
     require(!retired.exists(_.equalsIgnoreCase(name)),
       s"'$name' still names retired on-disk data — pick a different name")
-    val newField = org.apache.spark.sql.types.StructField(
+    val newField = StructField(
       name, dataType, nullable = true)
     // FIRST/AFTER is pure schema ORDER — the read projection follows the
     // recorded field order, so placement is metadata like the add itself
@@ -1221,7 +1212,7 @@ final case class VersionedTable(
         require(j >= 0, s"AFTER column '$a' does not exist")
         (sch.fields.take(j + 1) :+ newField) ++ sch.fields.drop(j + 1)
     }
-    val newSchema = org.apache.spark.sql.types.StructType(newFields)
+    val newSchema = StructType(newFields)
     // DEFAULT: freeze the expression NOW to a literal (Delta's
     // EXISTS_DEFAULT contract — `current_date()` in the default must not
     // drift per read) — existing rows read it, and the same commit also
@@ -1257,32 +1248,27 @@ final case class VersionedTable(
     * struct type, [[frameFor]]), files written after carry it. `parent` is
     * the field path to the enclosing struct (arbitrary depth).
     */
-  def addNestedColumn(parent: Seq[String], name: String,
-                      dataType: org.apache.spark.sql.types.DataType): Unit = {
+  def addNestedColumn(parent: Seq[String], name: String, dataType: DataType): Unit = {
     require(exists, "addNestedColumn on a table with no commits")
     require(parent.nonEmpty, "addNestedColumn needs a parent struct path")
     val v = currentVersion
     val sch = schemaAt(v)
       .getOrElse(sys.error(s"version $v has no recorded schema"))
-    def insert(st: org.apache.spark.sql.types.StructType,
-               path: Seq[String]): org.apache.spark.sql.types.StructType =
-      path match {
-        case Seq() =>
-          require(!st.fieldNames.exists(_.equalsIgnoreCase(name)),
-            s"field '$name' already exists in struct")
-          org.apache.spark.sql.types.StructType(st.fields :+
-            org.apache.spark.sql.types.StructField(name, dataType, nullable = true))
-        case head +: rest =>
-          val i = st.fields.indexWhere(_.name.equalsIgnoreCase(head))
-          require(i >= 0, s"unknown column '$head'")
-          st.fields(i).dataType match {
-            case inner: org.apache.spark.sql.types.StructType =>
-              org.apache.spark.sql.types.StructType(st.fields.updated(i,
-                st.fields(i).copy(dataType = insert(inner, rest))))
-            case dt => sys.error(s"'$head' is ${dt.simpleString}, not a " +
-              "struct — nested ADD COLUMN needs a struct parent")
-          }
-      }
+    def insert(st: StructType, path: Seq[String]): StructType = path match {
+      case Seq() =>
+        require(!st.fieldNames.exists(_.equalsIgnoreCase(name)),
+          s"field '$name' already exists in struct")
+        StructType(st.fields :+ StructField(name, dataType, nullable = true))
+      case head +: rest =>
+        val i = st.fields.indexWhere(_.name.equalsIgnoreCase(head))
+        require(i >= 0, s"unknown column '$head'")
+        st.fields(i).dataType match {
+          case inner: StructType =>
+            StructType(st.fields.updated(i, st.fields(i).copy(dataType = insert(inner, rest))))
+          case dt => sys.error(s"'$head' is ${dt.simpleString}, not a " +
+            "struct — nested ADD COLUMN needs a struct parent")
+        }
+    }
     commitMetadataOnly("add_column", v + 1, insert(sch, parent).json, Nil,
       s"addNestedColumn(${(parent :+ name).mkString(".")})")
   }
@@ -1311,7 +1297,7 @@ final case class VersionedTable(
         (without.take(j + 1) :+ f) ++ without.drop(j + 1)
     }
     commitMetadataOnly("reorder_column", v + 1,
-      org.apache.spark.sql.types.StructType(newFields).json, Nil,
+      StructType(newFields).json, Nil,
       s"moveColumn($name ${after.map("AFTER " + _).getOrElse("FIRST")})")
   }
 
@@ -1453,8 +1439,7 @@ final case class VersionedTable(
       s"cannot drop '$name': referenced by ${referencedBy.mkString(",")}")
     val binding = snap.colMap.find(_._1.equalsIgnoreCase(name))
     val phys = binding.map(_._2).getOrElse(name)
-    val newSchema = org.apache.spark.sql.types.StructType(
-      sch.fields.filterNot(_.name.equalsIgnoreCase(name)))
+    val newSchema = StructType(sch.fields.filterNot(_.name.equalsIgnoreCase(name)))
     // a renamed column leaves a logical→physical binding behind; clear it
     // (rename L→P resolves to identity and drops out of the map), or a
     // FUTURE column re-using the logical name would silently write onto
@@ -1478,8 +1463,7 @@ final case class VersionedTable(
     * type-widening set restricted to upcasts every engine reads exactly
     * (no value change, no precision loss).
     */
-  private def widensTo(from: org.apache.spark.sql.types.DataType,
-                       to: org.apache.spark.sql.types.DataType): Boolean = {
+  private def widensTo(from: DataType, to: DataType): Boolean = {
     import org.apache.spark.sql.types._
     (from, to) match {
       case (ByteType, ShortType | IntegerType | LongType) => true
@@ -1505,8 +1489,7 @@ final case class VersionedTable(
     * partition columns are refused: their values are directory-name
     * strings whose parse type must stay stable for pruning.
     */
-  def alterColumnType(name: String,
-                      to: org.apache.spark.sql.types.DataType): Unit = {
+  def alterColumnType(name: String, to: DataType): Unit = {
     require(exists, "alterColumnType on a table with no commits")
     val v = currentVersion
     val sch = schemaAt(v)
@@ -1522,7 +1505,7 @@ final case class VersionedTable(
         s"float→double); ${f.dataType.simpleString} → ${to.simpleString} " +
         "is not a supported widening — narrowing or relabeling needs a " +
         "rewrite (CREATE TABLE … AS SELECT with casts)")
-    val newSchema = org.apache.spark.sql.types.StructType(sch.fields.map(x =>
+    val newSchema = StructType(sch.fields.map(x =>
       if (x.name.equalsIgnoreCase(name)) x.copy(dataType = to) else x))
     commitMetadataOnly("widen", v + 1, newSchema.json, Nil,
       s"alterColumnType($name -> ${to.simpleString})")
@@ -1542,20 +1525,17 @@ final case class VersionedTable(
   private def recordedSchemaJson(v: Int): String =
     schemaJsonAt(v).getOrElse(sys.error(s"version $v has no recorded schema"))
 
-  private val schemaAtCache = scala.collection.mutable.HashMap
-    .empty[Int, Option[org.apache.spark.sql.types.StructType]]
+  private val schemaAtCache = scala.collection.mutable.HashMap.empty[Int, Option[StructType]]
 
   /** Parsed [[schemaJsonAt]], memoized per version — [[frameFor]] consults
     * it on every read, and a committed version's schema never changes.
     */
-  private def schemaAt(v: Int): Option[org.apache.spark.sql.types.StructType] =
+  private def schemaAt(v: Int): Option[StructType] =
     schemaAtCache.getOrElseUpdate(v,
-      schemaJsonAt(v).map(org.apache.spark.sql.types.DataType.fromJson(_)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]))
+      schemaJsonAt(v).map(DataType.fromJson(_).asInstanceOf[StructType]))
 
   /** The table schema at the current version — a metadata read. */
-  private def recordedSchema: Option[org.apache.spark.sql.types.StructType] =
-    schemaAt(currentVersion)
+  private def recordedSchema: Option[StructType] = schemaAt(currentVersion)
 
   /** Null-fill table columns the batch omits — merge's
     * allowMissingColumns semantics, so constraint/generated-column
@@ -1913,8 +1893,8 @@ final case class VersionedTable(
     * which the parquet reader returns for files that predate the column.
     */
   private def physicalSchemaAt(v: Int, keep: String => Boolean = _ => true)
-      : (Seq[org.apache.spark.sql.types.StructField], org.apache.spark.sql.types.StructType) = {
-    import org.apache.spark.sql.types.{Metadata, MetadataBuilder, StructType}
+      : (Seq[StructField], StructType) = {
+    import org.apache.spark.sql.types.{Metadata, MetadataBuilder}
     val fields = schemaAt(v).getOrElse(sys.error(s"version $v records no schema"))
       .fields.toSeq.filter(f => keep(f.name))
     val cm = snapshotAt(v).colMap
@@ -1948,7 +1928,7 @@ final case class VersionedTable(
       tracked: Boolean = false): DataFrame = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val (fields, dataSchema) = physicalSchemaAt(v, keep)
-    val partSchema = org.apache.spark.sql.types.StructType(
+    val partSchema = StructType(
       partitionCols.flatMap(c => dataSchema.find(_.name.equalsIgnoreCase(c))))
     val bloomIdx = bloomIndexAt(v)
     val index = new LogFileIndex(dirs.map(d => d -> resolvedPath(d)), partSchema,
@@ -1999,7 +1979,12 @@ final case class VersionedTable(
   private[graft] var lastScanDirs: Int = -1
 
   /** Current-version read of the rows matching `cond`: `read.filter(cond)`,
-    * planned at once so [[lastScanDirs]] describes it. Pruning happens in
+    * planned at once so [[lastScanDirs]] describes it before any action:
+    * the catalog's serving reads (`VectorOps`' modality probe) and the
+    * skipping specs (`BloomSkipSpec`, `IdentityColumnSpec`, `ReadJobsSpec`)
+    * check it straight after the call. An action on the frame itself
+    * reuses that plan; a derived frame (`count`, a join) plans again, over
+    * the dirs the relation has already listed. Pruning happens in
     * the relation at planning time ([[frameFor]]): live dirs whose
     * partition values, recorded min/max stats or bloom sidecars PROVE no
     * row can satisfy `cond` are not scanned — strictly an optimization, so
@@ -2133,8 +2118,7 @@ final case class VersionedTable(
     * BigDecimal (which throws on a non-numeric string — callers wrap it),
     * ASCII strings and canonical dates lexicographically.
     */
-  private def statsOrder(ct: org.apache.spark.sql.types.DataType,
-      lt: org.apache.spark.sql.types.DataType,
+  private def statsOrder(ct: DataType, lt: DataType,
       vals: Seq[String]): Option[(String, String) => Int] = {
     import org.apache.spark.sql.types._
     def ascii = vals.forall(_.forall(_ < 128))
@@ -2314,7 +2298,7 @@ final case class VersionedTable(
   /** Static one-predicate-per-touched-tuple filter (p1=v1 AND p2=v2 …) —
     * literal comparisons so the current-version scan partition-prunes.
     */
-  private def partitionPredicate(touched: Array[org.apache.spark.sql.Row]): Column =
+  private def partitionPredicate(touched: Array[Row]): Column =
     touched.map { r =>
       partitionCols.zipWithIndex
         .map { case (c, i) => col(c) <=> lit(r.get(i)) }
@@ -2326,14 +2310,13 @@ final case class VersionedTable(
     * by, from the same single aggregation (the same Spark jobs) a plain
     * distinct over the partition columns takes.
     */
-  private def touchedGroups(batch: DataFrame): Array[org.apache.spark.sql.Row] = {
+  private def touchedGroups(batch: DataFrame): Array[Row] = {
     val bounds = pk.flatMap(c => Seq(min(col(c)), max(col(c))))
     batch.groupBy(partitionCols.map(col): _*).agg(bounds.head, bounds.tail: _*).collect()
   }
 
   /** The partition tuple of a [[touchedGroups]] row. */
-  private def partitionTuple(g: org.apache.spark.sql.Row): org.apache.spark.sql.Row =
-    org.apache.spark.sql.Row.fromSeq(g.toSeq.take(partitionCols.length))
+  private def partitionTuple(g: Row): Row = Row.fromSeq(g.toSeq.take(partitionCols.length))
 
   /** Partitions outside the batch's touched set holding a row visible at
     * `v` whose pk the batch re-delivers — partition MIGRATION (a
@@ -2358,8 +2341,7 @@ final case class VersionedTable(
     * qualifies, nor when every partition column is part of the pk (equal
     * pk ⇒ equal partition values ⇒ migration impossible).
     */
-  private def migratedPartitions(v: Int, batch: DataFrame,
-      groups: Array[org.apache.spark.sql.Row]): Array[org.apache.spark.sql.Row] = {
+  private def migratedPartitions(v: Int, batch: DataFrame, groups: Array[Row]): Array[Row] = {
     import org.apache.spark.sql.catalyst.expressions.{
       And => CAnd, AttributeReference, GreaterThanOrEqual, LessThanOrEqual,
       Literal => CLit}
@@ -2392,8 +2374,7 @@ final case class VersionedTable(
               if (r.isNullAt(i)) "__HIVE_DEFAULT_PARTITION__" else r.get(i).toString)
               .toSeq).toSet
             d => paths.contains(partOf(d).split("/").toSeq.map(seg =>
-              org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                .unescapePathName(seg.split("=", 2).last)))
+              unescapePathName(seg.split("=", 2).last)))
           }
         // per pk column: its attribute, and the groups' bounds merged into
         // sorted disjoint intervals (None: not order-faithful, no pruning)
@@ -2440,7 +2421,7 @@ final case class VersionedTable(
         live.filterNot(inTouched).filter(mayHoldKey)
       }
     Phases.timed(s"migrate-probe $path dirs=${cand.size}/${live.size}") {
-      if (cand.isEmpty) Array.empty[org.apache.spark.sql.Row]
+      if (cand.isEmpty) Array.empty[Row]
       else withTombstones(frameFor(v, cand), v).filter(!partitionPredicate(touched))
         .join(batch.select(pk.map(col): _*).distinct(), pk, "left_semi")
         .select(partitionCols.map(col): _*).distinct().collect()
@@ -2689,8 +2670,7 @@ final case class VersionedTable(
         })
         val partLines = wanted.flatMap { c =>
           segs.find(_._1.equalsIgnoreCase(c)).flatMap { case (k, raw) =>
-            val v = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .unescapePathName(raw)
+            val v = unescapePathName(raw)
             if (v == hiveDefault) None else Some((k, v, v))
           }
         }
@@ -2976,8 +2956,7 @@ final case class VersionedTable(
     * cast to its recorded type, an omitted one is null-filled, in `sch`'s
     * column order.
     */
-  private def conformed(incoming: DataFrame, sch: org.apache.spark.sql.types.StructType,
-                        op: String): DataFrame = {
+  private def conformed(incoming: DataFrame, sch: StructType, op: String): DataFrame = {
     val extraCols = incoming.columns
       .filterNot(c => sch.fieldNames.exists(_.equalsIgnoreCase(c)))
     require(extraCols.isEmpty,
@@ -3047,9 +3026,8 @@ final case class VersionedTable(
       val segs = partOf(dir).split("/")
       staticSpec.length <= segs.length && staticSpec.zip(segs).forall {
         case ((k, v), seg) => seg.split("=", 2) match {
-          case Array(dk, dv) => dk.equalsIgnoreCase(physicalOf(k)) &&
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .unescapePathName(dv) == v
+          case Array(dk, dv) =>
+            dk.equalsIgnoreCase(physicalOf(k)) && unescapePathName(dv) == v
           case _ => false
         }
       }
@@ -3367,7 +3345,7 @@ final case class VersionedTable(
     */
   def copyFrom(sourceDir: String, format: String = "parquet",
                pattern: Option[String] = None,
-               schemaHint: Option[org.apache.spark.sql.types.StructType] = None,
+               schemaHint: Option[StructType] = None,
                header: Boolean = false, force: Boolean = false,
                files: Option[Seq[String]] = None): Int = {
     require(pk.nonEmpty, "copyFrom needs primary-key columns")
@@ -3444,13 +3422,10 @@ final case class VersionedTable(
     // A caller may have persisted the batch itself — persisting the same
     // plan again is a no-op, but OUR finally-unpersist would then evict
     // the caller's cache out from under it, so ownership is checked first
-    val updates0raw = applyGenerated(updatesIn)
-    val ownCache =
-      updates0raw.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val updates0raw = mergeTyped(applyGenerated(updatesIn))
+    val ownCache = updates0raw.storageLevel == StorageLevel.NONE
     val updates0 =
-      if (ownCache)
-        updates0raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else updates0raw
+      if (ownCache) updates0raw.persist(StorageLevel.MEMORY_AND_DISK) else updates0raw
     try {
     val next = currentVersion + 1
     val current = read
@@ -3459,7 +3434,7 @@ final case class VersionedTable(
     // partition columns, so deriving it BEFORE identity assignment is
     // sound)
     val groups = Phases.timed(s"touched-set $path") {
-      if (partitionCols.isEmpty) Array.empty[org.apache.spark.sql.Row]
+      if (partitionCols.isEmpty) Array.empty[Row]
       else touchedGroups(updates0)
     }
     val touched = groups.map(partitionTuple)
@@ -3482,8 +3457,8 @@ final case class VersionedTable(
       // the recorded schema stays, byte for byte, unless the batch brings a
       // new column or a wider type: then the merged frame's is the new one
       val schemaJson =
-        if (schemaAt(next - 1).exists(org.apache.spark.sql.catalyst.types.DataTypeUtils
-            .sameType(_, merged.schema))) recordedSchemaJson(next - 1)
+        if (schemaAt(next - 1).exists(DataTypeUtils.sameType(_, merged.schema)))
+          recordedSchemaJson(next - 1)
         else merged.schema.json
       val (r, a) = stage(merged, next)
       if (partitionCols.isEmpty) (r, a, snapshotAt(next - 1).liveDirs, schemaJson)
@@ -3511,6 +3486,36 @@ final case class VersionedTable(
       txn = txn, cdfStaged = cdfStaged, maxAttempts = maxAttempts,
       ourParts = (adds ++ removes).map(partOf).toSet)
     } finally if (ownCache) updates0.unpersist(false)
+  }
+
+  /** `batch` with each column the merge could not record under its
+    * union type cast to its recorded type. Every version reads all its
+    * files under one schema ([[frameFor]]), so the merge may only record a
+    * type the table's files can be read under ([[readableAs]]): a widening
+    * or added struct fields evolve the schema; int + string or decimal +
+    * double would record a type the old files cannot be read as, so the
+    * batch value is stored as the recorded type instead, and refused when
+    * that type cannot hold it ([[assignCast]]).
+    */
+  private def mergeTyped(batch: DataFrame): DataFrame = {
+    val rec = tableSchema
+    val union = spark.createDataFrame(java.util.Collections.emptyList[Row](), rec)
+      .unionByName(batch, allowMissingColumns = true).schema
+    val recast = rec.fields.filterNot(f => readableAs(f.dataType, union(f.name).dataType))
+      .map(f => f.name.toLowerCase -> f.dataType).toMap
+    if (recast.isEmpty) batch
+    else batch.select(batch.schema.fields.toSeq.map(b => recast.get(b.name.toLowerCase)
+      .fold(col(b.name))(dt => assignCast(col(b.name), b.dataType, dt, b.name).as(b.name))): _*)
+  }
+
+  /** Can files written under `from` be read under `to`? The same type, a
+    * [[widensTo]] upcast, or a struct whose fields are each readable and
+    * that may add fields (a file lacking one reads it as NULL).
+    */
+  private def readableAs(from: DataType, to: DataType): Boolean = (from, to) match {
+    case (f: StructType, t: StructType) => f.fields.forall(ff => t.fields.exists(tf =>
+      tf.name.equalsIgnoreCase(ff.name) && readableAs(ff.dataType, tf.dataType)))
+    case _ => DataTypeUtils.sameType(from, to) || widensTo(from, to)
   }
 
   /** The one commit path: every writer claims its version here, through
@@ -3654,20 +3659,9 @@ final case class VersionedTable(
       .filter(k => pk.exists(_.equalsIgnoreCase(k)))
     require(badPk.isEmpty,
       s"merge update clauses must not assign primary-key columns (${badPk.mkString(",")})")
+    refuseDerivedAssigned("merge clauses", clauses.flatMap(_.set.keys))
     val gs = snapshotAt(currentVersion).generatedCols
-    val badGen = clauses.flatMap(_.set.keys)
-      .filter(k => gs.keys.exists(_.equalsIgnoreCase(k)))
-    require(badGen.isEmpty,
-      s"merge clauses must not assign generated columns (${badGen.mkString(",")}): " +
-        "they re-derive from their expressions automatically")
-    // ALWAYS identity columns are system-assigned — a clause writing one
-    // would forge ids
     val identSpecs = identityCols
-    val badIdent = clauses.flatMap(_.set.keys).filter(k =>
-      identSpecs.get(k.toLowerCase).exists(!_.allowExplicit))
-    require(badIdent.isEmpty,
-      s"merge clauses must not assign GENERATED ALWAYS AS IDENTITY " +
-        s"columns (${badIdent.mkString(",")})")
     // the PK join and the insert default both need the source's keys — a
     // source without them would silently insert NULL keys (and could not
     // match anything)
@@ -3676,12 +3670,9 @@ final case class VersionedTable(
     // persist the source for its several consumers (uniqueness check,
     // identity scoping, the clause join) — same rationale as [[merge]]'s
     // batch persist: an expensive source plan must execute once
-    val ownSourceCache =
-      sourceIn.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val ownSourceCache = sourceIn.storageLevel == StorageLevel.NONE
     val sourceP =
-      if (ownSourceCache)
-        sourceIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sourceIn
+      if (ownSourceCache) sourceIn.persist(StorageLevel.MEMORY_AND_DISK) else sourceIn
     try {
     // duplicate source keys would fan a matched target row out into
     // several staged copies — Delta's MULTIPLE_MATCHES refusal
@@ -3716,7 +3707,7 @@ final case class VersionedTable(
     // (pre-existing rows read them as NULL; the widened schema rides the
     // merge commit, so untouched dirs null-fill on later reads exactly
     // like a metadata ADD COLUMN). Without it they are simply ignored.
-    val newCols: Seq[org.apache.spark.sql.types.StructField] =
+    val newCols: Seq[StructField] =
       if (!evolveSchema) Nil
       else source.schema.fields.toSeq.filterNot(f =>
         current.columns.exists(_.equalsIgnoreCase(f.name)))
@@ -3734,10 +3725,10 @@ final case class VersionedTable(
       newCols.map(f => f.name -> f.dataType)).toMap
     // null-safe render of a partition tuple for set membership — used to
     // detect insert-clause rows escaping the source-derived touched set
-    def partKey(r: org.apache.spark.sql.Row): String =
+    def partKey(r: Row): String =
       (0 until r.length).map(i => if (r.isNullAt(i)) "\u0001" else r.get(i).toString)
         .mkString("\u0002")
-    def attempt(touched: Array[org.apache.spark.sql.Row], widened: Boolean): Unit = {
+    def attempt(touched: Array[Row], widened: Boolean): Unit = {
     val curT =
       if (partitionCols.isEmpty || hasBySource) current
       else current.filter(partitionPredicate(touched))
@@ -3785,7 +3776,7 @@ final case class VersionedTable(
           case (acc, (cl, i)) =>
             acc.when(nIdx === (i + 1), assigned(cl, cn, sCol(cn)))
         }.otherwise(sCol(cn))
-        assignCast(when(isS, ins).otherwise(tCol(cn)), outType(cn), cn)
+        when(isS, ins).otherwise(tCol(cn))
       }
       else {
         val tgt = matchedCs.zipWithIndex.foldLeft(when(lit(false), lit(null))) {
@@ -3803,7 +3794,7 @@ final case class VersionedTable(
               if (identSpecs.contains(cn.toLowerCase)) sCol(cn)
               else lit(null).cast(outType(cn))))
         }
-        assignCast(full.otherwise(tCol(cn)), outType(cn), cn)
+        full.otherwise(tCol(cn))
       }
     val mDel = deleteIdxs(matchedCs)
     val bDel = deleteIdxs(bySourceCs)
@@ -3814,7 +3805,11 @@ final case class VersionedTable(
     val modified = (isM && mIdx > 0) || (isT && bIdx > 0) || (isS && nIdx > 0)
 
     val preStruct = struct(outCols.map(cn => tCol(cn).as(cn)): _*)
-    val rawOut = j.select(outCols.map(cn => valueOf(cn).as(cn)) ++ Seq(
+    // each value is cast to its output type once its own type is known
+    val values = outCols.map(valueOf)
+    val from = j.select(outCols.zip(values).map { case (cn, x) => x.as(cn) }: _*).schema
+    val rawOut = j.select(outCols.zip(values).map { case (cn, x) =>
+      assignCast(x, from(cn).dataType, outType(cn), cn).as(cn) } ++ Seq(
       keep.as("__keep"), modified.as("__mod"), isS.as("__ins"),
       preStruct.as("__pre")): _*)
     // generated columns ALWAYS re-derive on modified rows (update()'s rule)
@@ -3825,7 +3820,7 @@ final case class VersionedTable(
     // the clause-evaluated join feeds up to four actions (partition-column
     // guard, constraint check, the restage write, change images) — persist
     // it so the join runs once, not once per action
-    val out = outPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val out = outPlan.persist(StorageLevel.MEMORY_AND_DISK)
     try {
     // insert clauses can stage rows into partitions OUTSIDE the
     // source-derived touched set (an explicit partition assignment, or an
@@ -3900,8 +3895,7 @@ final case class VersionedTable(
       }
     val commitSchemaJson =
       if (newCols.isEmpty) recordedSchemaJson(next - 1)
-      else org.apache.spark.sql.types.StructType(
-        current.schema.fields ++ newCols.map(_.copy(nullable = true))).json
+      else StructType(current.schema.fields ++ newCols.map(_.copy(nullable = true))).json
     commitStaged("merge", next, adds, removes, Some(root), commitSchemaJson,
       statsLines(root, adds) ++ identityWmLines(root),
       cdfStaged = cdfStaged, maxAttempts = maxAttempts,
@@ -3909,7 +3903,7 @@ final case class VersionedTable(
     } finally out.unpersist(false)
     }
     val groups0 =
-      if (partitionCols.isEmpty || hasBySource) Array.empty[org.apache.spark.sql.Row]
+      if (partitionCols.isEmpty || hasBySource) Array.empty[Row]
       else touchedGroups(source)
     // partition MIGRATION (as merge): a matched pk whose live row sits in a
     // partition the source doesn't name would fall out of curT and join as
@@ -3917,7 +3911,7 @@ final case class VersionedTable(
     // clause would silently not fire. Widen the touched set by the
     // partitions holding one; no probe when the join is already table-wide
     val migrated0 =
-      if (hasBySource) Array.empty[org.apache.spark.sql.Row]
+      if (hasBySource) Array.empty[Row]
       else migratedPartitions(next - 1, source, groups0)
     attempt(groups0.map(partitionTuple) ++ migrated0, widened = false)
     } finally if (ownSourceCache) sourceP.unpersist(false)
@@ -4033,36 +4027,29 @@ final case class VersionedTable(
     require(badCols.isEmpty,
       s"update must not change partition columns (${badCols.mkString(",")}): " +
         "partition-stable contract — use delete + merge to move rows")
-    // generated columns are ALWAYS derived, never assigned (Delta's rule);
-    // they re-derive below after the user assignments apply, so updating a
-    // source column keeps the derived value consistent automatically
+    // generated columns re-derive below after the user assignments apply,
+    // so updating a source column keeps the derived value consistent
+    refuseDerivedAssigned("update", assignments.keys)
     val gs = snapshotAt(currentVersion).generatedCols
-    val genAssigned = assignments.keySet.intersect(gs.keySet)
-    require(genAssigned.isEmpty,
-      s"update must not assign generated columns (${genAssigned.mkString(",")}): " +
-        "they re-derive from their expressions automatically")
-    // ALWAYS identity columns are system-assigned; BY DEFAULT updates are
-    // allowed (the commit's watermark scan observes the new values)
-    val identAssigned = assignments.keys.filter(k =>
-      identityCols.get(k.toLowerCase).exists(!_.allowExplicit))
-    require(identAssigned.isEmpty,
-      s"update must not assign GENERATED ALWAYS AS IDENTITY columns " +
-        s"(${identAssigned.mkString(",")})")
     val doomed = matchingDirs(cond)
     if (doomed.isEmpty) return false
     // apply each assignment only on matching rows (a NULL cond is not a
     // match — when() takes the otherwise branch); untouched columns and
     // non-matching rows pass through unchanged. An assigned value is cast
     // to its column's recorded type (as MERGE INTO's clause values are),
-    // and refused when out of range ([[assignCast]]): the restaged files
+    // and refused when that type cannot hold it ([[assignCast]]): the restaged files
     // are read back under the recorded schema
     val recorded = tableSchema
-    def appliedUser(df: DataFrame): DataFrame = df.select(df.columns.toSeq.map { c =>
-      assignments.get(c) match {
-        case Some(a) => assignCast(when(cond, a).otherwise(col(c)), recorded(c).dataType, c).as(c)
-        case None => col(c)
-      }
-    }: _*)
+    def appliedUser(df: DataFrame): DataFrame = {
+      val values = df.columns.toSeq.map(c => c -> assignments.get(c))
+      val from = df.select(values.collect { case (c, Some(a)) => a.as(c) }: _*).schema
+      df.select(values.map {
+        case (c, Some(a)) =>
+          when(cond, assignCast(a, from(c).dataType, recorded(c).dataType, c))
+            .otherwise(col(c)).as(c)
+        case (c, None) => col(c)
+      }: _*)
+    }
     // re-derive generated columns AFTER the assignments: the expression
     // must see the updated source values, not the pre-update row
     def applied(df: DataFrame): DataFrame =
@@ -4102,17 +4089,38 @@ final case class VersionedTable(
     true
   }
 
-  /** `value` cast to column `name`'s type `dt` for an UPDATE or MERGE INTO
-    * assignment. A value the type cannot hold is refused with the column
-    * named, where the session's non-ANSI cast would wrap or null it
-    * silently. Ingest keeps its own permissive cast + reject.
+  /** Refuse assignments by `op` to generated columns (always derived,
+    * Delta's rule) and to GENERATED ALWAYS identity columns (system-assigned:
+    * a written one would forge ids). BY DEFAULT identity columns may be
+    * assigned; the commit's watermark scan observes the new values.
     */
-  private def assignCast(value: Column, dt: org.apache.spark.sql.types.DataType,
-      name: String): Column = {
-    val cast = value.try_cast(dt)
-    when(value.isNotNull && cast.isNull, raise_error(lit(
-      s"value out of range for column '$name' (${dt.simpleString})"))).otherwise(cast)
+  private def refuseDerivedAssigned(op: String, keys: Iterable[String]): Unit = {
+    val gs = snapshotAt(currentVersion).generatedCols
+    val gen = keys.filter(k => gs.keys.exists(_.equalsIgnoreCase(k)))
+    require(gen.isEmpty, s"$op must not assign generated columns (${gen.mkString(",")}): " +
+      "they re-derive from their expressions automatically")
+    val ident = keys.filter(k => identityCols.get(k.toLowerCase).exists(!_.allowExplicit))
+    require(ident.isEmpty,
+      s"$op must not assign GENERATED ALWAYS AS IDENTITY columns (${ident.mkString(",")})")
   }
+
+  /** `value` (of type `from`) cast to column `name`'s type `dt` for an
+    * UPDATE, MERGE INTO or merge assignment. The session's own cast
+    * converts; a value it wraps or nulls is refused with the column named.
+    * Where ANSI allows the cast, `try_cast` detects the loss (an integral
+    * overflow the non-ANSI cast wraps); a cast only the non-ANSI rules
+    * allow (boolean → timestamp) is checked by its own NULL. Ingest keeps
+    * its own permissive cast + reject.
+    */
+  private def assignCast(value: Column, from: DataType, dt: DataType, name: String): Column =
+    if (DataTypeUtils.sameType(from, dt)) value
+    else {
+      val cast = value.cast(dt)
+      val check = if (org.apache.spark.sql.catalyst.expressions.Cast.canTryCast(from, dt))
+        value.try_cast(dt) else cast
+      when(value.isNotNull && check.isNull, raise_error(lit(
+        s"value cannot be stored in column '$name' (${dt.simpleString})"))).otherwise(cast)
+    }
 
   /** Directory holding recorded change files (one subdir per recording
     * commit, named like staging roots so racing writers never collide).
@@ -4297,8 +4305,7 @@ final case class VersionedTable(
       pk.map(n => byName(n.toLowerCase).last) ++
       names.filterNot(pk.contains).map(n => byName(n.toLowerCase).last) :+
       StructField("change_type", StringType)
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StructType(fields))
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(fields))
   }
 
   /** Snapshot-diff change feed: one full-outer join of two version reads
@@ -4354,13 +4361,12 @@ final case class VersionedTable(
   /** The table schema at the current version (log-recorded — a metadata
     * read, no file open).
     */
-  def tableSchema: org.apache.spark.sql.types.StructType =
-    recordedSchema.getOrElse(read.schema)
+  def tableSchema: StructType = recordedSchema.getOrElse(read.schema)
 
   /** Output schema of [[readChangesStream]]: the table's columns plus
     * `change_type` and `_commit_version` (Delta CDF's streaming shape).
     */
-  private[graft] def changeStreamSchema: org.apache.spark.sql.types.StructType = {
+  private[graft] def changeStreamSchema: StructType = {
     import org.apache.spark.sql.types._
     StructType(tableSchema.fields :+
       StructField("change_type", StringType) :+
@@ -4412,8 +4418,7 @@ final case class VersionedTable(
     }
     val aligned = frames
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], changeStreamSchema))
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], changeStreamSchema))
     // project to the frozen stream schema (null-filling columns a change
     // file predating a schema evolution lacks)
     val sch = changeStreamSchema

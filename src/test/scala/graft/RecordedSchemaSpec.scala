@@ -52,6 +52,47 @@ class RecordedSchemaSpec extends SparkSpec {
     assert(schemaLine(t, 2) == schemaLine(t, 1))
   }
 
+  test("an assignment only the non-ANSI cast rules allow casts as the " +
+      "session does; one whose cast is NULL is refused") {
+    val t = VersionedTable(spark, tmpDir("rs_legacy") + "/t", Seq("id"), Seq("p"))
+    t.overwrite(Seq((1, "a", 7), (2, "a", 8)).toDF("id", "p", "qty")
+      .withColumn("ts", lit(null).cast("timestamp")))                       // v1
+    // boolean → timestamp is not an ANSI cast; int → timestamp is
+    assert(t.update(col("id") === 1, Map("ts" -> lit(true))))              // v2
+    assert(t.update(col("id") === 2, Map("ts" -> lit(5))))                 // v3
+    assert(t.read.select(col("id"), unix_micros(col("ts"))).as[(Int, Long)]
+      .collect().toSet == Set((1, 1L), (2, 5000000L)))
+    // date → int is NULL under the non-ANSI cast: refused, not nulled
+    val e = intercept[Exception](
+      t.update(col("id") === 1, Map("qty" -> current_date())))
+    assert(e.getMessage.contains("cannot be stored in column 'qty'"))
+    assert(t.currentVersion == 3)
+  }
+
+  test("merge stores a batch value under its recorded type unless the " +
+      "type widens, so every partition still reads") {
+    val t = VersionedTable(spark, tmpDir("rs_merge") + "/t", Seq("id"), Seq("p"))
+    t.overwrite(Seq((1, "a", 7, "10.00"), (2, "b", 8, "20.50"))
+      .toDF("id", "p", "qty", "amt")
+      .withColumn("amt", col("amt").cast("decimal(10,2)")))                 // v1
+    // string into int and double into decimal(10,2), into partition a only
+    t.merge(Seq((1, "a", "70", 11.0)).toDF("id", "p", "qty", "amt"))       // v2
+    assert(schemaLine(t, 2) == schemaLine(t, 1))
+    assert(t.read.select("id", "qty", "amt").as[(Int, Int, java.math.BigDecimal)]
+      .collect().toSet == Set((1, 70, new java.math.BigDecimal("11.00")),
+        (2, 8, new java.math.BigDecimal("20.50"))))
+    // a value the recorded type cannot hold is refused, naming the column
+    val e = intercept[Exception](
+      t.merge(Seq((2, "b", "many")).toDF("id", "p", "qty")))
+    assert(e.getMessage.contains("'qty'"))
+    assert(t.currentVersion == 2)
+    // int → long widens the table: partition b's int files read as long
+    t.merge(Seq((1, "a", 5000000000L)).toDF("id", "p", "qty"))             // v3
+    assert(t.read.schema("qty").dataType.simpleString == "bigint")
+    assert(t.read.select("id", "qty").as[(Int, Long)].collect().toSet ==
+      Set((1, 5000000000L), (2, 8L)))
+  }
+
   test("writers that keep the schema record v1's schema line byte for byte") {
     val t = VersionedTable(spark, tmpDir("rs_keep") + "/t", Seq("id"), Seq("p"))
     // primitive tuple fields are non-nullable: v1 records nullable:false
