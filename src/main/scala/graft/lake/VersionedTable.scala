@@ -3766,7 +3766,10 @@ final case class VersionedTable(
           if (cl.kind == MatchedUpdateAll && partitionCols.exists(_.equalsIgnoreCase(cn))) dflt
           else sCol(cn)
         case _ =>
-          cl.set.find(_._1.equalsIgnoreCase(cn)).map(_._2).getOrElse(dflt)
+          // cast before the clauses combine: a value the column type cannot
+          // take by coercion (boolean into timestamp) would fail the CASE WHEN
+          cl.set.find(_._1.equalsIgnoreCase(cn)).fold(dflt) { case (_, x) =>
+            assignCast(x, j.select(x).schema.head.dataType, outType(cn), cn) }
       }
     def valueOf(cn: String): Column =
       if (pk.exists(_.equalsIgnoreCase(cn))) {

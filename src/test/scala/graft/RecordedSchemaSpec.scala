@@ -62,11 +62,16 @@ class RecordedSchemaSpec extends SparkSpec {
     assert(t.update(col("id") === 2, Map("ts" -> lit(5))))                 // v3
     assert(t.read.select(col("id"), unix_micros(col("ts"))).as[(Int, Long)]
       .collect().toSet == Set((1, 1L), (2, 5000000L)))
+    // MERGE INTO casts a clause value before its clauses combine
+    t.mergeInto(Seq((2, "a")).toDF("id", "p"))
+      .whenMatched().update(Map("ts" -> lit(true))).execute()              // v4
+    assert(t.read.select(col("id"), unix_micros(col("ts"))).as[(Int, Long)]
+      .collect().toSet == Set((1, 1L), (2, 1L)))
     // date → int is NULL under the non-ANSI cast: refused, not nulled
     val e = intercept[Exception](
       t.update(col("id") === 1, Map("qty" -> current_date())))
     assert(e.getMessage.contains("cannot be stored in column 'qty'"))
-    assert(t.currentVersion == 3)
+    assert(t.currentVersion == 4)
   }
 
   test("merge stores a batch value under its recorded type unless the " +
