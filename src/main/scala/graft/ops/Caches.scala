@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 
 import scala.collection.mutable
@@ -33,19 +34,23 @@ object Caches {
   * for query-internal phases (label = query and phase) and the
   * VersionedTable commit path (label = phase and table path), so a slow
   * entry or commit can be broken into its eager phases without temporary
-  * instrumentation. Zero cost unset.
+  * instrumentation. Each line ends in `compiles=<n>`: the Janino classes
+  * Spark generated while the block ran (a JVM-wide count, so work on
+  * other threads and nested blocks count too). Zero cost unset.
   */
 object Phases {
   private val timing: Boolean =
     sys.env.get("SPARK_GRAFT_TIMING").contains("1")
 
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** `label` is rendered after `f` runs, so it may carry what `f` found. */
   def timed[A](label: => String)(f: => A): A =
     if (!timing) f
     else {
-      val t0 = System.nanoTime()
+      val (t0, c0) = (System.nanoTime(), compiles)
       try f
       finally System.err.println(
-        f"[timing] ${(System.nanoTime() - t0) / 1e9}%7.3f s  $label")
+        f"[timing] ${(System.nanoTime() - t0) / 1e9}%7.3f s  $label compiles=${compiles - c0}")
     }
 }

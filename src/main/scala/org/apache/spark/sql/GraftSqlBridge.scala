@@ -56,4 +56,11 @@ object GraftSqlBridge {
     */
   def sessionUuid(spark: SparkSession): String =
     spark.asInstanceOf[CSparkSession].sessionUUID
+
+  /** A copy of the session (`cloneSession` is private[sql]) that keeps its
+    * runtime conf, temp views, functions, extra strategies and rules —
+    * graft.lake.Interpreted runs a table's own commit plans in one.
+    */
+  def cloneOf(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[CSparkSession].cloneSession()
 }

@@ -21,7 +21,8 @@ each run they are read from the checkout's
 .bench_build/last/<workload>/jvm.log, and each label's per-run total is
 summarized per side (median over runs), so a gain can be named by the
 phase that moved. A label's table path is cut to its last two components
-(silver/orders) and its `dirs=<read>/<live>` token is summed separately;
+(silver/orders), and its `dirs=<read>/<live>` and `compiles=<n>` (Janino
+classes compiled in the phase) tokens are summed separately;
 a `v=<n>` token (the version a commit claimed) is dropped, so every
 commit of a table shares one key per `attempts=<k>` (retries show as k > 1).
 """
@@ -90,6 +91,7 @@ def summarize(pairs, spec):
 TIMING = re.compile(r"^\[timing\]\s+([0-9.]+) s\s+(.+)$")
 DIRS = re.compile(r"^dirs=(\d+)/(\d+)$")
 VERSION = re.compile(r"^v=\d+$")
+COMPILES = re.compile(r"^compiles=(\d+)$")
 
 
 def phase_key(label):
@@ -98,7 +100,7 @@ def phase_key(label):
     words, dirs = [], None
     for w in label.split():
         m = DIRS.match(w)
-        if VERSION.match(w):
+        if VERSION.match(w) or COMPILES.match(w):
             continue
         if m:
             dirs = (int(m.group(1)), int(m.group(2)))
@@ -107,21 +109,29 @@ def phase_key(label):
     return " ".join(words), dirs
 
 
+EMPTY = {"s": 0.0, "n": 0, "read": None, "live": None, "compiles": None}
+
+
 def read_phases(text):
-    """One run's log text -> {key: {"s", "n", "read", "live"}}: seconds and
-    lines per phase key, plus the summed dirs tokens (None when absent)."""
+    """One run's log text -> {key: {"s", "n", "read", "live", "compiles"}}:
+    seconds and lines per phase key, plus the summed dirs and compiles
+    tokens (None when absent)."""
     out = {}
     for line in text.splitlines():
         m = TIMING.match(line.strip())
         if not m:
             continue
         key, dirs = phase_key(m.group(2))
-        e = out.setdefault(key, {"s": 0.0, "n": 0, "read": None, "live": None})
+        e = out.setdefault(key, dict(EMPTY))
         e["s"] += float(m.group(1))
         e["n"] += 1
         if dirs:
             e["read"] = (e["read"] or 0) + dirs[0]
             e["live"] = (e["live"] or 0) + dirs[1]
+        for w in m.group(2).split():
+            c = COMPILES.match(w)
+            if c:
+                e["compiles"] = (e["compiles"] or 0) + int(c.group(1))
     return out
 
 
@@ -133,8 +143,7 @@ def summarize_phases(runs):
     for k in keys:
         row = {"phase": k}
         for i, side in enumerate(("parent", "change")):
-            es = [pair[i].get(k, {"s": 0.0, "n": 0, "read": None, "live": None})
-                  for pair in runs]
+            es = [pair[i].get(k, EMPTY) for pair in runs]
             row[side + "_s"] = statistics.median(e["s"] for e in es)
             row[side + "_n"] = statistics.median(e["n"] for e in es)
             reads = [e["read"] for e in es if e["read"] is not None]
@@ -142,6 +151,8 @@ def summarize_phases(runs):
                 (statistics.median(reads),
                  statistics.median(e["live"] for e in es if e["live"] is not None))
                 if reads else None)
+            cs = [e["compiles"] for e in es if e["compiles"] is not None]
+            row[side + "_compiles"] = statistics.median(cs) if cs else None
         rows.append(row)
     return rows
 
@@ -207,14 +218,17 @@ def main():
                   "set SPARK_GRAFT_TIMING=1")
         else:
             print("phases: per-run total s, median over runs, parent -> change "
-                  "(lines per run; dirs = summed read/live)")
+                  "(lines per run; dirs = summed read/live; compiles = "
+                  "Janino classes compiled)")
 
-        def dirs(d):
-            return f" dirs {d[0]:g}/{d[1]:g}" if d else ""
+        def extra(r, side):
+            d, c = r[side + "_dirs"], r[side + "_compiles"]
+            return ((f" dirs {d[0]:g}/{d[1]:g}" if d else "") +
+                    (f" compiles={c:g}" if c is not None else ""))
         for r in prows:
             print(f"  {r['phase']:<40} {r['parent_s']:.3f} (n={r['parent_n']:g}"
-                  f"{dirs(r['parent_dirs'])}) -> {r['change_s']:.3f} "
-                  f"(n={r['change_n']:g}{dirs(r['change_dirs'])})")
+                  f"{extra(r, 'parent')}) -> {r['change_s']:.3f} "
+                  f"(n={r['change_n']:g}{extra(r, 'change')})")
     if bad:
         print("failed runs: " + ", ".join(bad))
     out = {"workload": a.workload, "pairs": len(pairs),

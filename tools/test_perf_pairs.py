@@ -125,6 +125,19 @@ class Phases(unittest.TestCase):
         self.assertAlmostEqual(rows["stage-write silver/orders"]["change_s"], 1.0)
         self.assertIsNone(rows["stage-write silver/orders"]["change_dirs"])
 
+    def test_compiles_token_is_summed_apart_from_the_key(self):
+        log = ("[timing]   0.100 s  stage-write /a/b/silver/orders compiles=3\n"
+               "[timing]   0.200 s  stage-write /a/b/silver/orders compiles=4\n"
+               "[timing]   0.300 s  append-collide /a/b/rejected/orders dirs=1/2 compiles=0\n")
+        run = perf_pairs.read_phases(log)
+        self.assertEqual(run["stage-write silver/orders"]["compiles"], 7)
+        self.assertEqual(run["append-collide rejected/orders"]["compiles"], 0)
+        self.assertEqual(run["append-collide rejected/orders"]["read"], 1)
+        old = perf_pairs.read_phases(LOG)  # a side that prints no compiles token
+        rows = {r["phase"]: r for r in perf_pairs.summarize_phases([(old, run)])}
+        self.assertIsNone(rows["stage-write silver/orders"]["parent_compiles"])
+        self.assertEqual(rows["stage-write silver/orders"]["change_compiles"], 7)
+
     def test_empty_log_has_no_phases(self):
         self.assertEqual(perf_pairs.read_phases(""), {})
         self.assertEqual(perf_pairs.summarize_phases([({}, {})]), [])
